@@ -87,11 +87,12 @@ object Bench {
     // The full line above is ~9 KB (376-key per-query map) and artifact
     // captures that keep only a short stdout TAIL truncate it mid-map,
     // leaving no parseable JSON (PERF_r13/r14 lost both rounds' totals to
-    // this). Print a SECOND, compact summary line — same metric/value,
-    // no per-query map — so any tail capture of the last ~1 KB always
-    // contains one complete parseable line. The per-query map lives in
-    // the full line and in bench_full.json.
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"failed":$failed,"control":$control,"sf":"$sfDir","per_query_in":"bench_full.json"}""")
+    // this). Print a SECOND, compact summary line — same value under its
+    // own metric name, no per-query map — so any tail capture of the last
+    // ~1 KB always contains one complete parseable line, and a consumer
+    // that takes the first or the last metric line never sees two "total"s.
+    // The per-query map lives in the full line and in bench_full.json.
+    println(f"""{"metric":"total_compact","value":$total%.3f,"unit":"sec","n_queries":${results.size},"failed":$failed,"control":$control,"sf":"$sfDir","per_query_in":"bench_full.json"}""")
     // BENCH_r*.json artifacts keep only a stdout tail, which truncates the
     // per-query map around q99; persist the complete line so round-over-round
     // comparison covers every query (commit this file each round)

@@ -20,10 +20,13 @@ import org.apache.spark.sql.types.DoubleType
   *    keep ONE code path for any partitioning);
   *  - each IRLS iteration is **one** distributed aggregation job: the
   *    working response z, weights w, μ, η are column expressions with
-  *    literal coefficients (recomputed from β, never materialized), and the
+  *    literal coefficients (recomputed from β, never persisted), and the
   *    weighted normal equations AND the deviance sum come back in the same
   *    `agg` pass over a persisted input (the reference launches 3–4 jobs per
-  *    iteration, GLM.scala:452-462);
+  *    iteration, GLM.scala:452-462). [[Gram.normal]] projects z and w once
+  *    per row before its sums, and the final statistics and null-deviance
+  *    passes project μ once, so no pass plans a copy of the η/μ tree per
+  *    sum (see [[Gram]] for why and what it saves);
   *  - convergence is on RELATIVE deviance change |ΔD| / (|D| + 0.1) < tol
   *    (R glm's criterion, default here 1e-10). The reference converges on
   *    ABSOLUTE |ΔD| < 1e-6 (reference: GLM.scala:281,452), which never
@@ -328,7 +331,11 @@ object GLM {
     *                  unlike `weightCol`, which leaves n counting rows).
     *                  Outer loops that pre-collapse a discrete design to
     *                  (pattern, count) sufficient statistics pass it so
-    *                  every IRLS pass runs over patterns, not rows
+    *                  every IRLS pass runs over patterns, not rows. With
+    *                  it set the frame is read through `coalesce(1)` —
+    *                  every pass is ONE task — so it must be model-sized
+    *                  (pattern rows, on the order of
+    *                  [[SuffStats.CollapseMax]]), never a row-level frame
     */
   def fit(
       df: DataFrame,
@@ -458,8 +465,10 @@ object GLM {
       val etaF = xs.zipWithIndex
         .map { case (c, i) => c * graft.functions.stableLit(beta(i)) }
         .reduce(_ + _) + off
-      val muF = clamp(link.inverse(etaF, m))
-      val statsRow = work.agg(
+      // μ̂ is projected once per row, not inlined into every sum (the same
+      // reasoning as Gram.normal's projection)
+      val muF = col("mu")
+      val statsRow = work.select(col("*"), clamp(link.inverse(etaF, m)).as("mu")).agg(
         sum(wc(pw * (y - muF) * (y - muF) / fam.variance(muF, m))).as("pearson"),
         sum(wc(pw * fam.logLik(y, muF, m))).as("ll"),
         sum(wc(pw * y)).as("y_sum"),
@@ -499,8 +508,8 @@ object GLM {
       // Null deviance: the intercept-only MLE mean is m·(Σwy/Σwm) for both
       // families (binomial rate and, with m = 1, the Poisson ȳ) — closed
       // form, one small extra pass.
-      val muNull = clamp(m * pHat)
-      val nullDev = work.agg(sum(wc(pw * fam.deviance(y, muNull, m)))).head().getDouble(0)
+      val nullDev = work.select(col("*"), clamp(m * pHat).as("mu"))
+        .agg(sum(wc(pw * fam.deviance(y, col("mu"), m)))).head().getDouble(0)
 
       new GLMModel(names, yCol, intercept, fam.name, link, beta, se,
         dev, nullDev, pearson, ll, n, iterations, ixtwx)
