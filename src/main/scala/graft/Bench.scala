@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main: runs every SparkEntry query against SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line. Results are materialized through the `noop`
@@ -15,6 +17,11 @@ import org.apache.spark.sql.SparkSession
   * push it up, flagging single-shot regressions in the same run as
   * weather rather than code — adjudicate those with
   * `graft.tools.MicroBench` min-of-3 before believing them.
+  *
+  * Each query also records its janino compiles and compile seconds (the
+  * JVM-wide codegen counters, read around the timed region): the full
+  * line and `bench_full.json` carry them per query under `codegen`, the
+  * compact line carries the summed count.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -52,6 +59,8 @@ object Bench {
     runControl()
     val results = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.map {
       case ((name, fn), idx) =>
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -60,31 +69,37 @@ object Bench {
           false
         }
       val dt = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileS = (CodeGenerator.compileTime - compileNs0) / 1e9
       // between queries (outside the timed region): drop leftover cached
       // state and let the context cleaner reclaim broadcasts, so later
       // queries aren't taxed by earlier queries' garbage
       spark.catalog.clearCache()
       System.gc()
       if ((idx + 1) % 10 == 0) runControl()
-      (name, dt, ok)
+      (name, dt, ok, compiles, compileS)
     }
     runControl()
     // a failed query must not make the benchmark look faster: report it as
     // -1 in the per-query map, list it under "failed", exclude from total
-    val qs = results.map { case (k, v, ok) =>
+    val qs = results.map { case (k, v, ok, _, _) =>
       "\"" + k + "\":" + (if (ok) f"$v%.3f" else "-1")
     }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
+    val failed = results.collect { case (k, _, false, _, _) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    val total = results.collect { case (_, v, true) => v }.sum
+    val total = results.collect { case (_, v, true, _, _) => v }.sum
+    val codegen = results.map { case (k, _, _, n, cs) =>
+      f""""$k":{"compiles":$n,"compile_s":$cs%.3f}"""
+    }.mkString("{", ",", "}")
+    val compiles = results.map(_._4).sum
     val cr = controlRuns.toSeq
     val med = cr.sorted.apply(cr.size / 2)
     // max/median, not max/min: one lucky fast rep shouldn't read as drift
     val drift = if (cr.nonEmpty && med > 0) cr.max / med else -1.0
     val control = f"""{"runs":${cr.map(v => f"$v%.3f").mkString("[", ",", "]")},"min":${cr.min}%.3f,"median":$med%.3f,"max":${cr.max}%.3f,"drift_factor":$drift%.2f}"""
-    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"control":$control,"sf":"$sfDir","note":"single-shot timings; +/-20pct JVM variance per query - use graft.tools.MicroBench (min-of-3) for before/after comparisons; control = fixed lineitem agg interleaved every 10 queries, drift_factor near 1 = calm host, >>1 = steal storm (distrust single-shot regressions in this run)"}"""
+    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"codegen":$codegen,"failed":$failed,"control":$control,"sf":"$sfDir","note":"single-shot timings; +/-20pct JVM variance per query - use graft.tools.MicroBench (min-of-3) for before/after comparisons; control = fixed lineitem agg interleaved every 10 queries, drift_factor near 1 = calm host, >>1 = steal storm (distrust single-shot regressions in this run)"}"""
     println(json)
-    // The full line above is ~9 KB (376-key per-query map) and artifact
+    // The full line above is tens of KB (376-key per-query maps) and artifact
     // captures that keep only a short stdout TAIL truncate it mid-map,
     // leaving no parseable JSON (PERF_r13/r14 lost both rounds' totals to
     // this). Print a SECOND, compact summary line — same value under its
@@ -92,7 +107,7 @@ object Bench {
     // ~1 KB always contains one complete parseable line, and a consumer
     // that takes the first or the last metric line never sees two "total"s.
     // The per-query map lives in the full line and in bench_full.json.
-    println(f"""{"metric":"total_compact","value":$total%.3f,"unit":"sec","n_queries":${results.size},"failed":$failed,"control":$control,"sf":"$sfDir","per_query_in":"bench_full.json"}""")
+    println(f"""{"metric":"total_compact","value":$total%.3f,"unit":"sec","n_queries":${results.size},"codegen_compiles":$compiles,"failed":$failed,"control":$control,"sf":"$sfDir","per_query_in":"bench_full.json"}""")
     // BENCH_r*.json artifacts keep only a stdout tail, which truncates the
     // per-query map around q99; persist the complete line so round-over-round
     // comparison covers every query (commit this file each round)

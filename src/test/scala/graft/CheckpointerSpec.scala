@@ -59,4 +59,19 @@ class CheckpointerSpec extends SparkSpec {
     cp.close()
     assert(gen.agg(sum("v")).head().getLong(0) === (3 to 12).sum.toLong)
   }
+
+  test("codegen class names drop stage ids while open; close() restores the caller's value") {
+    val key = Checkpointer.IdInClassName
+    for (prev <- Seq(Some("true"), None)) {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      val cp = new Checkpointer(spark, None)
+      assert(spark.conf.getOption(key) === Some("false"))
+      cp(spark.range(10).toDF("v"))
+      cp.close()
+      assert(spark.conf.getAll.get(key) === prev, s"caller had $prev")
+    }
+  }
 }

@@ -162,6 +162,20 @@ class GraphSpec extends SparkSpec {
     assert(ck === plain)
   }
 
+  test("labelPropagation: rounds share compiled stages (no codegen per extra round)") {
+    // without id-free class names every round of the lazy chain gets new
+    // whole-stage-codegen stage numbers, so rounds 3-8 would each compile
+    val und = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"))
+    val edges = (und ++ und.map(_.swap)).toDF("u", "v")
+    Graph.labelPropagation(edges, rounds = 2) // warm-up: rounds 1 and 2
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    Graph.labelPropagation(edges, rounds = 8)
+    assert(compiles.getCount === before,
+      s"${compiles.getCount - before} codegen compiles in rounds 3-8")
+  }
+
   test("degreeAssortativity: a star is perfectly disassortative (-1)") {
     val star = (1 to 5).map(i => ("hub", s"leaf$i")).toDF("u", "v")
     val r = Graph.degreeAssortativity(star).head()
