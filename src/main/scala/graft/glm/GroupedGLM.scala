@@ -1,8 +1,7 @@
 package graft.glm
 
 import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Per-group GLM: one independent IRLS fit PER GROUP KEY — the
@@ -12,10 +11,10 @@ import org.apache.spark.sql.functions._
   *
   * Design (100 TB shape): coefficients live in a small (one row per group)
   * DataFrame, never on the driver. Each IRLS iteration broadcast-joins the
-  * current betas onto the data, runs ONE grouped aggregation whose buffer
-  * is the per-group weighted Gram (computed against that group's OWN
-  * beta), and solves the p×p system per group inside the aggregate's
-  * `finish` on whichever executor owns the group. Only a single scalar
+  * current betas onto the data, runs ONE grouped aggregation of plain
+  * `sum(...)` expressions whose result is the per-group weighted Gram
+  * (computed against that group's OWN beta), and solves the p×p system
+  * once per group on whichever executor owns it. Only a single scalar
   * (the count of still-unconverged groups) reaches the driver per
   * iteration. Convergence is PER GROUP: a converged group freezes and its
   * rows drop out of the join map-side, so slow groups don't force
@@ -23,11 +22,13 @@ import org.apache.spark.sql.functions._
   * per (partition, active group) — map-side partial aggregation, never
   * row data.
   *
-  * Families: binomial-logit (canonical IRLS: w = μ(1−μ), z = η+(y−μ)/w;
-  * reference: GLM.scala:190-204, 282-291), poisson-log (w = μ,
-  * z = η+(y−μ)/μ), and gaussian-identity (one-step least squares). Groups
-  * that are underdetermined or singular yield NaN coefficients, like
-  * [[GroupedLM]].
+  * Families and links: binomial with logit (default), probit or cloglog
+  * (w = pw/(V(μ)·η′(μ)²), z = η+(y−μ)·η′(μ), η′ = dη/dμ; reference:
+  * GLM.scala:190-204, 282-291), poisson-log (w = μ, z = η+(y−μ)/μ), gamma
+  * with log (default; w = 1, z = η+(y−μ)/μ) or inverse (canonical;
+  * w = μ², z = η−(y−μ)/μ²) link, and gaussian-identity (one-step least
+  * squares). Every pair runs through the same Gram pass. Groups that are
+  * underdetermined or singular yield NaN coefficients, like [[GroupedLM]].
   */
 object GroupedGLM {
 
@@ -38,179 +39,15 @@ object GroupedGLM {
   private val FamPoisson = 2
   private val FamGamma = 3
 
-  // link codes: binomial takes logit/probit/cloglog, gamma takes log
-  // (default, like the single GLM) or inverse (R's canonical); poisson and
-  // gaussian use their canonical link only
-  private val LnkLogit = 0
-  private val LnkProbit = 1
-  private val LnkCloglog = 2
-  private val LnkLog = 3
-  private val LnkInverse = 4
-
-  // same commons-math Φ/Φ⁻¹ the single-model probit uses (Links.pnorm/
-  // qnorm) — per-subset parity requires the identical implementation
-  private val stdNormal =
-    new org.apache.commons.math3.distribution.NormalDistribution(0.0, 1.0)
-
-  /** Buffer: [n, dev, ll | XᵀWz (pp) | upper-tri XᵀWX]. Input rows are
-    * `array(x_1..x_p, y, m, offset, weight, beta_0..beta_{pp-1})` — beta
-    * rides on the row from the broadcast join, so the aggregation is a
-    * single self-contained pass. m (binomial trials), offset (known η
-    * shift) and weight (prior case weight) default to 1/0/1 literals when
-    * the caller has none — a fixed row layout keeps ONE aggregator path.
-    */
-  /** `init = true` is the first IRLS pass: μ comes from the family's
-    * μ-from-y start (reference: GLM.scala:263 "init μ = ȳ"-style; here
-    * R's per-row inits), not from the (zero) incoming beta — log links
-    * diverge from a flat start on large-scale responses.
-    */
-  private final class GlmGramAgg(p: Int, intercept: Boolean, fam: Int,
-      lnk: Int, init: Boolean)
-      extends Aggregator[Seq[Double], Array[Double], Seq[Double]] {
-    private val pp = if (intercept) p + 1 else p
-    private val nUp = pp * (pp + 1) / 2
-
-    def zero: Array[Double] = new Array[Double](3 + pp + nUp)
-
-    // y·ln(y/μ) with the 0·ln0 = 0 convention (deviance terms)
-    @inline private def ylog(y: Double, mu: Double): Double =
-      if (y > 0) y * math.log(y / mu) else 0.0
-
-    def reduce(b: Array[Double], in: Seq[Double]): Array[Double] = {
-      val x = new Array[Double](pp)
-      if (intercept) x(0) = 1.0
-      var i = 0
-      while (i < p) { x(if (intercept) i + 1 else i) = in(i); i += 1 }
-      val y = in(p)
-      val m = in(p + 1)
-      val off = in(p + 2)
-      val pw = in(p + 3)
-      // η of the INCOMING beta (offset included); unused on the init pass
-      var eta = off
-      if (!init) {
-        i = 0
-        while (i < pp) { eta += x(i) * in(p + 4 + i); i += 1 }
-      }
-      // the normal equations regress the OFFSET-FREE working response
-      // z − off on X, exactly like the single-model GLM (GLM.scala:217)
-      var w = pw
-      var z = y
-      var dev = 0.0
-      var ll = 0.0
-      // the repo's ONE log-gamma (shared with the GLM column path)
-      def lgamma(v: Double): Double = graft.functions.LogGamma.lgamma(v)
-      fam match {
-        case FamBinomial =>
-          // y = successes in [0, m]; μ ∈ (0, m); the link (logit default,
-          // probit, cloglog) decides η↔μ and dη/dμ, mirroring LinkFn
-          val mu0 =
-            if (init) m * (y + 0.5) / (m + 1.0)
-            else lnk match {
-              case LnkProbit => m * stdNormal.cumulativeProbability(eta)
-              case LnkCloglog => m * (1.0 - math.exp(-math.exp(eta)))
-              case _ => m / (1.0 + math.exp(-eta))
-            }
-          // clamp to [m·eps, m(1−eps)] like Family.BinomialFamily.clampMu
-          val mu = math.max(m * Eps, math.min(m * (1.0 - Eps), mu0))
-          val fr = mu / m
-          if (init) {
-            eta = (lnk match {
-              case LnkProbit => stdNormal.inverseCumulativeProbability(fr)
-              case LnkCloglog => math.log(-math.log1p(-fr))
-              case _ => math.log(fr / (1.0 - fr))
-            }) + off
-          }
-          val lp = lnk match { // dη/dμ, as in Links.scala
-            case LnkProbit =>
-              val q = stdNormal.inverseCumulativeProbability(fr)
-              1.0 / (m * (math.exp(-0.5 * q * q) / math.sqrt(2.0 * math.Pi)))
-            case LnkCloglog => 1.0 / ((mu - m) * math.log1p(-fr))
-            case _ => m / (mu * (m - mu))
-          }
-          val vb = mu * (m - mu) / m // binomial variance V(μ)
-          w = pw / (vb * lp * lp)
-          z = eta + (y - mu) * lp - off
-          // deviance/loglik of the INCOMING beta (lag the update by one
-          // iteration, like the single GLM's lastGram convention)
-          dev = pw * 2.0 * (ylog(y, mu) + ylog(m - y, m - mu))
-          ll = pw * (lgamma(m + 1.0) - lgamma(y + 1.0) - lgamma(m - y + 1.0) +
-            y * math.log(fr) + (m - y) * math.log1p(-fr))
-        case FamPoisson =>
-          val mu = if (init) y + 0.1 else math.max(Eps, math.exp(eta))
-          if (init) eta = math.log(mu) + off
-          w = pw * mu
-          z = eta + (y - mu) / mu - off
-          dev = pw * 2.0 * (ylog(y, mu) - (y - mu))
-          ll = pw * (y * math.log(mu) - mu - lgamma(y + 1.0))
-        case FamGamma =>
-          // y must be > 0. log link: V = μ², l' = 1/μ → w = pw,
-          // z = η + (y−μ)/μ. inverse (canonical) link: η = 1/μ,
-          // l' = −1/μ² → w = pw·μ², z = η − (y−μ)/μ² (same expressions as
-          // the single GLM's LinkFn("inverse"))
-          val mu =
-            if (init) math.max(y, Eps)
-            else if (lnk == LnkInverse) 1.0 / math.max(Eps, eta)
-            else math.max(Eps, math.exp(eta))
-          if (lnk == LnkInverse) {
-            if (init) eta = 1.0 / mu + off
-            w = pw * mu * mu
-            z = eta - (y - mu) / (mu * mu) - off
-          } else {
-            if (init) eta = math.log(mu) + off
-            z = eta + (y - mu) / mu - off
-          }
-          dev = pw * 2.0 * (-math.log(y / mu) + (y - mu) / mu)
-          ll = pw * (-math.log(mu) - y / mu) // unit shape, like GammaFamily
-        case _ =>
-          // gaussian identity: one-step weighted least squares on y − off.
-          // The ll slot accumulates Σ ln(w): R's logLik.glm(gaussian)
-          // profiles σ̂² = Σw(y−μ)²/n, giving ll = ½(Σ ln w − n(ln(2πσ̂²)+1))
-          // — assembled in finish() from this slot, dev and n
-          z = y - off
-          dev = pw * (y - eta) * (y - eta)
-          ll = math.log(pw)
-      }
-      b(0) += 1.0
-      b(1) += dev
-      b(2) += ll
-      i = 0
-      var k = 3 + pp
-      while (i < pp) {
-        val wxi = w * x(i)
-        b(3 + i) += wxi * z
-        var j = i
-        while (j < pp) { b(k) += wxi * x(j); k += 1; j += 1 }
-        i += 1
-      }
-      b
-    }
-
-    def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }
-
-    /** [new beta (pp) | dev(old beta) | n | diag((XᵀWX)⁻¹) (pp) | ll(old
-      * beta) | packed upper-tri (XᵀWX)⁻¹ (pp(pp+1)/2)] — NaN beta/diag/
-      * kernel for groups whose normal equations are underdetermined or
-      * singular. The inverse diagonal feeds per-group standard errors
-      * (sqrt(dispersion · diag) at convergence, like the single GLM's
-      * lastGram-based SEs); ll feeds loglik/AIC; the packed kernel feeds
-      * per-row scoring standard errors ([[GroupedGLM.predictWithSe]]).
-      */
-    def finish(b: Array[Double]): Seq[Double] = finishBuf(fam, pp, b)
-
-    def bufferEncoder: Encoder[Array[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
-    def outputEncoder: Encoder[Seq[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
-  }
-
-  /** Per-group solve shared by the UDAF and the native-expression path:
-    * buffer [n, dev, ll | XᵀWz (pp) | upper-tri XᵀWX] → the finish layout
-    * documented on [[GlmGramAgg.finish]]. Runs once per GROUP (post-
-    * aggregation), never per row.
+  /** Per-group solve: buffer [n, dev, ll | XᵀWz (pp) | upper-tri XᵀWX] →
+    * [new beta (pp) | dev(old beta) | n | diag((XᵀWX)⁻¹) (pp) | ll(old
+    * beta) | packed upper-tri (XᵀWX)⁻¹ (pp(pp+1)/2)] — NaN beta/diag/
+    * kernel for groups whose normal equations are underdetermined or
+    * singular. The inverse diagonal feeds per-group standard errors
+    * (sqrt(dispersion · diag) at convergence, like the single GLM's
+    * lastGram-based SEs); ll feeds loglik/AIC; the packed kernel feeds
+    * per-row scoring standard errors ([[GroupedGLM.predictWithSe]]).
+    * Runs once per GROUP (post-aggregation), never per row.
     */
   private def finishBuf(fam: Int, pp: Int, b: Array[Double]): Seq[Double] = {
     val nUp = pp * (pp + 1) / 2
@@ -264,97 +101,153 @@ object GroupedGLM {
     out.toSeq
   }
 
-  /** Native (whole-stage-codegen) per-row Gram expressions for the
-    * grouped IRLS pass — the r15 replacement for the per-row
-    * [[GlmGramAgg]] UDAF on the hot data pass (guide §4: built-in
-    * expressions over UDAF). Produces the SAME buffer layout
-    * [n, dev, ll | XᵀWz (pp) | upper-tri XᵀWX] as the UDAF, term for
-    * term in the same evaluation order, as plain `sum(...)` aggregates
-    * with map-side partial aggregation; the per-GROUP solve stays in
-    * [[finishBuf]] behind a post-aggregation UDF (one call per group,
-    * never per row). None for the links whose μ↔η needs commons-math
-    * Φ/Φ⁻¹ parity (probit, cloglog) or the gamma inverse link — those
-    * keep the UDAF path.
+  /** One grouped IRLS pass over `joined` — the data rows (`xy` =
+    * `array(x_1..x_p, y, m, offset, weight)`, plus `__cnt` when the data
+    * side is collapsed to (pattern, count) sufficient statistics) with
+    * their group's incoming `beta` and previous deviance `__prev` — to one
+    * row per group: keys, `buf` (the [[finishBuf]] layout) and `__prev`.
+    *
+    * The per-row quantities are projected once, the way [[Gram.normal]]
+    * projects its inputs: x, y, m, offset and weight, then η of the
+    * incoming beta, then μ, then w, z, dev and ll. The buffer
+    * [n, dev, ll | XᵀWz (pp) | upper-tri XᵀWX] is then plain `sum(...)`
+    * aggregates over products of those columns, so μ's tree (η over pp
+    * terms, the link inverse, the clamp) appears once in the plan instead
+    * of once per sum. The per-group solve [[finishBuf]] runs behind a
+    * post-aggregation UDF, once per group.
+    *
+    * μ, the init η and dη/dμ of the binomial links are the [[LinkFn]]
+    * expressions the single-model [[GLM.fit]] uses (μ clamped to
+    * [m·eps, m(1−eps)]); the gamma inverse link floors η at eps.
+    *
+    * `init = true` is the first IRLS pass: μ comes from the family's
+    * μ-from-y start (reference: GLM.scala:263 "init μ = ȳ"-style; here
+    * R's per-row inits), not from the (zero) incoming beta — log links
+    * diverge from a flat start on large-scale responses. dev and ll are
+    * those of the INCOMING beta (the update lags by one iteration, like
+    * the single GLM's lastGram convention).
     */
-  private def nativeBufCols(p: Int, intercept: Boolean, fam: Int, lnk: Int,
-      init: Boolean, cnt: Option[Column] = None): Option[Seq[Column]] = {
-    val supported = (fam, lnk) match {
-      case (FamBinomial, LnkLogit) => true
-      case (FamPoisson, _) => true // poisson is always log link
-      case (FamGamma, LnkLog) => true
-      case (FamGaussian, _) => true // identity link only
-      case _ => false
-    }
-    if (!supported) return None
+  private def gramPass(joined: DataFrame, keyCols: Seq[String], p: Int,
+      intercept: Boolean, fam: Int, link: LinkFn, init: Boolean,
+      counted: Boolean): DataFrame = {
     val pp = if (intercept) p + 1 else p
+    // internal column names take a prefix no key column starts with
+    val taken = keyCols.map(_.toLowerCase(java.util.Locale.ROOT))
+    var prefix = "__t"
+    while (taken.exists(_.startsWith(prefix))) prefix = "_" + prefix
+    def v(name: String): Column = col(s"${prefix}_$name")
+    def add(df: DataFrame, cs: (String, Column)*): DataFrame =
+      df.select(col("*") +: cs.map { case (nm, c) => c.as(s"${prefix}_$nm") }: _*)
+
     val xy = col("xy")
-    // x-vector element i (intercept first), mirroring GlmGramAgg.reduce
+    // x-vector element i, intercept first
     def xE(i: Int): Column =
       if (intercept) { if (i == 0) lit(1.0) else element_at(xy, i) }
       else element_at(xy, i + 1)
-    val y = element_at(xy, p + 1)
-    val m = element_at(xy, p + 2)
-    val off = element_at(xy, p + 3)
-    val pw = element_at(xy, p + 4)
-    def bE(i: Int): Column = element_at(col("beta"), i + 1)
+    val inputs = add(joined, (0 until pp).map(i => s"x$i" -> xE(i)) ++ Seq(
+      "y" -> element_at(xy, p + 1), "m" -> element_at(xy, p + 2),
+      "off" -> element_at(xy, p + 3), "pw" -> element_at(xy, p + 4)): _*)
+    val x = (0 until pp).map(i => v(s"x$i"))
+    val (y, m, off, pw) = (v("y"), v("m"), v("off"), v("pw"))
     // η of the INCOMING beta (unused on the init pass)
-    val etaIn = (0 until pp).foldLeft(off)((acc, i) => acc + xE(i) * bE(i))
+    val withEta = if (init) inputs else add(inputs, "eta" ->
+      (0 until pp).foldLeft(off)((acc, i) => acc + x(i) * element_at(col("beta"), i + 1)))
+    val etaIn = v("eta")
+    val inverse = link == LinkFn.Inverse
+    val muE = fam match {
+      case FamBinomial =>
+        // y = successes in [0, m]; μ ∈ (0, m)
+        val mu0 = if (init) m * (y + lit(0.5)) / (m + lit(1.0)) else link.inverse(etaIn, m)
+        greatest(m * lit(Eps), least(m * lit(1.0 - Eps), mu0))
+      case FamPoisson => if (init) y + lit(0.1) else greatest(lit(Eps), exp(etaIn))
+      case FamGamma => // y must be > 0
+        if (init) greatest(y, lit(Eps))
+        else if (inverse) link.inverse(greatest(lit(Eps), etaIn), m)
+        else greatest(lit(Eps), exp(etaIn))
+      case _ => if (init) off else etaIn // gaussian identity: μ = η
+    }
+    val withMu = add(withEta, "mu" -> muE)
+    val mu = v("mu")
+    // the init pass derives η from its μ (gaussian does not use η)
+    val eta = if (init) link.link(mu, m) + off else etaIn
+
     def lgamma(c: Column): Column = call_function("lgamma", c)
+    // y·ln(y/μ) with the 0·ln0 = 0 convention (deviance terms)
     def ylog(a: Column, b: Column): Column =
       when(a > 0, a * log(a / b)).otherwise(lit(0.0))
-    // (w, z, dev, ll) per family — the exact column twins of the UDAF's
-    // per-row arithmetic (same operation order)
+    // the normal equations regress the OFFSET-FREE working response z − off
+    // on X, exactly like the single-model GLM (GLM.scala:217)
     val (w, z, dev, ll) = fam match {
       case FamBinomial =>
-        val mu0 =
-          if (init) m * (y + lit(0.5)) / (m + lit(1.0))
-          else m / (lit(1.0) + exp(-etaIn))
-        val mu = greatest(m * lit(Eps), least(m * lit(1.0 - Eps), mu0))
         val fr = mu / m
-        val eta =
-          if (init) log(fr / (lit(1.0) - fr)) + off else etaIn
-        val lp = m / (mu * (m - mu))
-        val vb = mu * (m - mu) / m
+        val lp = link.lprime(mu, m)
+        val vb = mu * (m - mu) / m // binomial variance V(μ)
         (pw / (vb * lp * lp),
           eta + (y - mu) * lp - off,
           pw * lit(2.0) * (ylog(y, mu) + ylog(m - y, m - mu)),
           pw * (lgamma(m + lit(1.0)) - lgamma(y + lit(1.0)) -
             lgamma(m - y + lit(1.0)) + y * log(fr) + (m - y) * log1p(-fr)))
       case FamPoisson =>
-        val mu = if (init) y + lit(0.1) else greatest(lit(Eps), exp(etaIn))
-        val eta = if (init) log(mu) + off else etaIn
         (pw * mu,
           eta + (y - mu) / mu - off,
           pw * lit(2.0) * (ylog(y, mu) - (y - mu)),
           pw * (y * log(mu) - mu - lgamma(y + lit(1.0))))
       case FamGamma =>
-        val mu = if (init) greatest(y, lit(Eps)) else greatest(lit(Eps), exp(etaIn))
-        val eta = if (init) log(mu) + off else etaIn
-        (pw,
-          eta + (y - mu) / mu - off,
+        // log link: V = μ², η′ = 1/μ → w = pw, z = η + (y−μ)/μ; inverse
+        // link: η′ = −1/μ² → w = pw·μ², z = η − (y−μ)/μ²
+        (if (inverse) pw * mu * mu else pw,
+          if (inverse) eta - (y - mu) / (mu * mu) - off else eta + (y - mu) / mu - off,
           pw * lit(2.0) * (-log(y / mu) + (y - mu) / mu),
-          pw * (-log(mu) - y / mu))
-      case _ => // gaussian identity: one-step weighted least squares
-        val eta = if (init) off else etaIn
-        (pw, y - off, pw * (y - eta) * (y - eta), log(pw))
+          pw * (-log(mu) - y / mu)) // unit shape, like GammaFamily
+      case _ =>
+        // gaussian identity: one-step weighted least squares on y − off.
+        // The ll slot accumulates Σ ln(w): R's logLik.glm(gaussian)
+        // profiles σ̂² = Σw(y−μ)²/n, giving ll = ½(Σ ln w − n(ln(2πσ̂²)+1))
+        // — assembled in finishBuf from this slot, dev and n
+        (pw, y - off, pw * (y - mu) * (y - mu), log(pw))
     }
-    def wx(i: Int): Column = w * xE(i)
-    // per-row terms, replication-count-weighted when the data side is
-    // collapsed to (pattern, count) sufficient statistics
-    def wc(c: Column): Column = cnt.map(c * _).getOrElse(c)
-    Some(Seq(
-      cnt.map(c => sum(c)).getOrElse(count(lit(1)).cast("double")),
-      sum(wc(dev)), sum(wc(ll))) ++
-      (0 until pp).map(i => sum(wc(wx(i) * z))) ++
-      (for (i <- 0 until pp; j <- i until pp) yield sum(wc(wx(i) * xE(j)))))
+    val rows = add(withMu, "w" -> w, "z" -> z, "dev" -> dev, "ll" -> ll)
+    // per-row terms, replication-count-weighted when collapsed
+    def wc(c: Column): Column = if (counted) c * col("__cnt") else c
+    val wx = x.map(v("w") * _)
+    val sums = Seq(
+      if (counted) sum(col("__cnt")) else count(lit(1)).cast("double"),
+      sum(wc(v("dev"))), sum(wc(v("ll")))) ++
+      (0 until pp).map(i => sum(wc(wx(i) * v("z")))) ++
+      (for (i <- 0 until pp; j <- i until pp) yield sum(wc(wx(i) * x(j))))
+    val solve = udf((b: Seq[Double]) => finishBuf(fam, pp, b.toArray))
+    val named = (sums :+ first(col("__prev"))).zipWithIndex
+      .map { case (c, i) => c.as(s"${prefix}_c$i") }
+    rows.groupBy(keyCols.map(col): _*)
+      .agg(named.head, named.tail: _*)
+      .select(keyCols.map(col) ++ Seq(
+        solve(array(sums.indices.map(i => v(s"c$i")): _*)).as("buf"),
+        v(s"c${sums.size}").as("__prev")): _*)
   }
+
+  /** The link a grouped model uses: `linkName` when given, else the
+    * family's default (binomial: logit; poisson, gamma: log; gaussian:
+    * identity). [[fit]] checks the (family, link) pair before it resolves
+    * through here; the scoring paths resolve through here directly.
+    */
+  private def linkOf(family: String, linkName: String): LinkFn =
+    LinkFn(if (linkName.nonEmpty) linkName else family match {
+      case "binomial" => "logit"
+      case "poisson" | "gamma" => "log"
+      case "gaussian" => "identity"
+      case other => throw new IllegalArgumentException(
+        s"GroupedGLM supports binomial|poisson|gamma|gaussian, got $other")
+    })
 
   /** Fit one GLM per group of `keyCols`.
     *
-    * @param family "binomial" (logit link; `yCol` is successes in [0, m] —
-    *               0/1 without `mCol`), "poisson" (log link; `yCol` is a
-    *               count), "gamma" (log link; `yCol` must be > 0), or
-    *               "gaussian" (identity link)
+    * @param family "binomial" (`yCol` is successes in [0, m] — 0/1
+    *               without `mCol`), "poisson" (`yCol` is a count), "gamma"
+    *               (`yCol` must be > 0), or "gaussian"
+    * @param linkName binomial: logit (default), probit or cloglog; gamma:
+    *               log (default) or inverse; poisson: log; gaussian:
+    *               identity. "canonical" picks the family's canonical link
+    *               (logit, inverse, log, identity).
     * @param mCol      binomial trials column (binomial only; defaults to 1)
     * @param offsetCol known-offset column added to η (defaults to 0) —
     *                  same semantics as the single-model GLM.fit
@@ -408,14 +301,13 @@ object GroupedGLM {
     }
     require(mCol.isEmpty || fam == FamBinomial,
       "mCol (binomial trials) only applies to the binomial family")
-    val lnk = (fam, linkName.toLowerCase) match {
-      case (FamBinomial, "" | "canonical" | "logit") => LnkLogit
-      case (FamBinomial, "probit") => LnkProbit
-      case (FamBinomial, "cloglog") => LnkCloglog
-      case (FamGamma, "" | "log") => LnkLog // default log, like the single GLM
-      case (FamGamma, "canonical" | "inverse") => LnkInverse
-      case (FamPoisson, "" | "canonical" | "log") => LnkLog
-      case (FamGaussian, "" | "canonical" | "identity") => LnkLogit // unused
+    val link = (fam, linkName.toLowerCase) match {
+      case (FamGamma, "canonical" | "inverse") => linkOf(family, "inverse") // R's canonical
+      case (_, "canonical") => linkOf(family, "")
+      case (FamBinomial, ln @ ("" | "logit" | "probit" | "cloglog")) => linkOf(family, ln)
+      // default log for gamma, like the single GLM
+      case (FamGamma | FamPoisson, ln @ ("" | "log")) => linkOf(family, ln)
+      case (FamGaussian, ln @ ("" | "identity")) => linkOf(family, ln)
       case (_, other) => throw new IllegalArgumentException(
         s"unsupported link '$other' for family $family (binomial: " +
           "logit|probit|cloglog; gamma: log|inverse; poisson: log; " +
@@ -424,11 +316,6 @@ object GroupedGLM {
     graft.plans.GraftExtensions.ensureRegistered(df.sparkSession)
     val p = xCols.size
     val pp = if (intercept) p + 1 else p
-    val agg = udaf(new GlmGramAgg(p, intercept, fam, lnk, init = false))
-    val aggInit = udaf(new GlmGramAgg(p, intercept, fam, lnk, init = true))
-    // per-GROUP solve for the native-expression path (post-aggregation;
-    // the data pass itself is pure codegen'd sums)
-    val finishUdf = udf((b: Seq[Double]) => finishBuf(fam, pp, b.toArray))
     // same durability contract as Dedup.connectedComponents: reliable
     // checkpoint() when a dir is configured (long fits on a real cluster
     // must survive executor loss), localCheckpoint as local-mode default.
@@ -446,12 +333,8 @@ object GroupedGLM {
     // Sufficient-stats collapse of the DATA side (see [[SuffStats]]):
     // on a discrete design every per-group IRLS pass — at any scale —
     // aggregates over (key, pattern) rows with the count as a
-    // replication weight. Only taken on the native-expression path (the
-    // UDAF cannot replicate rows).
-    val nativeOk = nativeBufCols(p, intercept, fam, lnk, init = false).isDefined
-    val collapsed =
-      if (nativeOk) SuffStats.collapse(assembled0, "__cnt") else None
-    val cntOpt = collapsed.map(_ => col("__cnt"))
+    // replication weight.
+    val collapsed = SuffStats.collapse(assembled0, "__cnt")
     val assembled = collapsed.map(_.view).getOrElse(assembled0.persist())
 
     // Per-group state frame (one row per group, riding the generation
@@ -464,8 +347,8 @@ object GroupedGLM {
     // for the millions-of-groups regime. Frozen rows pass through each
     // generation unchanged (the state is one row per group — copying it is
     // free next to the data pass it saves).
-    // The zero betas are placeholders — iteration 0 runs the init
-    // aggregator, which derives η from y per family and ignores them.
+    // The zero betas are placeholders — iteration 0 is the init pass,
+    // which derives η from y per family and ignores them.
     val nUp = pp * (pp + 1) / 2
     var state = cp(assembled.groupBy(keys: _*).agg(count(lit(1)).as("__n"))
       .select(keys ++ Seq(
@@ -488,25 +371,8 @@ object GroupedGLM {
       val joined = assembled.join(
         broadcast(active.select(keys ++ Seq(col("beta"),
           col("dev").as("__prev")): _*)), keyCols)
-      // hot data pass: native codegen'd sums when the family/link is
-      // expressible (the bench families), the UDAF otherwise
-      val stepRaw = nativeBufCols(p, intercept, fam, lnk, init = iter == 0,
-          cnt = cntOpt) match {
-        case Some(cols) =>
-          val named = (cols :+ (first(col("__prev")): Column)).zipWithIndex
-            .map { case (c, i) => c.as(s"__c$i") }
-          joined.groupBy(keys: _*)
-            .agg(named.head, named.tail: _*)
-            .select(keys ++ Seq(finishUdf(
-              array(cols.indices.map(i => col(s"__c$i")): _*)).as("buf"),
-              col(s"__c${cols.size}").as("__prev")): _*)
-        case None =>
-          joined.groupBy(keys: _*)
-            .agg((if (iter == 0) aggInit else agg)(
-              concat(col("xy"), col("beta"))).as("buf"),
-              first(col("__prev")).as("__prev"))
-      }
-      val step = stepRaw
+      val step = gramPass(joined, keyCols, p, intercept, fam, link,
+          init = iter == 0, counted = collapsed.isDefined)
         .select(keys ++ Seq(
           slice(col("buf"), 1, pp).as("beta"),
           element_at(col("buf"), pp + 1).as("dev"),
@@ -630,14 +496,7 @@ object GroupedGLM {
     val m = mCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
     // μ = link⁻¹(η): the same LinkFn expressions the single GLM scores with
     // (binomial μ is expected successes — the probability when m = 1)
-    val resolved = if (linkName.nonEmpty) linkName else family match {
-      case "binomial" => "logit"
-      case "poisson" | "gamma" => "log"
-      case "gaussian" => "identity"
-      case other => throw new IllegalArgumentException(
-        s"GroupedGLM supports binomial|poisson|gamma|gaussian, got $other")
-    }
-    val mu = LinkFn(resolved).inverse(eta, m)
+    val mu = linkOf(family, linkName).inverse(eta, m)
     // absent group -> null coefficients -> null eta; surface as NaN
     joined.withColumn(outputCol, coalesce(mu, lit(Double.NaN)))
       .drop(coefCols: _*)
@@ -681,14 +540,7 @@ object GroupedGLM {
     val eta0 = coefCols.map(col).zip(xs).map { case (b, x) => b * x }.reduce(_ + _)
     val eta = offsetCol.map(c => eta0 + col(c).cast("double")).getOrElse(eta0)
     val m = mCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
-    val resolved = if (linkName.nonEmpty) linkName else family match {
-      case "binomial" => "logit"
-      case "poisson" | "gamma" => "log"
-      case "gaussian" => "identity"
-      case other => throw new IllegalArgumentException(
-        s"GroupedGLM supports binomial|poisson|gamma|gaussian, got $other")
-    }
-    val link = LinkFn(resolved)
+    val link = linkOf(family, linkName)
     val mu = link.inverse(eta, m)
     // x₀ᵀK x₀ from the packed upper-tri kernel (same indexing as
     // GroupedLM.predictWithSe) — element_at chains stay in codegen
@@ -722,13 +574,7 @@ object GroupedGLM {
     val scored = predict(betas, df, keyCols, xCols, family, linkName,
       intercept, mCol, offsetCol, outputCol = "__mu")
     val fam = Family(family)
-    val resolved = if (linkName.nonEmpty) linkName else family match {
-      case "binomial" => "logit"
-      case "poisson" | "gamma" => "log"
-      case "gaussian" => "identity"
-      case other => throw new IllegalArgumentException(
-        s"GroupedGLM supports binomial|poisson|gamma|gaussian, got $other")
-    }
+    val link = linkOf(family, linkName)
     val m = mCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
     val mu = col("__mu")
     val y = col(yCol).cast("double")
@@ -737,7 +583,7 @@ object GroupedGLM {
       case "response" => raw
       case "pearson"  => raw / sqrt(fam.variance(mu, m))
       case "deviance" => signum(raw) * sqrt(greatest(fam.deviance(y, mu, m), lit(0.0)))
-      case "working"  => raw * LinkFn(resolved).lprime(mu, m)
+      case "working"  => raw * link.lprime(mu, m)
     }
     scored.withColumn(outputCol, coalesce(resid, lit(Double.NaN))).drop("__mu")
   }

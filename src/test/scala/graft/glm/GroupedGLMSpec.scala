@@ -1,6 +1,9 @@
 package graft.glm
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.expressions.Exp
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 
 class GroupedGLMSpec extends SparkSpec {
@@ -208,6 +211,89 @@ class GroupedGLMSpec extends SparkSpec {
       GroupedGLM.fit(li, Seq("l_returnflag"), Seq("l_quantity"), "l_extendedprice",
         family = "gaussian", linkName = "probit")
     }
+  }
+
+  test("probit, cloglog and gamma-inverse with weights and offsets match GLM.fit per subset") {
+    // binomial: one row per (flag, quantity) with m trials and y successes
+    val gb = li.groupBy("l_returnflag", "l_quantity")
+      .agg(count(lit(1)).cast("double").as("m"), sum("y").as("succ"))
+      .withColumn("wt", (col("l_quantity") % 3) + 0.5)
+      .withColumn("off", (col("l_quantity") % 5) * 0.05)
+    // gamma-inverse: η = 1/μ is ~3e-5 here, so the offset stays far smaller
+    val ga = li.withColumn("wt", col("l_tax") + 0.01)
+      .withColumn("off", col("l_linenumber") * 1e-7)
+    val cases = Seq(
+      ("binomial", "probit", gb, "succ", Some("m")),
+      ("binomial", "cloglog", gb, "succ", Some("m")),
+      ("gamma", "inverse", ga, "l_extendedprice", None))
+    def close(a: Double, b: Double): Boolean = math.abs(a - b) < 1e-6 * math.abs(b)
+    cases.foreach { case (famName, link, df, yc, mCol) =>
+      val rows = GroupedGLM.fit(df, Seq("l_returnflag"), Seq("l_quantity"), yc,
+          family = famName, linkName = link, mCol = mCol, offsetCol = Some("off"),
+          weightCol = Some("wt"))
+        .collect().map(r => r.getString(0) -> r).toMap
+      assert(rows.size == 3, s"$link groups")
+      rows.foreach { case (flag, r) =>
+        val m = GLM.fit(df.filter(col("l_returnflag") === flag), Seq("l_quantity"), yc,
+          family = famName, linkName = link, mCol = mCol, offsetCol = Some("off"),
+          weightCol = Some("wt"))
+        // binomial dispersion is 1; gamma's is the deviance estimate dev/(n−p)
+        val disp = if (famName == "gamma") m.deviance / (m.n - m.p) else 1.0
+        Seq("intercept", "l_quantity").zipWithIndex.foreach { case (nm, i) =>
+          val b = r.getAs[Double](s"b_$nm")
+          val se = r.getAs[Double](s"se_$nm")
+          val seRef = m.stdErr(i) * math.sqrt(disp)
+          assert(close(b, m.coefs(i)), s"$link $flag b_$nm: $b vs ${m.coefs(i)}")
+          assert(close(se, seRef), s"$link $flag se_$nm: $se vs $seRef")
+        }
+        val dev = r.getAs[Double]("deviance")
+        val ll = r.getAs[Double]("loglik")
+        assert(close(dev, m.deviance), s"$link $flag deviance: $dev vs ${m.deviance}")
+        assert(close(ll, m.loglik), s"$link $flag loglik: $ll vs ${m.loglik}")
+      }
+    }
+  }
+
+  test("one IRLS pass projects μ once: the exp of η appears once in its plan") {
+    // records each plan when it reaches the optimizer's user-rule batch,
+    // after the operator rules (CollapseProject among them) have run; the
+    // pass frames are materialized through RDD checkpoints, which no
+    // query listener sees
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+    object Record extends Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = { seen.add(plan); plan }
+    }
+    val before = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = before :+ Record
+    // logit: pass 0 starts μ from y (no exp), pass 1 has μ = m/(exp(−η)+1)
+    try GroupedGLM.fit(li, Seq("l_returnflag"), Seq("l_quantity", "l_tax"), "y",
+      maxIter = 2).collect()
+    finally spark.experimental.extraOptimizations = before
+    def expCount(node: LogicalPlan): Int =
+      node.expressions.map(_.collect { case e: Exp => e }.size).sum
+    import scala.jdk.CollectionConverters._
+    val passes = seen.asScala.toSeq.filter(_.find(expCount(_) > 0).isDefined)
+    assert(passes.nonEmpty, "no plan of the fit computes exp")
+    passes.foreach { plan =>
+      val withExp = plan.collect { case n if expCount(n) > 0 => n }
+      assert(withExp.size == 1 && expCount(withExp.head) == 1,
+        s"exp of η should appear exactly once:\n$plan")
+      assert(withExp.head.isInstanceOf[Project], s"not a Project:\n$plan")
+      assert(plan.collectFirst { case a: Aggregate => a }
+        .exists(_.find(_ eq withExp.head).isDefined),
+        s"the projection is not below the aggregate:\n$plan")
+    }
+  }
+
+  test("a key column named like the pass's internal columns changes nothing") {
+    val df = li.select(col("l_returnflag"), col("l_quantity"), col("y"))
+    def fitBy(key: String) =
+      GroupedGLM.fit(df.withColumnRenamed("l_returnflag", key), Seq(key),
+          Seq("l_quantity"), "y")
+        .collect().map(r => r.getString(0) -> r.getAs[Double]("b_l_quantity")).toMap
+    val (a, b) = (fitBy("__t_x0"), fitBy("flag"))
+    assert(a.keySet == b.keySet && a.size == 3)
+    a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-9 * math.abs(b(k)), k) }
   }
 
   test("per-group standard errors match the single-model GLM and WLS") {
