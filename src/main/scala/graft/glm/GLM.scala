@@ -1,7 +1,7 @@
 package graft.glm
 
 import breeze.linalg.{DenseVector => BDV}
-import org.apache.commons.math3.distribution.NormalDistribution
+import org.apache.commons.math3.distribution.{NormalDistribution, TDistribution}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -78,6 +78,21 @@ final class GLMModel(
     -2.0 * loglik + 2.0 * (p +
       (if (family == "gaussian" || family == "inverse-gaussian") 1 else 0))
 
+  /** Whether the family's dispersion is estimated (Pearson/dfResidual)
+    * rather than fixed at 1 (binomial, poisson, negbin(θ)).
+    */
+  private def dispersionEstimated: Boolean = family match {
+    case "gaussian" | "gamma" | "inverse-gaussian" |
+         "quasipoisson" | "quasibinomial" => true
+    case f => f.startsWith("tweedie")
+  }
+
+  /** The factor that turns the unscaled `stdErr` kernel into a standard
+    * error: √dispersion where it is estimated, else 1 (R's summary.glm).
+    */
+  private def seScale: Double =
+    if (dispersionEstimated) math.sqrt(dispersion) else 1.0
+
   def zValues: BDV[Double] = BDV.tabulate(p)(i => coefs(i) / stdErr(i))
 
   def pValues: BDV[Double] = {
@@ -134,16 +149,10 @@ final class GLMModel(
       (if (intercept) Array(lit(1.0)) else Array.empty[Column]) ++
         featureNames.map(nm => col(nm).cast(DoubleType))
     val quad = LinAlg.quadFormExpr(xtwxInv, xs)
-    val dispFactor = family match {
-      case "gaussian" | "gamma" | "inverse-gaussian" |
-           "quasipoisson" | "quasibinomial" => math.sqrt(dispersion)
-      case f if f.startsWith("tweedie") => math.sqrt(dispersion)
-      case _ => 1.0 // binomial, poisson, negbin(θ): dispersion fixed at 1
-    }
     val m = mCol.map(c => col(c).cast(DoubleType)).getOrElse(lit(1.0))
     val off = offsetCol.map(c => col(c).cast(DoubleType)).getOrElse(lit(0.0))
     val mu = link.inverse(linearPredictor + off, m)
-    val seLink = lit(dispFactor) * sqrt(quad)
+    val seLink = lit(seScale) * sqrt(quad)
     val se =
       if (scale == "link") seLink
       else seLink / abs(link.lprime(mu, m))
@@ -205,16 +214,29 @@ final class GLMModel(
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
-  /** R-style summary (reference: GLM.scala:998-1025). */
+  /** R-style summary (reference: GLM.scala:998-1025). Where the
+    * dispersion is estimated the standard errors are √dispersion ×
+    * `stdErr` and the tests are t on dfResidual degrees of freedom, as in
+    * R's `summary.glm`; elsewhere they are `stdErr` and z.
+    */
   def summary: String = {
     import NumFormat._
     val sb = new StringBuilder
     sb ++= s"Call:\nglm(formula = $formulaString, family = $family(link = ${link.name}))\n\n"
     sb ++= "Coefficients:\n"
-    sb ++= f"${""}%-20s${"Estimate"}%13s${"Std. Error"}%13s${"z value"}%13s${"Pr(>|z|)"}%13s\n"
-    val zv = zValues; val pv = pValues
+    val (stat, pr) = if (dispersionEstimated) ("t", "|t|") else ("z", "|z|")
+    sb ++= f"${""}%-20s${"Estimate"}%13s${"Std. Error"}%13s${s"$stat value"}%13s${s"Pr(>$pr)"}%13s\n"
+    val se = stdErr * seScale
+    val sv = BDV.tabulate(p)(i => coefs(i) / se(i))
+    val pv =
+      if (!dispersionEstimated) pValues
+      else if (dfResidual <= 0) BDV.fill(p)(Double.NaN)
+      else {
+        val t = new TDistribution(dfResidual.toDouble)
+        sv.map(v => 2.0 * (1.0 - t.cumulativeProbability(math.abs(v))))
+      }
     xnames.indices.foreach { i =>
-      sb ++= f"${xnames(i)}%-20s${cell(coefs(i))}${cell(stdErr(i))}${cell(zv(i))}${cell(pv(i))} ${stars(pv(i))}\n"
+      sb ++= f"${xnames(i)}%-20s${cell(coefs(i))}${cell(se(i))}${cell(sv(i))}${cell(pv(i))} ${stars(pv(i))}\n"
     }
     sb ++= "---\n"
     sb ++= s"(Dispersion parameter for $family family taken to be ${sigDigits(dispersion, 6)})\n\n"

@@ -314,8 +314,9 @@ object Graph {
     * engine-reproducible (asynchronous LPA is not). Nodes with no
     * out-edges keep their label.
     *
-    * One round = one equi-join + one (node, label) aggregation + one
-    * keyed argmax window — all shuffles carry (node, label) pairs.
+    * One round = one equi-join, then ONE shuffle of its (node, label)
+    * rows by node, after which the vote count and the arg-max run in the
+    * same stage.
     * Fixed `rounds`, no convergence probe: the analytical use runs a
     * handful of rounds, and a fixed count keeps the oracle unrollable.
     * Rounds share compiled stages: the [[graft.Checkpointer]] keeps
@@ -356,14 +357,19 @@ object Graph {
         .select(col("u"), col("u").as("label")))
     var labels = nodes.select(col("u"), col("u").as("label"))
     for (i <- 1 to rounds) {
+      // the join output is shuffled once by u (no partition count, so AQE
+      // sizes it under the Checkpointer's coalesce floor), and both
+      // aggregations below group by keys that start with u, so neither
+      // adds an exchange. Partial aggregation before a shuffle saved less
+      // than a second exchange cost: a traced 100k-edge, 10-round op fell
+      // from 31 to 22 jobs.
       val votes = e
         .join(labels.select(col("u").as("v"), col("label")), "v")
+        .repartition(col("u"))
         .groupBy("u", "label").agg(count(lit(1)).as("n"))
       // arg-max by (n desc, label asc) as a MIN over (−n, label) structs:
-      // same winner as the old rank-1 window (struct comparison is
-      // lexicographic), but partial-aggregable — the second pass shuffles
-      // one pre-reduced struct per (partition, u) instead of sorting
-      // every vote row under a per-u window (r14, guide §2.3/§2.4)
+      // same winner as a rank-1 window (struct comparison is
+      // lexicographic), without sorting every vote row per u
       val adopted = votes
         .groupBy("u").agg(min(struct((-col("n")).as("nn"),
           col("label"))).as("__best"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 package object ops {
 
@@ -30,20 +30,28 @@ package object ops {
     * kernel-throughput/shuffle-cost ratio differs.
     * Unknown sizes (non-scan frames report `defaultSizeInBytes`) keep
     * the full-parallelism target, same as r14.
+    * The same split is the coalesce floor of every loop shuffle while a
+    * [[graft.Checkpointer]] is open (see [[splitBytes]]).
     */
   private[graft] def fanOut(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftSqlShim
     val sc = df.sparkSession.sparkContext
     val parallelism = sc.defaultParallelism
-    val splitBytes = df.sparkSession.conf
-      .getOption("spark.graft.fanout.splitBytes")
-      .map(_.toLong).getOrElse(128L << 10)
+    val split = splitBytes(df.sparkSession)
     val bytes = GraftSqlShim.estimatedSizeInBytes(df)
     val byBytes =
-      if (bytes > BigInt(splitBytes) * parallelism) parallelism
-      else math.max(2, ((bytes + splitBytes - 1) / splitBytes).toInt)
+      if (bytes > BigInt(split) * parallelism) parallelism
+      else math.max(2, ((bytes + split - 1) / split).toInt)
     val target = math.min(parallelism, byBytes)
     if (GraftSqlShim.numOutputPartitions(df) >= math.max(2, target / 2)) df
     else df.repartition(target)
   }
+
+  /** The engine's one bytes-per-task figure: `spark.graft.fanout.splitBytes`,
+    * default 128 KB. [[fanOut]] sizes its fan from it, and an open
+    * [[graft.Checkpointer]] makes it AQE's coalesce floor.
+    */
+  private[graft] def splitBytes(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.fanout.splitBytes")
+      .map(_.toLong).getOrElse(128L << 10)
 }

@@ -70,6 +70,7 @@ object LoopPlanDump {
       val labels = cp(nodes.select(col("u"), col("u").as("label")))
       val votes = e
         .join(labels.select(col("u").as("v"), col("label")), "v")
+        .repartition(col("u"))
         .groupBy("u", "label").agg(count(lit(1)).as("n"))
       votes
         .groupBy("u").agg(min(struct((-col("n")).as("nn"),

@@ -74,4 +74,29 @@ class CheckpointerSpec extends SparkSpec {
       assert(spark.conf.getAll.get(key) === prev, s"caller had $prev")
     }
   }
+
+  test("loop shuffles coalesce no finer than the split while open; close() restores the caller's floor") {
+    val key = Checkpointer.CoalesceFloor
+    val split = "spark.graft.fanout.splitBytes"
+    try {
+      for (prev <- Seq(Some("2m"), None); setSplit <- Seq(None, Some("65536"))) {
+        prev match {
+          case Some(v) => spark.conf.set(key, v)
+          case None => spark.conf.unset(key)
+        }
+        setSplit match {
+          case Some(v) => spark.conf.set(split, v)
+          case None => spark.conf.unset(split)
+        }
+        val cp = new Checkpointer(spark, None)
+        assert(spark.conf.getOption(key) === Some(setSplit.getOrElse("131072")))
+        cp(spark.range(10).toDF("v"))
+        cp.close()
+        assert(spark.conf.getAll.get(key) === prev, s"caller had $prev")
+      }
+    } finally {
+      spark.conf.unset(key)
+      spark.conf.unset(split)
+    }
+  }
 }

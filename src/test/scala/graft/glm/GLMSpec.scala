@@ -344,6 +344,37 @@ class GLMSpec extends SparkSpec {
     assert(s.contains("Null deviance") && s.contains("AIC") && s.contains("Fisher"))
   }
 
+  test("summary: estimated dispersion scales the standard errors and tests t") {
+    val df = (1 to 60).map { i =>
+      val x = i / 10.0
+      (x, 1.5 + 0.2 * x + math.sin(i * 1.7))
+    }.toDF("x", "y")
+    val g = GLM.fit(df, Seq("x"), "y", family = "gaussian")
+    val l = LM.fit(df, Seq("x"), "y")
+    // the coefficient rows: name, estimate, std. error, statistic, p, stars
+    def rows(s: String): Seq[Array[String]] =
+      s.linesIterator.dropWhile(_ != "Coefficients:").drop(2)
+        .takeWhile(_ != "---").map(_.trim.split("\\s+")).toSeq
+    val gs = g.summary
+    assert(gs.contains("t value") && gs.contains("Pr(>|t|)") && !gs.contains("z value"), gs)
+    val gr = rows(gs)
+    assert(gr.size === 2, gs)
+    gr.zipWithIndex.foreach { case (r, i) =>
+      assert(math.abs(r(2).toDouble - l.stdErr(i)) < 1e-5 * l.stdErr(i),
+        s"se $i: ${r(2)} vs ${l.stdErr(i)}")
+      assert(math.abs(r(4).toDouble - l.pValues(i)) < 1e-5 * l.pValues(i) + 1e-12,
+        s"p $i: ${r(4)} vs ${l.pValues(i)}")
+    }
+    // a fixed-dispersion family prints the unscaled kernel and z tests
+    val b = GLM.fit(bern, Seq("x1", "x2"), "y")
+    val bs = b.summary
+    assert(bs.contains("z value") && bs.contains("Pr(>|z|)") && !bs.contains("t value"), bs)
+    rows(bs).zipWithIndex.foreach { case (r, i) =>
+      assert(r(2) === NumFormat.cell(b.stdErr(i)).trim, s"se $i")
+      assert(r(3) === NumFormat.cell(b.zValues(i)).trim, s"z $i")
+    }
+  }
+
   test("fitFormula on real parquet: returnflag ~ quantity + discount") {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .withColumn("is_r", when($"l_returnflag" === "R", 1.0).otherwise(0.0))

@@ -176,6 +176,33 @@ class GraphSpec extends SparkSpec {
       s"${compiles.getCount - before} codegen compiles in rounds 3-8")
   }
 
+  test("labelPropagation: one shuffle per round (an extra round is one more job)") {
+    // under AQE every shuffle stage runs as a job of its own, and the
+    // broadcast of the pinned edges is reused across rounds, so the job
+    // count grows by the number of exchanges per round
+    val und = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"))
+    val edges = (und ++ und.map(_.swap)).toDF("u", "v")
+    def jobs(rounds: Int): Int = {
+      val sc = spark.sparkContext
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.TestBus.drain(sc)
+      sc.addSparkListener(l)
+      try {
+        Graph.labelPropagation(edges, rounds)
+        org.apache.spark.TestBus.drain(sc)
+      } finally sc.removeSparkListener(l)
+      n.get
+    }
+    val two = jobs(2)
+    val three = jobs(3)
+    assert(three - two === 1, s"rounds = 2 ran $two jobs, rounds = 3 ran $three")
+  }
+
   test("degreeAssortativity: a star is perfectly disassortative (-1)") {
     val star = (1 to 5).map(i => ("hub", s"leaf$i")).toDF("u", "v")
     val r = Graph.degreeAssortativity(star).head()
