@@ -51,21 +51,30 @@ import org.apache.spark.sql.catalyst.InternalRow
   * into one or two tasks while the other cores sat idle (31 jobs on 47
   * tasks, executor utilization 0.16 in one traced op, local[4]). With
   * the floor each loop shuffle gets max(bytes / parallelism, 128 KB) per
-  * partition. Together with that op's one-shuffle round it ran 22 jobs
-  * on 96 tasks at utilization 0.39, and its time per round fell from
-  * 1.07 to 0.52 s.
-  * Caveat: two Checkpointers open AT THE SAME TIME on one session (from
-  * different threads) can restore the settings early, in whichever order
-  * they close. Nested use in one thread restores correctly. Either way
-  * only class names and partition counts are affected, so speed and the
-  * order of floating-point sums, not which rows come out.
+  * partition. Together with that op's one-shuffle round a traced op ran
+  * 22 jobs on 96 tasks at utilization 0.39, and its time per round fell
+  * from 0.85 to 0.62 s. The floor pays off there because the single
+  * shuffle carries every vote: against the same round without the floor
+  * the op's median fell from 8.5 to 7.5 s (5 of 6 runs), while with the
+  * old two-exchange round it did not move (5 of 9). Partition counts
+  * decide the order of floating-point sums, so the floor must never
+  * outlive the loop that set it.
+  *
+  * Scope: a Checkpointer exists only inside [[Checkpointer.using]], which
+  * closes it in a `finally`, so the caller's checkpoint dir and settings
+  * come back when the body throws too. Nested scopes close innermost
+  * first, which the restore needs (each one restores what it saw when it
+  * opened). Caveat: two scopes open AT THE SAME TIME on one session from
+  * different threads can still restore the settings early, in whichever
+  * order they close; that changes partition counts and class names, so
+  * speed and the order of floating-point sums, not which rows come out.
   *
   * The FINAL generation backs the returned DataFrame, so it is NOT
   * cleaned by `close()` — it lives until the RDD is garbage-collected
   * (enable `spark.cleaner.referenceTracking.cleanCheckpoints` to reap its
   * files then) or the application exits.
   */
-private[graft] final class Checkpointer(spark: SparkSession,
+private[graft] final class Checkpointer private (spark: SparkSession,
     checkpointDir: Option[String]) {
   private val sc = spark.sparkContext
   private val prevDir = sc.getCheckpointDir
@@ -135,7 +144,7 @@ private[graft] final class Checkpointer(spark: SparkSession,
     * so the restored dir is a CHILD of the previous one — subsequent
     * checkpoints still land under the caller's chosen root.
     */
-  def close(): Unit = {
+  private def close(): Unit = {
     pinned.foreach(clean)
     pinned = Nil
     if (checkpointDir.isDefined) sc.setCheckpointDir(prevDir.orNull)
@@ -191,4 +200,14 @@ private[graft] object Checkpointer {
   /** The session settings an open Checkpointer scopes (see the class doc). */
   val IdInClassName = "spark.sql.codegen.useIdInClassName"
   val CoalesceFloor = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+  /** Run `body` with a fresh Checkpointer and close it afterwards, also
+    * when `body` throws. `body`'s result may read the final generation,
+    * which outlives the close (see the class doc).
+    */
+  def using[A](spark: SparkSession, checkpointDir: Option[String])(
+      body: Checkpointer => A): A = {
+    val cp = new Checkpointer(spark, checkpointDir)
+    try body(cp) finally cp.close()
+  }
 }

@@ -93,11 +93,21 @@ final class GLMModel(
   private def seScale: Double =
     if (dispersionEstimated) math.sqrt(dispersion) else 1.0
 
-  def zValues: BDV[Double] = BDV.tabulate(p)(i => coefs(i) / stdErr(i))
+  /** Wald statistics coef / (`seScale` × `stdErr`): t statistics where
+    * the dispersion is estimated, z where it is fixed at 1.
+    */
+  def zValues: BDV[Double] = BDV.tabulate(p)(i => coefs(i) / (stdErr(i) * seScale))
 
+  /** Two-sided p-values of [[zValues]]: from t(dfResidual) where the
+    * dispersion is estimated (NaN when dfResidual ≤ 0), else from N(0, 1),
+    * as in R's summary.glm.
+    */
   def pValues: BDV[Double] = {
-    val norm = new NormalDistribution(0.0, 1.0)
-    BDV.tabulate(p)(i => 2.0 * (1.0 - norm.cumulativeProbability(math.abs(zValues(i)))))
+    val cdf: Double => Double =
+      if (!dispersionEstimated) new NormalDistribution(0.0, 1.0).cumulativeProbability(_)
+      else if (dfResidual <= 0) _ => Double.NaN
+      else new TDistribution(dfResidual.toDouble).cumulativeProbability(_)
+    zValues.map(v => 2.0 * (1.0 - cdf(math.abs(v))))
   }
 
   def featureNames: Array[String] = if (intercept) xnames.drop(1) else xnames
@@ -216,8 +226,8 @@ final class GLMModel(
 
   /** R-style summary (reference: GLM.scala:998-1025). Where the
     * dispersion is estimated the standard errors are √dispersion ×
-    * `stdErr` and the tests are t on dfResidual degrees of freedom, as in
-    * R's `summary.glm`; elsewhere they are `stdErr` and z.
+    * `stdErr` and the tests are t ([[zValues]], [[pValues]]), as in R's
+    * `summary.glm`; elsewhere they are `stdErr` and z.
     */
   def summary: String = {
     import NumFormat._
@@ -227,16 +237,9 @@ final class GLMModel(
     val (stat, pr) = if (dispersionEstimated) ("t", "|t|") else ("z", "|z|")
     sb ++= f"${""}%-20s${"Estimate"}%13s${"Std. Error"}%13s${s"$stat value"}%13s${s"Pr(>$pr)"}%13s\n"
     val se = stdErr * seScale
-    val sv = BDV.tabulate(p)(i => coefs(i) / se(i))
-    val pv =
-      if (!dispersionEstimated) pValues
-      else if (dfResidual <= 0) BDV.fill(p)(Double.NaN)
-      else {
-        val t = new TDistribution(dfResidual.toDouble)
-        sv.map(v => 2.0 * (1.0 - t.cumulativeProbability(math.abs(v))))
-      }
+    val zv = zValues; val pv = pValues
     xnames.indices.foreach { i =>
-      sb ++= f"${xnames(i)}%-20s${cell(coefs(i))}${cell(se(i))}${cell(sv(i))}${cell(pv(i))} ${stars(pv(i))}\n"
+      sb ++= f"${xnames(i)}%-20s${cell(coefs(i))}${cell(se(i))}${cell(zv(i))}${cell(pv(i))} ${stars(pv(i))}\n"
     }
     sb ++= "---\n"
     sb ++= s"(Dispersion parameter for $family family taken to be ${sigDigits(dispersion, 6)})\n\n"

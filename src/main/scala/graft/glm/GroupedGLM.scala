@@ -321,84 +321,84 @@ object GroupedGLM {
     // must survive executor loss), localCheckpoint as local-mode default.
     // Checkpointer frees each superseded generation as soon as the next
     // one is materialized — files/blocks stay O(betas), not O(iterations).
-    val cp = new graft.Checkpointer(df.sparkSession, checkpointDir)
     val keys = keyCols.map(col)
-    val assembled0 = df.select(keys :+
-      array(xCols.map(c => col(c).cast("double")) ++ Seq(
-        col(yCol).cast("double"),
-        mCol.map(c => col(c).cast("double")).getOrElse(lit(1.0)),
-        offsetCol.map(c => col(c).cast("double")).getOrElse(lit(0.0)),
-        weightCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))): _*)
-        .as("xy"): _*)
-    // Sufficient-stats collapse of the DATA side (see [[SuffStats]]):
-    // on a discrete design every per-group IRLS pass — at any scale —
-    // aggregates over (key, pattern) rows with the count as a
-    // replication weight.
-    val collapsed = SuffStats.collapse(assembled0, "__cnt")
-    val assembled = collapsed.map(_.view).getOrElse(assembled0.persist())
+    val lastFit = graft.Checkpointer.using(df.sparkSession, checkpointDir) { cp =>
+      val assembled0 = df.select(keys :+
+        array(xCols.map(c => col(c).cast("double")) ++ Seq(
+          col(yCol).cast("double"),
+          mCol.map(c => col(c).cast("double")).getOrElse(lit(1.0)),
+          offsetCol.map(c => col(c).cast("double")).getOrElse(lit(0.0)),
+          weightCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))): _*)
+          .as("xy"): _*)
+      // Sufficient-stats collapse of the DATA side (see [[SuffStats]]):
+      // on a discrete design every per-group IRLS pass — at any scale —
+      // aggregates over (key, pattern) rows with the count as a
+      // replication weight.
+      val collapsed = SuffStats.collapse(assembled0, "__cnt")
+      val assembled = collapsed.map(_.view).getOrElse(assembled0.persist())
 
-    // Per-group state frame (one row per group, riding the generation
-    // chain): beta, previous deviance, last stats, a `frozen` convergence
-    // flag and the iteration the group last computed at. Convergence is
-    // PER GROUP — a group whose relative deviance change drops under `tol`
-    // freezes: its rows stop flowing into the broadcast join (inner join
-    // against the ACTIVE betas drops them map-side) and its Gram is never
-    // recomputed, so one slow group no longer forces whole-data iterations
-    // for the millions-of-groups regime. Frozen rows pass through each
-    // generation unchanged (the state is one row per group — copying it is
-    // free next to the data pass it saves).
-    // The zero betas are placeholders — iteration 0 is the init pass,
-    // which derives η from y per family and ignores them.
-    val nUp = pp * (pp + 1) / 2
-    var state = cp(assembled.groupBy(keys: _*).agg(count(lit(1)).as("__n"))
-      .select(keys ++ Seq(
-        array(Seq.fill(pp)(lit(0.0)): _*).as("beta"),
-        lit(Double.MaxValue).as("dev"),
-        lit(0L).as("n"),
-        array(Seq.fill(pp)(lit(Double.NaN)): _*).as("vdiag"),
-        lit(0.0).as("ll"),
-        array(Seq.fill(nUp)(lit(Double.NaN)): _*).as("kernel"),
-        lit(false).as("frozen"),
-        lit(0).as("n_iter")): _*))
-    var iter = 0
-    var remaining = 1L
-    while (iter < maxIter && remaining > 0) {
-      val active = state.filter(!col("frozen"))
-      // ONE broadcast per iteration: the previous deviance rides along
-      // with the betas (r15 — the r14 shape re-joined a second broadcast
-      // of `active` post-aggregation just to fetch it) and passes through
-      // the group aggregation as first(), so assessment needs no join
-      val joined = assembled.join(
-        broadcast(active.select(keys ++ Seq(col("beta"),
-          col("dev").as("__prev")): _*)), keyCols)
-      val step = gramPass(joined, keyCols, p, intercept, fam, link,
-          init = iter == 0, counted = collapsed.isDefined)
+      // Per-group state frame (one row per group, riding the generation
+      // chain): beta, previous deviance, last stats, a `frozen` convergence
+      // flag and the iteration the group last computed at. Convergence is
+      // PER GROUP — a group whose relative deviance change drops under `tol`
+      // freezes: its rows stop flowing into the broadcast join (inner join
+      // against the ACTIVE betas drops them map-side) and its Gram is never
+      // recomputed, so one slow group no longer forces whole-data iterations
+      // for the millions-of-groups regime. Frozen rows pass through each
+      // generation unchanged (the state is one row per group — copying it is
+      // free next to the data pass it saves).
+      // The zero betas are placeholders — iteration 0 is the init pass,
+      // which derives η from y per family and ignores them.
+      val nUp = pp * (pp + 1) / 2
+      var state = cp(assembled.groupBy(keys: _*).agg(count(lit(1)).as("__n"))
         .select(keys ++ Seq(
-          slice(col("buf"), 1, pp).as("beta"),
-          element_at(col("buf"), pp + 1).as("dev"),
-          element_at(col("buf"), pp + 2).cast("long").as("n"),
-          slice(col("buf"), pp + 3, pp).as("vdiag"),
-          element_at(col("buf"), 2 * pp + 3).as("ll"),
-          slice(col("buf"), 2 * pp + 4, nUp).as("kernel"),
-          col("__prev")): _*)
-      // assess each recomputed group against ITS OWN previous deviance;
-      // singular (NaN-beta) groups freeze immediately — they can never
-      // converge and must not keep forcing data passes
-      val assessed = step
-        .withColumn("frozen", isnan(element_at(col("beta"), 1)) ||
-          abs(col("__prev") - col("dev")) / (abs(col("dev")) + 0.1) < lit(tol))
-        .withColumn("n_iter", lit(iter + 1))
-        .drop("__prev")
-      state = cp(state.filter(col("frozen"))
-        .unionByName(assessed.select(state.columns.map(col): _*)))
-      // one scalar to the driver per iteration: how many groups still move
-      remaining = state.filter(!col("frozen")).count()
-      iter += 1
+          array(Seq.fill(pp)(lit(0.0)): _*).as("beta"),
+          lit(Double.MaxValue).as("dev"),
+          lit(0L).as("n"),
+          array(Seq.fill(pp)(lit(Double.NaN)): _*).as("vdiag"),
+          lit(0.0).as("ll"),
+          array(Seq.fill(nUp)(lit(Double.NaN)): _*).as("kernel"),
+          lit(false).as("frozen"),
+          lit(0).as("n_iter")): _*))
+      var iter = 0
+      var remaining = 1L
+      while (iter < maxIter && remaining > 0) {
+        val active = state.filter(!col("frozen"))
+        // ONE broadcast per iteration: the previous deviance rides along
+        // with the betas (r15 — the r14 shape re-joined a second broadcast
+        // of `active` post-aggregation just to fetch it) and passes through
+        // the group aggregation as first(), so assessment needs no join
+        val joined = assembled.join(
+          broadcast(active.select(keys ++ Seq(col("beta"),
+            col("dev").as("__prev")): _*)), keyCols)
+        val step = gramPass(joined, keyCols, p, intercept, fam, link,
+            init = iter == 0, counted = collapsed.isDefined)
+          .select(keys ++ Seq(
+            slice(col("buf"), 1, pp).as("beta"),
+            element_at(col("buf"), pp + 1).as("dev"),
+            element_at(col("buf"), pp + 2).cast("long").as("n"),
+            slice(col("buf"), pp + 3, pp).as("vdiag"),
+            element_at(col("buf"), 2 * pp + 3).as("ll"),
+            slice(col("buf"), 2 * pp + 4, nUp).as("kernel"),
+            col("__prev")): _*)
+        // assess each recomputed group against ITS OWN previous deviance;
+        // singular (NaN-beta) groups freeze immediately — they can never
+        // converge and must not keep forcing data passes
+        val assessed = step
+          .withColumn("frozen", isnan(element_at(col("beta"), 1)) ||
+            abs(col("__prev") - col("dev")) / (abs(col("dev")) + 0.1) < lit(tol))
+          .withColumn("n_iter", lit(iter + 1))
+          .drop("__prev")
+        state = cp(state.filter(col("frozen"))
+          .unionByName(assessed.select(state.columns.map(col): _*)))
+        // one scalar to the driver per iteration: how many groups still move
+        remaining = state.filter(!col("frozen")).count()
+        iter += 1
+      }
+      assembled.unpersist(blocking = false)
+      collapsed.foreach(_.unpersist())
+      state // the final generation backs the result and outlives close()
     }
-    assembled.unpersist(blocking = false)
-    collapsed.foreach(_.unpersist())
-    cp.close() // the final generation backs the state frame and stays alive
-    val lastFit = state
 
     val names = (if (intercept) Seq("b_intercept") else Nil) ++ xCols.map("b_" + _)
     // dispersion for the SEs: fixed 1 for binomial/poisson; the

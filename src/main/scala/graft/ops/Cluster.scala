@@ -318,37 +318,37 @@ object Cluster {
       .filter((col("xa") - col("xb")) * (col("xa") - col("xb")) +
         (col("ya") - col("yb")) * (col("ya") - col("yb")) <= lit(eps * eps))
       .select("id_a", "id_b")
-    val cp = new graft.Checkpointer(df.sparkSession, checkpointDir)
-    val nb = cp.pin(nbrs) // counts + core edges + border both reuse it
-    val cores = nb.groupBy("id_a").agg(count(lit(1)).as("__deg"))
-      .filter(col("__deg") >= minPts).select(col("id_a").as("__core_id"))
-    val coreEdges = nb
-      .join(cores.select(col("__core_id").as("id_a")), Seq("id_a"), "left_semi")
-      .join(cores.select(col("__core_id").as("id_b")), Seq("id_b"), "left_semi")
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    val coreLabels = Dedup.connectedComponentsLSS(coreEdges,
-        checkpointDir = checkpointDir)
-      .select(col("id").as("__core_id"), col("label").as("__lbl"))
-    // isolated cores (no other core in range) label themselves
-    val allCoreLabels = cores.join(coreLabels, Seq("__core_id"), "left")
-      .select(col("__core_id"),
-        coalesce(col("__lbl"), col("__core_id")).as("__lbl"))
-    val borderLabels = nb
-      .join(cores.withColumnRenamed("__core_id", "id_a"),
-        Seq("id_a"), "left_anti") // id_a not core
-      .join(allCoreLabels.withColumnRenamed("__core_id", "id_b"), Seq("id_b"))
-      .groupBy(col("id_a")).agg(min("__lbl").as("__lbl"))
-    val out = pts.select(col("__id"))
-      .join(allCoreLabels.withColumnRenamed("__core_id", "__id")
-        .withColumn("is_core", lit(true)), Seq("__id"), "left")
-      .join(borderLabels.withColumnRenamed("id_a", "__id")
-        .withColumnRenamed("__lbl", "__blbl"), Seq("__id"), "left")
-      .select(col("__id").as(idCol),
-        coalesce(col("is_core"), lit(false)).as("is_core"),
-        coalesce(col("__lbl"), col("__blbl")).as("cluster"))
-    val materialized = cp(out)
-    cp.close()
-    materialized
+    graft.Checkpointer.using(df.sparkSession, checkpointDir) { cp =>
+      val nb = cp.pin(nbrs) // counts + core edges + border both reuse it
+      val cores = nb.groupBy("id_a").agg(count(lit(1)).as("__deg"))
+        .filter(col("__deg") >= minPts).select(col("id_a").as("__core_id"))
+      val coreEdges = nb
+        .join(cores.select(col("__core_id").as("id_a")), Seq("id_a"), "left_semi")
+        .join(cores.select(col("__core_id").as("id_b")), Seq("id_b"), "left_semi")
+        .filter(col("id_a") < col("id_b"))
+        .select("id_a", "id_b")
+      val coreLabels = Dedup.connectedComponentsLSS(coreEdges,
+          checkpointDir = checkpointDir)
+        .select(col("id").as("__core_id"), col("label").as("__lbl"))
+      // isolated cores (no other core in range) label themselves
+      val allCoreLabels = cores.join(coreLabels, Seq("__core_id"), "left")
+        .select(col("__core_id"),
+          coalesce(col("__lbl"), col("__core_id")).as("__lbl"))
+      val borderLabels = nb
+        .join(cores.withColumnRenamed("__core_id", "id_a"),
+          Seq("id_a"), "left_anti") // id_a not core
+        .join(allCoreLabels.withColumnRenamed("__core_id", "id_b"), Seq("id_b"))
+        .groupBy(col("id_a")).agg(min("__lbl").as("__lbl"))
+      val out = pts.select(col("__id"))
+        .join(allCoreLabels.withColumnRenamed("__core_id", "__id")
+          .withColumn("is_core", lit(true)), Seq("__id"), "left")
+        .join(borderLabels.withColumnRenamed("id_a", "__id")
+          .withColumnRenamed("__lbl", "__blbl"), Seq("__id"), "left")
+        .select(col("__id").as(idCol),
+          coalesce(col("is_core"), lit(false)).as("is_core"),
+          coalesce(col("__lbl"), col("__blbl")).as("cluster"))
+      val materialized = cp(out)
+      materialized
+    }
   }
 }

@@ -545,35 +545,35 @@ object Dedup {
     // Checkpointer frees each superseded label generation once the next is
     // materialized (and the pinned edges at close) — checkpoint storage
     // stays O(graph), not O(graph × iterations)
-    val cp = new graft.Checkpointer(pairs.sparkSession, checkpointDir)
-    val edges = cp.pin(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct())
-    var labels = cp(edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // shuffle-hash hint: same reasoning as the LSS phase join — labels is
-      // O(nodes) (never broadcastable at scale) and pinning the plan avoids
-      // AQE's runtime broadcast conversion inside a tight checkpoint loop
-      val nbrMin = edges.join(labels.withColumnRenamed("id", "src")
-          .hint("shuffle_hash"), "src")
-        .groupBy(col("dst").as("id")).agg(min("label").as("nbr_label"))
-      // the changed flag rides along INTO the checkpoint, so convergence is
-      // read back with a cheap scan of the checkpointed result — no second
-      // join against the previous labels, one pass per iteration
-      val next = cp(labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"),
-          (coalesce(col("nbr_label"), col("label")) < col("label")).as("__changed")))
-      val changed = next.filter(col("__changed")).limit(1).count()
-      labels = next.select("id", "label")
-      converged = changed == 0
-      iter += 1
+    graft.Checkpointer.using(pairs.sparkSession, checkpointDir) { cp =>
+      val edges = cp.pin(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+        .distinct())
+      var labels = cp(edges.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id")))
+      var iter = 0
+      var converged = false
+      while (iter < maxIter && !converged) {
+        // shuffle-hash hint: same reasoning as the LSS phase join — labels is
+        // O(nodes) (never broadcastable at scale) and pinning the plan avoids
+        // AQE's runtime broadcast conversion inside a tight checkpoint loop
+        val nbrMin = edges.join(labels.withColumnRenamed("id", "src")
+            .hint("shuffle_hash"), "src")
+          .groupBy(col("dst").as("id")).agg(min("label").as("nbr_label"))
+        // the changed flag rides along INTO the checkpoint, so convergence is
+        // read back with a cheap scan of the checkpointed result — no second
+        // join against the previous labels, one pass per iteration
+        val next = cp(labels.join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"),
+            (coalesce(col("nbr_label"), col("label")) < col("label")).as("__changed")))
+        val changed = next.filter(col("__changed")).limit(1).count()
+        labels = next.select("id", "label")
+        converged = changed == 0
+        iter += 1
+      }
+      labels
     }
-    cp.close() // frees the pinned edges; the final labels generation stays
-    labels
   }
 
   /** Connected components via alternating LARGE-STAR / SMALL-STAR rounds
@@ -600,70 +600,70 @@ object Dedup {
     */
   def connectedComponentsLSS(pairs: DataFrame, maxIter: Int = 30,
       checkpointDir: Option[String] = None): DataFrame = {
-    val cp = new graft.Checkpointer(pairs.sparkSession, checkpointDir)
-    // the inputs are CHECKPOINTED, not cached: a persisted InMemoryRelation
-    // pins its fixed pre-AQE shuffle layout for every downstream round
-    // (measured: q73 4.2s -> 7.4s with persist), while the checkpointed
-    // LogicalRDD lets each round re-plan with AQE coalescing.
-    // The pair relation is pinned ONCE and both views derive from it — a
-    // candidate generator like jaccardPairs upstream is the dominant cost
-    // and must not run twice (measured: q73 7.5s -> 4.4s)
-    val base = cp.pin(pairs.select("id_a", "id_b"))
-    val ids = base.select(col("id_a").as("id"))
-      .union(base.select(col("id_b").as("id"))).distinct()
-    // edges kept child→parent (u > v); self-loops dropped
-    var edges = cp(base
-      .filter(col("id_a") =!= col("id_b"))
-      .select(greatest(col("id_a"), col("id_b")).as("u"),
-        least(col("id_a"), col("id_b")).as("v"))
-      .distinct())
-    def checksum(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    graft.Checkpointer.using(pairs.sparkSession, checkpointDir) { cp =>
+      // the inputs are CHECKPOINTED, not cached: a persisted InMemoryRelation
+      // pins its fixed pre-AQE shuffle layout for every downstream round
+      // (measured: q73 4.2s -> 7.4s with persist), while the checkpointed
+      // LogicalRDD lets each round re-plan with AQE coalescing.
+      // The pair relation is pinned ONCE and both views derive from it — a
+      // candidate generator like jaccardPairs upstream is the dominant cost
+      // and must not run twice (measured: q73 7.5s -> 4.4s)
+      val base = cp.pin(pairs.select("id_a", "id_b"))
+      val ids = base.select(col("id_a").as("id"))
+        .union(base.select(col("id_b").as("id"))).distinct()
+      // edges kept child→parent (u > v); self-loops dropped
+      var edges = cp(base
+        .filter(col("id_a") =!= col("id_b"))
+        .select(greatest(col("id_a"), col("id_b")).as("u"),
+          least(col("id_a"), col("id_b")).as("v"))
+        .distinct())
+      def checksum(e: DataFrame): (Long, Long) = {
+        val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
+        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+      }
+      def phase(e: DataFrame, large: Boolean): DataFrame = {
+        val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
+        val mins = sym.groupBy("u")
+          .agg(least(min(col("v")), first(col("u"))).as("m"))
+        // shuffle-hash hint: the mins side is O(nodes), so at scale a
+        // broadcast is impossible and the equi-join shuffles on the node id
+        // anyway; pinning that plan here also stops AQE's runtime
+        // broadcast-join conversion, which intermittently wedged the tight
+        // checkpoint-per-round loop for minutes at a time (observed repeatedly
+        // at gate scale: rounds of ~0.6s with sporadic 180-640s outliers, all
+        // parked waiting on stage materialization with zero task activity)
+        val rewired = sym.join(mins.hint("shuffle_hash"), "u")
+          .filter(if (large) col("v") > col("u") else col("v") < col("u"))
+          .select(col("v").as("u"), col("m").as("v"))
+        // small-star also links each node itself to its neighborhood min
+        val withSelf = if (large) rewired
+          else rewired.union(mins.select(col("u"), col("m").as("v")))
+        withSelf.filter(col("u") =!= col("v")).distinct()
+      }
+      var sum = checksum(edges)
+      var iter = 0
+      var converged = false
+      while (iter < maxIter && !converged) {
+        // one checkpoint per round: the large-star output stays lazy inside
+        // the round's lineage (≈6 shuffles), halving materialization passes.
+        // Folding TWO rounds per generation (12-shuffle lineage) was measured
+        // WORSE: the deeper adaptive plan re-triggers the runtime
+        // broadcast-conversion wedge noted in [[phase]] — negative A/B,
+        // rounds are kept at one double-phase per generation
+        edges = cp(phase(phase(edges, large = true), large = false))
+        val next = checksum(edges)
+        converged = next == sum
+        sum = next
+        iter += 1
+      }
+      // converged state: (child, component-min) stars; roots label themselves.
+      // Materialized through the checkpointer so the final labels generation
+      // is live BEFORE close() frees the pinned pair relation (base) that
+      // `ids` lazily derives from.
+      val labels = cp(ids.join(edges.withColumnRenamed("u", "id"), Seq("id"), "left")
+        .select(col("id"), coalesce(col("v"), col("id")).as("label")))
+      labels
     }
-    def phase(e: DataFrame, large: Boolean): DataFrame = {
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u")
-        .agg(least(min(col("v")), first(col("u"))).as("m"))
-      // shuffle-hash hint: the mins side is O(nodes), so at scale a
-      // broadcast is impossible and the equi-join shuffles on the node id
-      // anyway; pinning that plan here also stops AQE's runtime
-      // broadcast-join conversion, which intermittently wedged the tight
-      // checkpoint-per-round loop for minutes at a time (observed repeatedly
-      // at gate scale: rounds of ~0.6s with sporadic 180-640s outliers, all
-      // parked waiting on stage materialization with zero task activity)
-      val rewired = sym.join(mins.hint("shuffle_hash"), "u")
-        .filter(if (large) col("v") > col("u") else col("v") < col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-      // small-star also links each node itself to its neighborhood min
-      val withSelf = if (large) rewired
-        else rewired.union(mins.select(col("u"), col("m").as("v")))
-      withSelf.filter(col("u") =!= col("v")).distinct()
-    }
-    var sum = checksum(edges)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // one checkpoint per round: the large-star output stays lazy inside
-      // the round's lineage (≈6 shuffles), halving materialization passes.
-      // Folding TWO rounds per generation (12-shuffle lineage) was measured
-      // WORSE: the deeper adaptive plan re-triggers the runtime
-      // broadcast-conversion wedge noted in [[phase]] — negative A/B,
-      // rounds are kept at one double-phase per generation
-      edges = cp(phase(phase(edges, large = true), large = false))
-      val next = checksum(edges)
-      converged = next == sum
-      sum = next
-      iter += 1
-    }
-    // converged state: (child, component-min) stars; roots label themselves.
-    // Materialized through the checkpointer so the final labels generation
-    // is live BEFORE close() frees the pinned pair relation (base) that
-    // `ids` lazily derives from.
-    val labels = cp(ids.join(edges.withColumnRenamed("u", "id"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("v"), col("id")).as("label")))
-    cp.close()
-    labels
   }
 
   /** Remove near-duplicate documents end-to-end: MinHash-LSH candidate

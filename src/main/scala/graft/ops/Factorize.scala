@@ -98,37 +98,37 @@ object Factorize {
     // (the item step reads the user factors just produced) — a single
     // tracker would free the user generation the moment the item step
     // materializes
-    val cpU = new graft.Checkpointer(ratings.sparkSession, checkpointDir)
-    val cpV = new graft.Checkpointer(ratings.sparkSession, checkpointDir)
-    // the ratings frame feeds 2 joins per sweep — pin it once
-    val rr = cpU.pin(r)
-    val scale = 1.0 / math.sqrt(rank.toDouble)
-    def initComp(id: Column, k: Int): Column = init match {
-      case "ones" => lit(scale)
-      case _ => hashUnit(concat_ws("#", id, lit(k))) * lit(scale)
+    graft.Checkpointer.using(ratings.sparkSession, checkpointDir) { cpU =>
+      graft.Checkpointer.using(ratings.sparkSession, checkpointDir) { cpV =>
+        // the ratings frame feeds 2 joins per sweep — pin it once
+        val rr = cpU.pin(r)
+        val scale = 1.0 / math.sqrt(rank.toDouble)
+        def initComp(id: Column, k: Int): Column = init match {
+          case "ones" => lit(scale)
+          case _ => hashUnit(concat_ws("#", id, lit(k))) * lit(scale)
+        }
+        var itemF = cpV(rr.select(col("__i")).distinct()
+          .select(col("__i") +: fCols.zipWithIndex.map { case (c, k) =>
+            initComp(col("__i"), k).as(c) }: _*))
+        var userF: DataFrame = null
+        def halfStep(solveKey: String, otherKey: String,
+            factors: DataFrame): DataFrame = {
+          val joined = rr.join(factors, Seq(otherKey))
+          graft.glm.GroupedLM.fit(joined, Seq(solveKey), fCols, "__r",
+              intercept = false, ridge = lambda)
+            .select(col(solveKey) +: fCols.map(c => col(s"b_$c").as(c)): _*)
+        }
+        for (_ <- 1 to iters) {
+          userF = cpU(halfStep("__u", "__i", itemF))
+          itemF = cpV(halfStep("__i", "__u", userF))
+        }
+        // materialize both outputs before close() releases tracked state
+        val uOut = userF.select(col("__u").as(userCol) +: fCols.map(col): _*)
+          .localCheckpoint(true)
+        val vOut = itemF.select(col("__i").as(itemCol) +: fCols.map(col): _*)
+          .localCheckpoint(true)
+        ALSModel(rank, userCol, itemCol, uOut, vOut)
+      }
     }
-    var itemF = cpV(rr.select(col("__i")).distinct()
-      .select(col("__i") +: fCols.zipWithIndex.map { case (c, k) =>
-        initComp(col("__i"), k).as(c) }: _*))
-    var userF: DataFrame = null
-    def halfStep(solveKey: String, otherKey: String,
-        factors: DataFrame): DataFrame = {
-      val joined = rr.join(factors, Seq(otherKey))
-      graft.glm.GroupedLM.fit(joined, Seq(solveKey), fCols, "__r",
-          intercept = false, ridge = lambda)
-        .select(col(solveKey) +: fCols.map(c => col(s"b_$c").as(c)): _*)
-    }
-    for (_ <- 1 to iters) {
-      userF = cpU(halfStep("__u", "__i", itemF))
-      itemF = cpV(halfStep("__i", "__u", userF))
-    }
-    // materialize both outputs before close() releases tracked state
-    val uOut = userF.select(col("__u").as(userCol) +: fCols.map(col): _*)
-      .localCheckpoint(true)
-    val vOut = itemF.select(col("__i").as(itemCol) +: fCols.map(col): _*)
-      .localCheckpoint(true)
-    cpU.close()
-    cpV.close()
-    ALSModel(rank, userCol, itemCol, uOut, vOut)
   }
 }

@@ -111,45 +111,45 @@ object FuzzyJoin {
     // pin it and the ranked prefix ONCE instead of re-exploding and
     // re-ranking per consumer (r14; the connectedComponentsLSS
     // discipline: flat checkpointed lineage, AQE replans each pass)
-    val cp = new graft.Checkpointer(df.sparkSession, None)
-    val sh = cp.pin(fanOut(df).select(col(idCol).as("__id"),
-      explode(Dedup.shingleHashExpr(col(textCol), n)).as("__g")))
-    val dfreq = sh.groupBy("__g").agg(count(lit(1)).as("__gdf"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__id").orderBy(col("__gdf"), col("__g"))
-    val ranked = sh.join(dfreq, Seq("__g"))
-      .withColumn("__rk", row_number().over(w))
-      .withColumn("__sz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("__id")))
-    val prefix = cp.pin(ranked.filter(col("__rk") <=
-      col("__sz") - ceil(lit(threshold) * col("__sz") - lit(1e-9)) + 1)
-      .select("__id", "__g", "__sz"))
-    val hot = prefix.groupBy("__g").agg(count(lit(1)).as("__p"))
-      .filter(col("__p") > maxPrefixPostings).limit(1).collect()
-    require(hot.isEmpty, s"a prefix shingle exceeds $maxPrefixPostings " +
-      "postings — this corpus is degenerate for prefix filtering " +
-      "(near-constant documents); raise maxPrefixPostings deliberately " +
-      "or pre-dedup exact duplicates first")
-    val cand = prefix.select(col("__g"), col("__id").as("id_a"),
-        col("__sz").as("__sa"))
-      .join(prefix.select(col("__g"), col("__id").as("id_b"),
-        col("__sz").as("__sb")), "__g")
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "__sa", "__sb").distinct()
-    val inter = cand
-      .join(sh.select(col("__id").as("id_a"), col("__g")), Seq("id_a"))
-      .join(sh.select(col("__id").as("id_b"), col("__g")),
-        Seq("id_b", "__g"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("__ni"), first(col("__sa")).as("__sa"),
-        first(col("__sb")).as("__sb"))
-    val jac = col("__ni").cast("double") /
-      (col("__sa") + col("__sb") - col("__ni"))
-    // materialize through the tracker so close() can free the pins
-    val out = cp(inter.filter(jac >= threshold)
-      .select(col("id_a"), col("id_b"), round(jac, 6).as("jaccard")))
-    cp.close()
-    out
+    graft.Checkpointer.using(df.sparkSession, None) { cp =>
+      val sh = cp.pin(fanOut(df).select(col(idCol).as("__id"),
+        explode(Dedup.shingleHashExpr(col(textCol), n)).as("__g")))
+      val dfreq = sh.groupBy("__g").agg(count(lit(1)).as("__gdf"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("__id").orderBy(col("__gdf"), col("__g"))
+      val ranked = sh.join(dfreq, Seq("__g"))
+        .withColumn("__rk", row_number().over(w))
+        .withColumn("__sz", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy("__id")))
+      val prefix = cp.pin(ranked.filter(col("__rk") <=
+        col("__sz") - ceil(lit(threshold) * col("__sz") - lit(1e-9)) + 1)
+        .select("__id", "__g", "__sz"))
+      val hot = prefix.groupBy("__g").agg(count(lit(1)).as("__p"))
+        .filter(col("__p") > maxPrefixPostings).limit(1).collect()
+      require(hot.isEmpty, s"a prefix shingle exceeds $maxPrefixPostings " +
+        "postings — this corpus is degenerate for prefix filtering " +
+        "(near-constant documents); raise maxPrefixPostings deliberately " +
+        "or pre-dedup exact duplicates first")
+      val cand = prefix.select(col("__g"), col("__id").as("id_a"),
+          col("__sz").as("__sa"))
+        .join(prefix.select(col("__g"), col("__id").as("id_b"),
+          col("__sz").as("__sb")), "__g")
+        .filter(col("id_a") < col("id_b"))
+        .select("id_a", "id_b", "__sa", "__sb").distinct()
+      val inter = cand
+        .join(sh.select(col("__id").as("id_a"), col("__g")), Seq("id_a"))
+        .join(sh.select(col("__id").as("id_b"), col("__g")),
+          Seq("id_b", "__g"))
+        .groupBy("id_a", "id_b")
+        .agg(count(lit(1)).as("__ni"), first(col("__sa")).as("__sa"),
+          first(col("__sb")).as("__sb"))
+      val jac = col("__ni").cast("double") /
+        (col("__sa") + col("__sb") - col("__ni"))
+      // materialize through the tracker so close() can free the pins
+      val out = cp(inter.filter(jac >= threshold)
+        .select(col("id_a"), col("id_b"), round(jac, 6).as("jaccard")))
+      out
+    }
   }
 
   /** EXACT all-pairs Jaccard CONTAINMENT self-join — the asymmetric
@@ -187,45 +187,45 @@ object FuzzyJoin {
     // same pinning as [[jaccardSelfJoin]] (r14): the shingle relation
     // feeds the rank join, the candidate probe and both intersection
     // sides — materialize it and the prefix once
-    val cp = new graft.Checkpointer(df.sparkSession, None)
-    val sh = cp.pin(fanOut(df).select(col(idCol).as("__id"),
-      explode(Dedup.shingleHashExpr(col(textCol), n)).as("__g")))
-    val dfreq = sh.groupBy("__g").agg(count(lit(1)).as("__gdf"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__id").orderBy(col("__gdf"), col("__g"))
-    val ranked = sh.join(dfreq, Seq("__g"))
-      .withColumn("__rk", row_number().over(w))
-      .withColumn("__sz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("__id")))
-    val prefix = cp.pin(ranked.filter(col("__rk") <=
-      col("__sz") - ceil(lit(threshold) * col("__sz") - lit(1e-9)) + 1)
-      .select("__id", "__g", "__sz"))
-    // the full-postings side of the candidate join is what a hot prefix
-    // shingle would blow up: bound the JOIN's per-key work, loudly
-    val hot = prefix.select("__g").distinct()
-      .join(dfreq, Seq("__g"))
-      .filter(col("__gdf") > maxPostings).limit(1).collect()
-    require(hot.isEmpty, s"a prefix shingle has more than $maxPostings " +
-      "postings — this corpus is degenerate for containment prefix " +
-      "filtering (near-constant documents); raise maxPostings " +
-      "deliberately or pre-dedup exact duplicates first")
-    val cand = prefix.select(col("__g"), col("__id").as("id_sub"),
-        col("__sz").as("__ssub"))
-      .join(sh.select(col("__g"), col("__id").as("id_sup")), "__g")
-      .filter(col("id_sub") =!= col("id_sup"))
-      .select("id_sub", "id_sup", "__ssub").distinct()
-    val inter = cand
-      .join(sh.select(col("__id").as("id_sub"), col("__g")), Seq("id_sub"))
-      .join(sh.select(col("__id").as("id_sup"), col("__g")),
-        Seq("id_sup", "__g"))
-      .groupBy("id_sub", "id_sup")
-      .agg(count(lit(1)).as("__ni"), first(col("__ssub")).as("__ssub"))
-    val cont = col("__ni").cast("double") / col("__ssub").cast("double")
-    val out = cp(inter.filter(cont >= threshold)
-      .select(col("id_sub"), col("id_sup"),
-        round(cont, 6).as("containment")))
-    cp.close()
-    out
+    graft.Checkpointer.using(df.sparkSession, None) { cp =>
+      val sh = cp.pin(fanOut(df).select(col(idCol).as("__id"),
+        explode(Dedup.shingleHashExpr(col(textCol), n)).as("__g")))
+      val dfreq = sh.groupBy("__g").agg(count(lit(1)).as("__gdf"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("__id").orderBy(col("__gdf"), col("__g"))
+      val ranked = sh.join(dfreq, Seq("__g"))
+        .withColumn("__rk", row_number().over(w))
+        .withColumn("__sz", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy("__id")))
+      val prefix = cp.pin(ranked.filter(col("__rk") <=
+        col("__sz") - ceil(lit(threshold) * col("__sz") - lit(1e-9)) + 1)
+        .select("__id", "__g", "__sz"))
+      // the full-postings side of the candidate join is what a hot prefix
+      // shingle would blow up: bound the JOIN's per-key work, loudly
+      val hot = prefix.select("__g").distinct()
+        .join(dfreq, Seq("__g"))
+        .filter(col("__gdf") > maxPostings).limit(1).collect()
+      require(hot.isEmpty, s"a prefix shingle has more than $maxPostings " +
+        "postings — this corpus is degenerate for containment prefix " +
+        "filtering (near-constant documents); raise maxPostings " +
+        "deliberately or pre-dedup exact duplicates first")
+      val cand = prefix.select(col("__g"), col("__id").as("id_sub"),
+          col("__sz").as("__ssub"))
+        .join(sh.select(col("__g"), col("__id").as("id_sup")), "__g")
+        .filter(col("id_sub") =!= col("id_sup"))
+        .select("id_sub", "id_sup", "__ssub").distinct()
+      val inter = cand
+        .join(sh.select(col("__id").as("id_sub"), col("__g")), Seq("id_sub"))
+        .join(sh.select(col("__id").as("id_sup"), col("__g")),
+          Seq("id_sup", "__g"))
+        .groupBy("id_sub", "id_sup")
+        .agg(count(lit(1)).as("__ni"), first(col("__ssub")).as("__ssub"))
+      val cont = col("__ni").cast("double") / col("__ssub").cast("double")
+      val out = cp(inter.filter(cont >= threshold)
+        .select(col("id_sub"), col("id_sup"),
+          round(cont, 6).as("containment")))
+      out
+    }
   }
 
   /** EXACT all-pairs edit-distance self-join via segment filtering (the

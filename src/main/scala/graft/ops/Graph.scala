@@ -101,34 +101,34 @@ object Graph {
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "need at least one round")
-    val cp = new graft.Checkpointer(edges.sparkSession, None)
-    def degrees(e: DataFrame): DataFrame = e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    // the checkpoint materialization already counts rows — read it for
-    // the convergence probe instead of launching a count job per round
-    var (cur, nEdges) = cp.applyCounted(edges.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .distinct())
-    var round = 0
-    var converged = nEdges == 0L
-    while (!converged && round < maxRounds) {
-      val keep = degrees(cur).filter(col("deg") >= k)
-      val (next, nNext) = cp.applyCounted(cur
-        .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b")))
-      converged = nNext == nEdges
-      nEdges = nNext
-      cur = next
-      round += 1
+    graft.Checkpointer.using(edges.sparkSession, None) { cp =>
+      def degrees(e: DataFrame): DataFrame = e.select(col("a").as("node"))
+        .unionAll(e.select(col("b").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("deg"))
+      // the checkpoint materialization already counts rows — read it for
+      // the convergence probe instead of launching a count job per round
+      var (cur, nEdges) = cp.applyCounted(edges.filter(col("u") =!= col("v"))
+        .select(least(col("u"), col("v")).as("a"),
+          greatest(col("u"), col("v")).as("b"))
+        .distinct())
+      var round = 0
+      var converged = nEdges == 0L
+      while (!converged && round < maxRounds) {
+        val keep = degrees(cur).filter(col("deg") >= k)
+        val (next, nNext) = cp.applyCounted(cur
+          .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
+          .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
+          .select(col("a"), col("b")))
+        converged = nNext == nEdges
+        nEdges = nNext
+        cur = next
+        round += 1
+      }
+      val out = degrees(cur).filter(col("deg") >= k)
+      // materialize the result before close() frees the generations
+      val res = cp(out)
+      res
     }
-    val out = degrees(cur).filter(col("deg") >= k)
-    // materialize the result before close() frees the generations
-    val res = cp(out)
-    cp.close()
-    res
   }
 
   /** Single-source BFS hop distances on a DIRECTED edge list `(u, v)`
@@ -151,35 +151,35 @@ object Graph {
     */
   def bfsLevels(edges: DataFrame, source: Any, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be >= 0")
-    val cp = new graft.Checkpointer(edges.sparkSession, None)
-    val e = cp.pin(edges.select(col("u"), col("v")).distinct())
-    // single generation chain: the frontier is a FILTER over the
-    // checkpointed visited frame (dist == depth), never a second live
-    // generation — the Checkpointer frees each superseded generation as
-    // the next lands, so holding two would read freed blocks
-    var (visited, nVisited) = cp.applyCounted(e.sparkSession.range(1)
-      .select(lit(source).as("node"), lit(0).as("dist")))
-    var depth = 0
-    var done = false
-    while (!done && depth < maxDepth) {
-      val frontier = visited.filter(col("dist") === depth)
-      // candidates need no distinct and no anti-join: the min(dist)
-      // aggregation over (visited ∪ candidates) dedups AND settles every
-      // node at its first depth in the SAME single shuffle
-      val cand = e
-        .join(frontier.select(col("node").as("u")), "u")
-        .select(col("v").as("node"), lit(depth + 1).as("dist"))
-      val (v2, n2) = cp.applyCounted(visited.unionByName(cand)
-        .groupBy("node").agg(min("dist").as("dist")))
-      // the checkpoint materialization's count doubles as the
-      // convergence probe (no growth → frontier added nothing)
-      visited = v2
-      done = n2 == nVisited
-      nVisited = n2
-      depth += 1
+    graft.Checkpointer.using(edges.sparkSession, None) { cp =>
+      val e = cp.pin(edges.select(col("u"), col("v")).distinct())
+      // single generation chain: the frontier is a FILTER over the
+      // checkpointed visited frame (dist == depth), never a second live
+      // generation — the Checkpointer frees each superseded generation as
+      // the next lands, so holding two would read freed blocks
+      var (visited, nVisited) = cp.applyCounted(e.sparkSession.range(1)
+        .select(lit(source).as("node"), lit(0).as("dist")))
+      var depth = 0
+      var done = false
+      while (!done && depth < maxDepth) {
+        val frontier = visited.filter(col("dist") === depth)
+        // candidates need no distinct and no anti-join: the min(dist)
+        // aggregation over (visited ∪ candidates) dedups AND settles every
+        // node at its first depth in the SAME single shuffle
+        val cand = e
+          .join(frontier.select(col("node").as("u")), "u")
+          .select(col("v").as("node"), lit(depth + 1).as("dist"))
+        val (v2, n2) = cp.applyCounted(visited.unionByName(cand)
+          .groupBy("node").agg(min("dist").as("dist")))
+        // the checkpoint materialization's count doubles as the
+        // convergence probe (no growth → frontier added nothing)
+        visited = v2
+        done = n2 == nVisited
+        nVisited = n2
+        depth += 1
+      }
+      visited
     }
-    cp.close()
-    visited
   }
 
   /** Single-source shortest paths on a WEIGHTED directed edge list
@@ -202,23 +202,23 @@ object Graph {
     */
   def sssp(edges: DataFrame, source: Any, rounds: Int): DataFrame = {
     require(rounds >= 0, "rounds must be >= 0")
-    val cp = new graft.Checkpointer(edges.sparkSession, None)
-    val e = cp.pin(edges
-      .select(col("u"), col("v"), col("w").cast("double").as("w"))
-      .groupBy("u", "v").agg(min("w").as("w")))
-    var dist = cp(e.sparkSession.range(1)
-      .select(lit(source).as("node"), lit(0.0).as("dist")))
-    var round = 0
-    while (round < rounds) {
-      val cand = e
-        .join(dist.select(col("node").as("u"), col("dist").as("du")), "u")
-        .select(col("v").as("node"), (col("du") + col("w")).as("dist"))
-      dist = cp(dist.unionByName(cand)
-        .groupBy("node").agg(min("dist").as("dist")))
-      round += 1
+    graft.Checkpointer.using(edges.sparkSession, None) { cp =>
+      val e = cp.pin(edges
+        .select(col("u"), col("v"), col("w").cast("double").as("w"))
+        .groupBy("u", "v").agg(min("w").as("w")))
+      var dist = cp(e.sparkSession.range(1)
+        .select(lit(source).as("node"), lit(0.0).as("dist")))
+      var round = 0
+      while (round < rounds) {
+        val cand = e
+          .join(dist.select(col("node").as("u"), col("dist").as("du")), "u")
+          .select(col("v").as("node"), (col("du") + col("w")).as("dist"))
+        dist = cp(dist.unionByName(cand)
+          .groupBy("node").agg(min("dist").as("dist")))
+        round += 1
+      }
+      dist
     }
-    cp.close()
-    dist
   }
 
   /** Weighted one-mode projection of a bipartite graph: given left–right
@@ -270,39 +270,39 @@ object Graph {
   def hits(edges: DataFrame, iters: Int,
       checkpointEvery: Int = 1): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    val cp = new graft.Checkpointer(edges.sparkSession, None)
-    val e = cp.pin(edges.select(col("u"), col("v")).distinct())
-    val nodes = cp.pin(e.select(col("u"))
-      .unionAll(e.select(col("v").as("u"))).distinct()
-      .select(col("u").as("node")))
-    val n = nodes.count()
-    var state = cp(nodes.select(col("node"),
-      lit(1.0 / n).as("h"), lit(1.0 / n).as("a")))
-    for (i <- 1 to iters) {
-      val aRaw = nodes.join(
-        e.join(state.select(col("node").as("u"), col("h")), "u")
-          .groupBy(col("v").as("node")).agg(sum("h").as("__x")),
-        Seq("node"), "left")
-        .select(col("node"), coalesce(col("__x"), lit(0.0)).as("ar"))
-      val aTot = aRaw.agg(sum("ar").as("__t"))
-      val aN = aRaw.crossJoin(broadcast(aTot))
-        .select(col("node"), (col("ar") / col("__t")).as("a"))
-      val hRaw = nodes.join(
-        e.join(aN.select(col("node").as("v"), col("a")), "v")
-          .groupBy(col("u").as("node")).agg(sum("a").as("__x")),
-        Seq("node"), "left")
-        .select(col("node"), coalesce(col("__x"), lit(0.0)).as("hr"))
-      val hTot = hRaw.agg(sum("hr").as("__t"))
-      val hN = hRaw.crossJoin(broadcast(hTot))
-        .select(col("node"), (col("hr") / col("__t")).as("h"))
-      val next = hN.join(aN, "node").select(col("node"), col("h"), col("a"))
-      state =
-        if (i == iters || (checkpointEvery > 0 && i % checkpointEvery == 0))
-          cp(next)
-        else next
+    graft.Checkpointer.using(edges.sparkSession, None) { cp =>
+      val e = cp.pin(edges.select(col("u"), col("v")).distinct())
+      val nodes = cp.pin(e.select(col("u"))
+        .unionAll(e.select(col("v").as("u"))).distinct()
+        .select(col("u").as("node")))
+      val n = nodes.count()
+      var state = cp(nodes.select(col("node"),
+        lit(1.0 / n).as("h"), lit(1.0 / n).as("a")))
+      for (i <- 1 to iters) {
+        val aRaw = nodes.join(
+          e.join(state.select(col("node").as("u"), col("h")), "u")
+            .groupBy(col("v").as("node")).agg(sum("h").as("__x")),
+          Seq("node"), "left")
+          .select(col("node"), coalesce(col("__x"), lit(0.0)).as("ar"))
+        val aTot = aRaw.agg(sum("ar").as("__t"))
+        val aN = aRaw.crossJoin(broadcast(aTot))
+          .select(col("node"), (col("ar") / col("__t")).as("a"))
+        val hRaw = nodes.join(
+          e.join(aN.select(col("node").as("v"), col("a")), "v")
+            .groupBy(col("u").as("node")).agg(sum("a").as("__x")),
+          Seq("node"), "left")
+          .select(col("node"), coalesce(col("__x"), lit(0.0)).as("hr"))
+        val hTot = hRaw.agg(sum("hr").as("__t"))
+        val hN = hRaw.crossJoin(broadcast(hTot))
+          .select(col("node"), (col("hr") / col("__t")).as("h"))
+        val next = hN.join(aN, "node").select(col("node"), col("h"), col("a"))
+        state =
+          if (i == iters || (checkpointEvery > 0 && i % checkpointEvery == 0))
+            cp(next)
+          else next
+      }
+      state.withColumnRenamed("h", "hub").withColumnRenamed("a", "authority")
     }
-    cp.close()
-    state.withColumnRenamed("h", "hub").withColumnRenamed("a", "authority")
   }
 
   /** Synchronous label-propagation community detection on a DIRECTED
@@ -333,62 +333,63 @@ object Graph {
   def labelPropagation(edges: DataFrame, rounds: Int,
       checkpointEvery: Int = 0): DataFrame = {
     require(rounds >= 1, "need at least one round")
-    val cp = new graft.Checkpointer(edges.sparkSession, None)
-    val nonNull = dropNullEnds(edges)
-    // long node ids for the per-round shuffles (see [[nodeDict]]): the
-    // vote counts are exact integers and nid order == string order, so
-    // the (n desc, label asc) winner is identical under encoding
-    val dictOpt = nodeDict(cp, nonNull, Seq("u", "v"))
-    val rawE = nonNull.select(col("u"), col("v")).distinct()
-    val e = cp.pin(dictOpt match {
-      case Some(d) => encodeCol(encodeCol(rawE, d, "u"), d, "v")
-      case None => rawE
-    })
-    val nodes = e.select(col("u"))
-      .unionAll(e.select(col("v").as("u"))).distinct()
-    // a node with no out-edges never updates: its label stays its own id
-    // for the whole run, so the sink frame is STATIC — unioning it back
-    // each round keeps every generation a single-consumer lazy chain
-    // (a coalesce-join against the previous labels would consume each
-    // generation twice and replay the whole prefix per round, the
-    // dangling-PageRank lesson)
-    val sinkLabels = cp.pin(
-      nodes.join(e.select(col("u")).distinct(), Seq("u"), "left_anti")
-        .select(col("u"), col("u").as("label")))
-    var labels = nodes.select(col("u"), col("u").as("label"))
-    for (i <- 1 to rounds) {
-      // the join output is shuffled once by u (no partition count, so AQE
-      // sizes it under the Checkpointer's coalesce floor), and both
-      // aggregations below group by keys that start with u, so neither
-      // adds an exchange. Partial aggregation before a shuffle saved less
-      // than a second exchange cost: a traced 100k-edge, 10-round op fell
-      // from 31 to 22 jobs.
-      val votes = e
-        .join(labels.select(col("u").as("v"), col("label")), "v")
-        .repartition(col("u"))
-        .groupBy("u", "label").agg(count(lit(1)).as("n"))
-      // arg-max by (n desc, label asc) as a MIN over (−n, label) structs:
-      // same winner as a rank-1 window (struct comparison is
-      // lexicographic), without sorting every vote row per u
-      val adopted = votes
-        .groupBy("u").agg(min(struct((-col("n")).as("nn"),
-          col("label"))).as("__best"))
-        .select(col("u"), col("__best.label").as("label"))
-      val next = adopted.unionByName(sinkLabels)
-      labels =
-        if (i == rounds || (checkpointEvery > 0 && i % checkpointEvery == 0))
-          cp(next)
-        else next
+    graft.Checkpointer.using(edges.sparkSession, None) { cp =>
+      val nonNull = dropNullEnds(edges)
+      // long node ids for the per-round shuffles (see [[nodeDict]]): the
+      // vote counts are exact integers and nid order == string order, so
+      // the (n desc, label asc) winner is identical under encoding
+      val dictOpt = nodeDict(cp, nonNull, Seq("u", "v"))
+      val rawE = nonNull.select(col("u"), col("v")).distinct()
+      val e = cp.pin(dictOpt match {
+        case Some(d) => encodeCol(encodeCol(rawE, d, "u"), d, "v")
+        case None => rawE
+      })
+      val nodes = e.select(col("u"))
+        .unionAll(e.select(col("v").as("u"))).distinct()
+      // a node with no out-edges never updates: its label stays its own id
+      // for the whole run, so the sink frame is STATIC — unioning it back
+      // each round keeps every generation a single-consumer lazy chain
+      // (a coalesce-join against the previous labels would consume each
+      // generation twice and replay the whole prefix per round, the
+      // dangling-PageRank lesson)
+      val sinkLabels = cp.pin(
+        nodes.join(e.select(col("u")).distinct(), Seq("u"), "left_anti")
+          .select(col("u"), col("u").as("label")))
+      var labels = nodes.select(col("u"), col("u").as("label"))
+      for (i <- 1 to rounds) {
+        // the join output is shuffled once by u (no partition count, so AQE
+        // sizes it under the Checkpointer's coalesce floor), and both
+        // aggregations below group by keys that start with u, so neither
+        // adds an exchange. This gives up the partial count before the
+        // shuffle (it carries one row per edge, not per (u, label)); the
+        // second exchange per round cost more than that on skewed graphs
+        // of 100k and 500k edges (op median 7.7 → 5.9 s and 21.4 → 14.2 s)
+        val votes = e
+          .join(labels.select(col("u").as("v"), col("label")), "v")
+          .repartition(col("u"))
+          .groupBy("u", "label").agg(count(lit(1)).as("n"))
+        // arg-max by (n desc, label asc) as a MIN over (−n, label) structs:
+        // same winner as a rank-1 window (struct comparison is
+        // lexicographic), without sorting every vote row per u
+        val adopted = votes
+          .groupBy("u").agg(min(struct((-col("n")).as("nn"),
+            col("label"))).as("__best"))
+          .select(col("u"), col("__best.label").as("label"))
+        val next = adopted.unionByName(sinkLabels)
+        labels =
+          if (i == rounds || (checkpointEvery > 0 && i % checkpointEvery == 0))
+            cp(next)
+          else next
+      }
+      // decode (and materialize) BEFORE close() frees the pinned dict
+      val out = dictOpt match {
+        case Some(d) =>
+          cp(decodeCol(decodeCol(labels, d, "label"), d, "u")
+            .select(col("u"), col("label")))
+        case None => labels
+      }
+      out
     }
-    // decode (and materialize) BEFORE close() frees the pinned dict
-    val out = dictOpt match {
-      case Some(d) =>
-        cp(decodeCol(decodeCol(labels, d, "label"), d, "u")
-          .select(col("u"), col("label")))
-      case None => labels
-    }
-    cp.close()
-    out
   }
 
   /** Degree assortativity of an UNDIRECTED graph: the Pearson
@@ -510,52 +511,52 @@ object Graph {
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 5): DataFrame = {
     require(k >= 3, s"need k >= 3 (k-truss is triangle-based), got $k")
     require(maxRounds >= 1, "need at least one round")
-    val cp = new graft.Checkpointer(edges.sparkSession, None)
-    def support(e: DataFrame): DataFrame = {
-      val deg = e.select(col("a").as("node"))
-        .unionAll(e.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      val withDeg = e
-        .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
-        .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
-      val oriented = withDeg.select(
-        when(col("da") < col("db") || (col("da") === col("db")), col("a"))
-          .otherwise(col("b")).as("src"),
-        when(col("da") < col("db") || (col("da") === col("db")), col("b"))
-          .otherwise(col("a")).as("dst"))
-      val tri = oriented.select(col("src"), col("dst").as("y"))
-        .join(oriented.select(col("src"), col("dst").as("z")), "src")
-        .filter(col("y") < col("z"))
-        .join(e, col("y") === col("a") && col("z") === col("b"), "left_semi")
-      // each triangle (x, y, z) supports its three canonical edges; the
-      // wedge vertex x = src can sit anywhere in the id order
-      tri.select(least(col("src"), col("y")).as("a"),
-          greatest(col("src"), col("y")).as("b"))
-        .unionAll(tri.select(least(col("src"), col("z")).as("a"),
-          greatest(col("src"), col("z")).as("b")))
-        .unionAll(tri.select(col("y").as("a"), col("z").as("b")))
-        .groupBy("a", "b").agg(count(lit(1)).as("support"))
+    graft.Checkpointer.using(edges.sparkSession, None) { cp =>
+      def support(e: DataFrame): DataFrame = {
+        val deg = e.select(col("a").as("node"))
+          .unionAll(e.select(col("b").as("node")))
+          .groupBy("node").agg(count(lit(1)).as("deg"))
+        val withDeg = e
+          .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
+          .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
+        val oriented = withDeg.select(
+          when(col("da") < col("db") || (col("da") === col("db")), col("a"))
+            .otherwise(col("b")).as("src"),
+          when(col("da") < col("db") || (col("da") === col("db")), col("b"))
+            .otherwise(col("a")).as("dst"))
+        val tri = oriented.select(col("src"), col("dst").as("y"))
+          .join(oriented.select(col("src"), col("dst").as("z")), "src")
+          .filter(col("y") < col("z"))
+          .join(e, col("y") === col("a") && col("z") === col("b"), "left_semi")
+        // each triangle (x, y, z) supports its three canonical edges; the
+        // wedge vertex x = src can sit anywhere in the id order
+        tri.select(least(col("src"), col("y")).as("a"),
+            greatest(col("src"), col("y")).as("b"))
+          .unionAll(tri.select(least(col("src"), col("z")).as("a"),
+            greatest(col("src"), col("z")).as("b")))
+          .unionAll(tri.select(col("y").as("a"), col("z").as("b")))
+          .groupBy("a", "b").agg(count(lit(1)).as("support"))
+      }
+      var (cur, nEdges) = cp.applyCounted(edges.filter(col("u") =!= col("v"))
+        .select(least(col("u"), col("v")).as("a"),
+          greatest(col("u"), col("v")).as("b"))
+        .distinct())
+      var round = 0
+      var converged = nEdges == 0L
+      while (!converged && round < maxRounds) {
+        val keep = support(cur).filter(col("support") >= k - 2)
+          .select("a", "b")
+        val (next, nNext) = cp.applyCounted(
+          cur.join(keep, Seq("a", "b"), "left_semi"))
+        converged = nNext == nEdges
+        nEdges = nNext
+        cur = next
+        round += 1
+      }
+      val res = cp(cur.join(support(cur), Seq("a", "b"))
+        .select(col("a"), col("b"), col("support")))
+      res
     }
-    var (cur, nEdges) = cp.applyCounted(edges.filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .distinct())
-    var round = 0
-    var converged = nEdges == 0L
-    while (!converged && round < maxRounds) {
-      val keep = support(cur).filter(col("support") >= k - 2)
-        .select("a", "b")
-      val (next, nNext) = cp.applyCounted(
-        cur.join(keep, Seq("a", "b"), "left_semi"))
-      converged = nNext == nEdges
-      nEdges = nNext
-      cur = next
-      round += 1
-    }
-    val res = cp(cur.join(support(cur), Seq("a", "b"))
-      .select(col("a"), col("b"), col("support")))
-    cp.close()
-    res
   }
 
   /** Standard damped PageRank on a DIRECTED edge list `(u, v)` (symmetrize
@@ -585,86 +586,86 @@ object Graph {
     // probe, every iteration's join) and is often itself an expensive
     // lazy plan (a distinct, a filter over a big fact) — pin it ONCE so
     // all consumers read a materialized frame
-    val cp = new graft.Checkpointer(edges.sparkSession, None)
-    val nonNull = dropNullEnds(edges)
-    // long node ids for the per-iteration shuffles (see [[nodeDict]])
-    val dictOpt = nodeDict(cp, nonNull, Seq("u", "v"))
-    val e = cp.pin(dictOpt match {
-      case Some(d) => encodeCol(encodeCol(nonNull, d, "u"), d, "v")
-      case None => nonNull
-    })
-    val deg = e.groupBy("u").agg(count(lit(1)).as("d"))
-    // dangling detection: does any edge TARGET a node that never appears
-    // as a source? One anti-join probe with a `take(1)` short circuit
-    // over the pinned edges — the build side is the (much smaller)
-    // source-key frame, typically a broadcast probe
-    val hasDangling = !e.select(col("v"))
-      .join(deg.select(col("u").as("__s")), col("v") === col("__s"),
-        "left_anti")
-      .isEmpty
-    val ranksOut = if (!hasDangling) {
-      // node universe ≡ source keys; scalar metadata via one count job
-      val n = deg.count()
-      // closed graph (every node is a source — always true for
-      // symmetrized graphs): the loop is a pure lazy chain, ONE join+agg
-      // per iteration, nothing consumed twice; the FINAL generation
-      // materializes through the checkpointer so close() can free the
-      // pinned edges, intermediates follow the checkpointEvery cadence
-      val withDeg = e.join(deg, "u")
-      var ranks = deg.select(col("u"), lit(1.0 / n).as("r"))
-      for (i <- 1 to iters) {
-        val next = withDeg.join(ranks, "u")
-          .groupBy(col("v"))
-          .agg(sum(col("r") / col("d")).as("in_mass"))
-          .select(col("v").as("u"),
-            (lit((1.0 - damping) / n) + lit(damping) * col("in_mass")).as("r"))
-        ranks =
-          if (i == iters || (checkpointEvery > 0 && i % checkpointEvery == 0))
-            cp(next)
-          else next
+    graft.Checkpointer.using(edges.sparkSession, None) { cp =>
+      val nonNull = dropNullEnds(edges)
+      // long node ids for the per-iteration shuffles (see [[nodeDict]])
+      val dictOpt = nodeDict(cp, nonNull, Seq("u", "v"))
+      val e = cp.pin(dictOpt match {
+        case Some(d) => encodeCol(encodeCol(nonNull, d, "u"), d, "v")
+        case None => nonNull
+      })
+      val deg = e.groupBy("u").agg(count(lit(1)).as("d"))
+      // dangling detection: does any edge TARGET a node that never appears
+      // as a source? One anti-join probe with a `take(1)` short circuit
+      // over the pinned edges — the build side is the (much smaller)
+      // source-key frame, typically a broadcast probe
+      val hasDangling = !e.select(col("v"))
+        .join(deg.select(col("u").as("__s")), col("v") === col("__s"),
+          "left_anti")
+        .isEmpty
+      val ranksOut = if (!hasDangling) {
+        // node universe ≡ source keys; scalar metadata via one count job
+        val n = deg.count()
+        // closed graph (every node is a source — always true for
+        // symmetrized graphs): the loop is a pure lazy chain, ONE join+agg
+        // per iteration, nothing consumed twice; the FINAL generation
+        // materializes through the checkpointer so close() can free the
+        // pinned edges, intermediates follow the checkpointEvery cadence
+        val withDeg = e.join(deg, "u")
+        var ranks = deg.select(col("u"), lit(1.0 / n).as("r"))
+        for (i <- 1 to iters) {
+          val next = withDeg.join(ranks, "u")
+            .groupBy(col("v"))
+            .agg(sum(col("r") / col("d")).as("in_mass"))
+            .select(col("v").as("u"),
+              (lit((1.0 - damping) / n) + lit(damping) * col("in_mass")).as("r"))
+          ranks =
+            if (i == iters || (checkpointEvery > 0 && i % checkpointEvery == 0))
+              cp(next)
+            else next
+        }
+        ranks
+      } else {
+        // dangling nodes exist: their rank is redistributed uniformly each
+        // iteration, so Σ rank = 1 exactly. The dangling aggregate and the
+        // contribution join BOTH consume the previous ranks — a lazy chain
+        // would re-execute each prior iteration per consumer (exponential),
+        // so every generation materializes through the checkpointer (the
+        // GroupedGLM discipline; local checkpoints, superseded generations
+        // freed as the next lands).
+        val withDeg = cp.pin(e.join(deg, "u"))
+        val nodes = cp.pin(e.select(col("u"))
+          .union(e.select(col("v").as("u"))).distinct())
+        // node count is scalar metadata (one count job over the pinned set)
+        val n = nodes.count()
+        var ranks = cp(nodes.select(col("u"), lit(1.0 / n).as("r")))
+        for (_ <- 1 to iters) {
+          // dangling mass: a tiny aggregate over the MATERIALIZED ranks,
+          // carried as a broadcast one-row frame (no driver action)
+          val dangling = ranks.join(deg, Seq("u"), "left_anti")
+            .agg(coalesce(sum("r"), lit(0.0)).as("dm"))
+          val inMass = withDeg.join(ranks, "u")
+            .groupBy(col("v"))
+            .agg(sum(col("r") / col("d")).as("in_mass"))
+            .select(col("v").as("u"), col("in_mass"))
+          val next = nodes.join(inMass, Seq("u"), "left")
+            .crossJoin(broadcast(dangling))
+            .select(col("u"),
+              (lit((1.0 - damping) / n) + lit(damping) *
+                (coalesce(col("in_mass"), lit(0.0)) + col("dm") / n)).as("r"))
+          ranks = cp(next)
+        }
+        ranks
       }
-      ranks
-    } else {
-      // dangling nodes exist: their rank is redistributed uniformly each
-      // iteration, so Σ rank = 1 exactly. The dangling aggregate and the
-      // contribution join BOTH consume the previous ranks — a lazy chain
-      // would re-execute each prior iteration per consumer (exponential),
-      // so every generation materializes through the checkpointer (the
-      // GroupedGLM discipline; local checkpoints, superseded generations
-      // freed as the next lands).
-      val withDeg = cp.pin(e.join(deg, "u"))
-      val nodes = cp.pin(e.select(col("u"))
-        .union(e.select(col("v").as("u"))).distinct())
-      // node count is scalar metadata (one count job over the pinned set)
-      val n = nodes.count()
-      var ranks = cp(nodes.select(col("u"), lit(1.0 / n).as("r")))
-      for (_ <- 1 to iters) {
-        // dangling mass: a tiny aggregate over the MATERIALIZED ranks,
-        // carried as a broadcast one-row frame (no driver action)
-        val dangling = ranks.join(deg, Seq("u"), "left_anti")
-          .agg(coalesce(sum("r"), lit(0.0)).as("dm"))
-        val inMass = withDeg.join(ranks, "u")
-          .groupBy(col("v"))
-          .agg(sum(col("r") / col("d")).as("in_mass"))
-          .select(col("v").as("u"), col("in_mass"))
-        val next = nodes.join(inMass, Seq("u"), "left")
-          .crossJoin(broadcast(dangling))
-          .select(col("u"),
-            (lit((1.0 - damping) / n) + lit(damping) *
-              (coalesce(col("in_mass"), lit(0.0)) + col("dm") / n)).as("r"))
-        ranks = cp(next)
+      // decode (and materialize) BEFORE close() frees the pinned dict;
+      // the final generation backs the result and stays alive
+      val out = dictOpt match {
+        case Some(d) =>
+          cp(decodeCol(ranksOut, d, "u").select(col("u"), col("r")))
+        case None => ranksOut
       }
-      ranks
+      out
     }
-    // decode (and materialize) BEFORE close() frees the pinned dict;
-    // the final generation backs the result and stays alive
-    val out = dictOpt match {
-      case Some(d) =>
-        cp(decodeCol(ranksOut, d, "u").select(col("u"), col("r")))
-      case None => ranksOut
-    }
-    cp.close()
-    out
   }
 
   /** Personalized PageRank / random walk with restart (Haveliwala 2002) —
@@ -691,38 +692,38 @@ object Graph {
       iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "need at least one iteration")
     require(damping > 0 && damping < 1, "damping must be in (0, 1)")
-    val cp = new graft.Checkpointer(edges.sparkSession, None)
-    val e = cp.pin(edges)
-    val deg = cp.pin(e.groupBy("u").agg(count(lit(1)).as("d")))
-    val withDeg = cp.pin(e.join(deg, "u"))
-    val nodes = e.select(col("u"))
-      .union(e.select(col("v").as("u"))).distinct()
-    val src = cp.pin(nodes.join(
-      sources.select(col(sources.columns.head).as("u")).distinct(),
-      Seq("u"), "left_semi"))
-    val nS = src.count()
-    require(nS > 0, "no source node appears in the graph")
-    val restart = cp.pin(src.select(col("u"), lit(1.0 / nS).as("rst")))
-    val q12 = (c: Column) => floor(c * 1e12 + lit(0.5)) / 1e12
-    var ranks = cp(restart.select(col("u"), col("rst").as("r")))
-    for (_ <- 1 to iters) {
-      val dangling = ranks.join(deg, Seq("u"), "left_anti")
-        .agg(coalesce(sum("r"), lit(0.0)).as("dm"))
-      val inMass = withDeg
-        .join(ranks.select(col("u"), col("r").as("__r")), "u")
-        .groupBy(col("v"))
-        .agg(sum(col("__r") / col("d")).as("im"))
-        .select(col("v").as("u"), col("im"))
-      ranks = cp(restart.join(inMass, Seq("u"), "full")
-        .crossJoin(broadcast(dangling))
-        .select(col("u"), q12(
-          coalesce(col("rst"), lit(0.0)) *
-            (lit(1.0 - damping) + lit(damping) * col("dm")) +
-            lit(damping) * coalesce(col("im"), lit(0.0))).as("r"))
-        .filter(col("r") > 0))
+    graft.Checkpointer.using(edges.sparkSession, None) { cp =>
+      val e = cp.pin(edges)
+      val deg = cp.pin(e.groupBy("u").agg(count(lit(1)).as("d")))
+      val withDeg = cp.pin(e.join(deg, "u"))
+      val nodes = e.select(col("u"))
+        .union(e.select(col("v").as("u"))).distinct()
+      val src = cp.pin(nodes.join(
+        sources.select(col(sources.columns.head).as("u")).distinct(),
+        Seq("u"), "left_semi"))
+      val nS = src.count()
+      require(nS > 0, "no source node appears in the graph")
+      val restart = cp.pin(src.select(col("u"), lit(1.0 / nS).as("rst")))
+      val q12 = (c: Column) => floor(c * 1e12 + lit(0.5)) / 1e12
+      var ranks = cp(restart.select(col("u"), col("rst").as("r")))
+      for (_ <- 1 to iters) {
+        val dangling = ranks.join(deg, Seq("u"), "left_anti")
+          .agg(coalesce(sum("r"), lit(0.0)).as("dm"))
+        val inMass = withDeg
+          .join(ranks.select(col("u"), col("r").as("__r")), "u")
+          .groupBy(col("v"))
+          .agg(sum(col("__r") / col("d")).as("im"))
+          .select(col("v").as("u"), col("im"))
+        ranks = cp(restart.join(inMass, Seq("u"), "full")
+          .crossJoin(broadcast(dangling))
+          .select(col("u"), q12(
+            coalesce(col("rst"), lit(0.0)) *
+              (lit(1.0 - damping) + lit(damping) * col("dm")) +
+              lit(damping) * coalesce(col("im"), lit(0.0))).as("r"))
+          .filter(col("r") > 0))
+      }
+      ranks
     }
-    cp.close()
-    ranks
   }
 
   /** Newman modularity of a node partition — the quality readout for any
@@ -773,57 +774,57 @@ object Graph {
     require(walkLen >= 2 && walkLen <= 32,
       s"need 2 <= walkLen <= 32, got $walkLen")
     graft.plans.GraftExtensions.ensureRegistered(edges.sparkSession)
-    val cp = new graft.Checkpointer(edges.sparkSession, None)
-    val e = edges.select(col("u"), col("v")).distinct()
-    val w = Window.partitionBy("u").orderBy("v")
-    val nbrs = cp.pin(e.withColumn("__rank",
-      row_number().over(w).cast("long") - 1L))
-    val degs = cp.pin(nbrs.groupBy("u").agg(count(lit(1)).as("__deg")))
-    val starts = degs
-      .select(col("u"), col("__deg"), explode(sequence(lit(0),
-        lit(walksPerNode - 1))).as("__w"))
-      .select(concat(col("u"), lit("#"), col("__w")).as("walk_id"),
-        col("u").as("node"), col("__deg"))
-    // neighbor rows carry the DESTINATION's degree (one upfront join),
-    // so the frontier always knows its current node's degree and each
-    // step is ONE (node, rank) compound-key equi-join — not a degree
-    // join followed by a neighbor join. Walks are bit-identical to the
-    // two-join form (same draw, same rank); only the plan changes.
-    // A destination with no out-edges carries a null degree: the next
-    // step's pmod(draw, null) rank matches nothing and the walk ends,
-    // exactly as the inner degree-join ended it before.
-    val degsV = degs.select(col("u").as("__vd"), col("__deg").as("__vdeg"))
-    val nj = cp.pin(nbrs.join(degsV, col("v") === col("__vd"), "left")
-      .select(col("u").as("__nu"), col("__rank").as("__nr"), col("v"),
-        col("__vdeg")))
-    // generations go through Checkpointer.keep: each frontier is
-    // materialized once and BACKS the returned union directly (walkLen
-    // <= 32 bounds the union width), instead of being pinned AND then
-    // copied wholesale into one final full-output checkpoint. Peak
-    // executor storage drops from 2x the walk corpus (all frontiers +
-    // the union copy) to 1x — the r13 100x q338 run overflowed storage
-    // at exactly that final copy (SCALE.md).
-    var frontier = cp.keep(starts)
-    var out = frontier.select(col("walk_id"), lit(0).as("step"),
-      col("node"))
-    for (t <- 1 until walkLen) {
-      // step index as stable_lit: every step shares ONE compiled stage
-      // set instead of recompiling the md5-draw join per step (r14)
-      val draw = conv(substring(md5(concat(col("walk_id"), lit("#"),
-        graft.functions.stableLitI(t).cast("string"))), 1, 15), 16, 10)
-        .cast("long")
-      frontier = cp.keep(frontier
-        .select(col("walk_id"),
-          pmod(draw, col("__deg")).as("__rank"), col("node"))
-        .join(nj, col("node") === col("__nu") &&
-          col("__rank") === col("__nr"))
-        .select(col("walk_id"), col("v").as("node"),
-          col("__vdeg").as("__deg")))
-      out = out.unionByName(frontier.select(col("walk_id"),
-        graft.functions.stableLitI(t).as("step"), col("node")))
+    graft.Checkpointer.using(edges.sparkSession, None) { cp =>
+      val e = edges.select(col("u"), col("v")).distinct()
+      val w = Window.partitionBy("u").orderBy("v")
+      val nbrs = cp.pin(e.withColumn("__rank",
+        row_number().over(w).cast("long") - 1L))
+      val degs = cp.pin(nbrs.groupBy("u").agg(count(lit(1)).as("__deg")))
+      val starts = degs
+        .select(col("u"), col("__deg"), explode(sequence(lit(0),
+          lit(walksPerNode - 1))).as("__w"))
+        .select(concat(col("u"), lit("#"), col("__w")).as("walk_id"),
+          col("u").as("node"), col("__deg"))
+      // neighbor rows carry the DESTINATION's degree (one upfront join),
+      // so the frontier always knows its current node's degree and each
+      // step is ONE (node, rank) compound-key equi-join — not a degree
+      // join followed by a neighbor join. Walks are bit-identical to the
+      // two-join form (same draw, same rank); only the plan changes.
+      // A destination with no out-edges carries a null degree: the next
+      // step's pmod(draw, null) rank matches nothing and the walk ends,
+      // exactly as the inner degree-join ended it before.
+      val degsV = degs.select(col("u").as("__vd"), col("__deg").as("__vdeg"))
+      val nj = cp.pin(nbrs.join(degsV, col("v") === col("__vd"), "left")
+        .select(col("u").as("__nu"), col("__rank").as("__nr"), col("v"),
+          col("__vdeg")))
+      // generations go through Checkpointer.keep: each frontier is
+      // materialized once and BACKS the returned union directly (walkLen
+      // <= 32 bounds the union width), instead of being pinned AND then
+      // copied wholesale into one final full-output checkpoint. Peak
+      // executor storage drops from 2x the walk corpus (all frontiers +
+      // the union copy) to 1x — the r13 100x q338 run overflowed storage
+      // at exactly that final copy (SCALE.md).
+      var frontier = cp.keep(starts)
+      var out = frontier.select(col("walk_id"), lit(0).as("step"),
+        col("node"))
+      for (t <- 1 until walkLen) {
+        // step index as stable_lit: every step shares ONE compiled stage
+        // set instead of recompiling the md5-draw join per step (r14)
+        val draw = conv(substring(md5(concat(col("walk_id"), lit("#"),
+          graft.functions.stableLitI(t).cast("string"))), 1, 15), 16, 10)
+          .cast("long")
+        frontier = cp.keep(frontier
+          .select(col("walk_id"),
+            pmod(draw, col("__deg")).as("__rank"), col("node"))
+          .join(nj, col("node") === col("__nu") &&
+            col("__rank") === col("__nr"))
+          .select(col("walk_id"), col("v").as("node"),
+            col("__vdeg").as("__deg")))
+        out = out.unionByName(frontier.select(col("walk_id"),
+          graft.functions.stableLitI(t).as("step"), col("node")))
+      }
+      out
     }
-    cp.close()
-    out
   }
 
   /** Consecutive-step (node, next) pairs of [[randomWalks]], emitted
@@ -842,43 +843,43 @@ object Graph {
     require(walkLen >= 2 && walkLen <= 32,
       s"need 2 <= walkLen <= 32, got $walkLen")
     graft.plans.GraftExtensions.ensureRegistered(edges.sparkSession)
-    val cp = new graft.Checkpointer(edges.sparkSession, None)
-    val e = edges.select(col("u"), col("v")).distinct()
-    val w = Window.partitionBy("u").orderBy("v")
-    val nbrs = cp.pin(e.withColumn("__rank",
-      row_number().over(w).cast("long") - 1L))
-    val degs = cp.pin(nbrs.groupBy("u").agg(count(lit(1)).as("__deg")))
-    val starts = degs
-      .select(col("u"), col("__deg"), explode(sequence(lit(0),
-        lit(walksPerNode - 1))).as("__w"))
-      .select(concat(col("u"), lit("#"), col("__w")).as("walk_id"),
-        col("u").as("node"), col("__deg"))
-    val degsV = degs.select(col("u").as("__vd"), col("__deg").as("__vdeg"))
-    val nj = cp.pin(nbrs.join(degsV, col("v") === col("__vd"), "left")
-      .select(col("u").as("__nu"), col("__rank").as("__nr"), col("v"),
-        col("__vdeg")))
-    var frontier = cp.keep(starts)
-    var pairs: DataFrame = null
-    for (t <- 1 until walkLen) {
-      val draw = conv(substring(md5(concat(col("walk_id"), lit("#"),
-        graft.functions.stableLitI(t).cast("string"))), 1, 15), 16, 10)
-        .cast("long")
-      // keep the JOINED step frame (previous node rides along): the one
-      // materialization feeds both the pair emission and the next frontier
-      val stepped = cp.keep(frontier
-        .select(col("walk_id"),
-          pmod(draw, col("__deg")).as("__rank"), col("node"))
-        .join(nj, col("node") === col("__nu") &&
-          col("__rank") === col("__nr"))
-        .select(col("walk_id"), col("node").as("__prev"),
-          col("v").as("node"), col("__vdeg").as("__deg")))
-      val p = stepped.select(col("__prev").as("node"),
-        col("node").as("__next"))
-      pairs = if (pairs == null) p else pairs.unionByName(p)
-      frontier = stepped.select(col("walk_id"), col("node"), col("__deg"))
+    graft.Checkpointer.using(edges.sparkSession, None) { cp =>
+      val e = edges.select(col("u"), col("v")).distinct()
+      val w = Window.partitionBy("u").orderBy("v")
+      val nbrs = cp.pin(e.withColumn("__rank",
+        row_number().over(w).cast("long") - 1L))
+      val degs = cp.pin(nbrs.groupBy("u").agg(count(lit(1)).as("__deg")))
+      val starts = degs
+        .select(col("u"), col("__deg"), explode(sequence(lit(0),
+          lit(walksPerNode - 1))).as("__w"))
+        .select(concat(col("u"), lit("#"), col("__w")).as("walk_id"),
+          col("u").as("node"), col("__deg"))
+      val degsV = degs.select(col("u").as("__vd"), col("__deg").as("__vdeg"))
+      val nj = cp.pin(nbrs.join(degsV, col("v") === col("__vd"), "left")
+        .select(col("u").as("__nu"), col("__rank").as("__nr"), col("v"),
+          col("__vdeg")))
+      var frontier = cp.keep(starts)
+      var pairs: DataFrame = null
+      for (t <- 1 until walkLen) {
+        val draw = conv(substring(md5(concat(col("walk_id"), lit("#"),
+          graft.functions.stableLitI(t).cast("string"))), 1, 15), 16, 10)
+          .cast("long")
+        // keep the JOINED step frame (previous node rides along): the one
+        // materialization feeds both the pair emission and the next frontier
+        val stepped = cp.keep(frontier
+          .select(col("walk_id"),
+            pmod(draw, col("__deg")).as("__rank"), col("node"))
+          .join(nj, col("node") === col("__nu") &&
+            col("__rank") === col("__nr"))
+          .select(col("walk_id"), col("node").as("__prev"),
+            col("v").as("node"), col("__vdeg").as("__deg")))
+        val p = stepped.select(col("__prev").as("node"),
+          col("node").as("__next"))
+        pairs = if (pairs == null) p else pairs.unionByName(p)
+        frontier = stepped.select(col("walk_id"), col("node"), col("__deg"))
+      }
+      pairs
     }
-    cp.close()
-    pairs
   }
 
   /** DeepWalk-as-counts node similarity: PMI of consecutive-step node
@@ -906,26 +907,26 @@ object Graph {
     */
   private[graft] def walkPmiFromSteps(steps: DataFrame, topK: Int): DataFrame = {
     require(topK >= 1, s"need topK >= 1, got $topK")
-    val cp = new graft.Checkpointer(steps.sparkSession, None)
-    val pairs = steps.select(col("node").as("a"), col("__next").as("b"))
-      .union(steps.select(col("__next").as("a"), col("node").as("b")))
-    // nAB feeds three consumers (nA, tot, the join) and nA two — pin both
-    // once (r14); their exact measured stats let the planner broadcast
-    // the node-bounded nA sides automatically iff they are actually
-    // small, which is the decision that stays right at any graph size
-    val nAB = cp.pin(pairs.groupBy("a", "b").agg(count(lit(1)).as("n_ab")))
-    val nA = cp.pin(nAB.groupBy("a").agg(sum("n_ab").as("__na")))
-    val tot = nAB.agg(sum("n_ab").as("__n"))
-    val out = cp(nAB.join(nA, Seq("a"))
-      .join(nA.select(col("a").as("b"), col("__na").as("__nb")), Seq("b"))
-      .crossJoin(broadcast(tot))
-      .select(col("a"), col("b"), col("n_ab"),
-        round(log(col("n_ab").cast("double") * col("__n") /
-          (col("__na").cast("double") * col("__nb"))), 6).as("pmi"))
-      .orderBy(col("pmi").desc, col("a"), col("b"))
-      .limit(topK))
-    cp.close()
-    out
+    graft.Checkpointer.using(steps.sparkSession, None) { cp =>
+      val pairs = steps.select(col("node").as("a"), col("__next").as("b"))
+        .union(steps.select(col("__next").as("a"), col("node").as("b")))
+      // nAB feeds three consumers (nA, tot, the join) and nA two — pin both
+      // once (r14); their exact measured stats let the planner broadcast
+      // the node-bounded nA sides automatically iff they are actually
+      // small, which is the decision that stays right at any graph size
+      val nAB = cp.pin(pairs.groupBy("a", "b").agg(count(lit(1)).as("n_ab")))
+      val nA = cp.pin(nAB.groupBy("a").agg(sum("n_ab").as("__na")))
+      val tot = nAB.agg(sum("n_ab").as("__n"))
+      val out = cp(nAB.join(nA, Seq("a"))
+        .join(nA.select(col("a").as("b"), col("__na").as("__nb")), Seq("b"))
+        .crossJoin(broadcast(tot))
+        .select(col("a"), col("b"), col("n_ab"),
+          round(log(col("n_ab").cast("double") * col("__n") /
+            (col("__na").cast("double") * col("__nb"))), 6).as("pmi"))
+        .orderBy(col("pmi").desc, col("a"), col("b"))
+        .limit(topK))
+      out
+    }
   }
 
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {

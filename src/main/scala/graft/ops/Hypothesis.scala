@@ -418,9 +418,8 @@ object Hypothesis {
     // and the six consumers read the checkpoint, not a recompute (the
     // docstring's one-data-sized-shuffle claim no longer leans on
     // ReuseExchange kicking in)
-    val cp = new graft.Checkpointer(df.sparkSession, None)
-    val (cells, nCells) = cp.applyCounted(cells0)
-    cp.close()
+    val (cells, nCells) =
+      graft.Checkpointer.using(df.sparkSession, None)(_.applyCounted(cells0))
     require(nCells <= maxCells,
       s"kendallTau cell frame has $nCells cells > maxCells=$maxCells — " +
         "bin the domains first (the C^2 pair join is value-domain-bounded " +

@@ -45,33 +45,33 @@ object Preference {
     // the Checkpointer; each π generation materializes so the lineage
     // stays flat (π feeds TWO joins per iteration — unchecked, the plan
     // would double every round)
-    val cp = new graft.Checkpointer(df.sparkSession, None)
-    val pairs = cp.pin(ordered
-      .unionByName(ordered.select(col("j").as("i"), col("i").as("j"),
-        col("nij")))
-      .groupBy("i", "j").agg(sum("nij").as("n")))
-    val items = pairs.select(col("i")).distinct()
-    val w = cp.pin(items.join(wins, Seq("i"), "left")
-      .select(col("i"), coalesce(col("wi"), lit(0L)).as("wi")))
-    var pi = cp(items.withColumn("pi", lit(1.0)))
-    for (_ <- 1 to iters) {
-      val denom = pairs
-        .join(pi.select(col("i"), col("pi").as("__pi")), Seq("i"))
-        .join(pi.select(col("i").as("j"), col("pi").as("__pj")), Seq("j"))
-        .groupBy("i")
-        .agg(sum(col("n").cast("double") / (col("__pi") + col("__pj")))
-          .as("__d"))
-      pi = cp(w.join(denom, Seq("i"))
-        .select(col("i"), (col("wi").cast("double") / col("__d")).as("pi")))
+    graft.Checkpointer.using(df.sparkSession, None) { cp =>
+      val pairs = cp.pin(ordered
+        .unionByName(ordered.select(col("j").as("i"), col("i").as("j"),
+          col("nij")))
+        .groupBy("i", "j").agg(sum("nij").as("n")))
+      val items = pairs.select(col("i")).distinct()
+      val w = cp.pin(items.join(wins, Seq("i"), "left")
+        .select(col("i"), coalesce(col("wi"), lit(0L)).as("wi")))
+      var pi = cp(items.withColumn("pi", lit(1.0)))
+      for (_ <- 1 to iters) {
+        val denom = pairs
+          .join(pi.select(col("i"), col("pi").as("__pi")), Seq("i"))
+          .join(pi.select(col("i").as("j"), col("pi").as("__pj")), Seq("j"))
+          .groupBy("i")
+          .agg(sum(col("n").cast("double") / (col("__pi") + col("__pj")))
+            .as("__d"))
+        pi = cp(w.join(denom, Seq("i"))
+          .select(col("i"), (col("wi").cast("double") / col("__d")).as("pi")))
+      }
+      val tot = pi.agg(sum("pi").as("__t"))
+      val res = pi.crossJoin(broadcast(tot))
+        .join(w, Seq("i"))
+        .join(pairs.groupBy("i").agg(sum("n").as("n_games")), Seq("i"))
+        .select(col("i").as("item"), col("wi").as("wins"), col("n_games"),
+          round(col("pi") / col("__t"), 6).as("score"))
+        .localCheckpoint(true) // materialize before close() frees generations
+      res
     }
-    val tot = pi.agg(sum("pi").as("__t"))
-    val res = pi.crossJoin(broadcast(tot))
-      .join(w, Seq("i"))
-      .join(pairs.groupBy("i").agg(sum("n").as("n_games")), Seq("i"))
-      .select(col("i").as("item"), col("wi").as("wins"), col("n_games"),
-        round(col("pi") / col("__t"), 6).as("score"))
-      .localCheckpoint(true) // materialize before close() frees generations
-    cp.close()
-    res
   }
 }

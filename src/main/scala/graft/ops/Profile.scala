@@ -562,64 +562,64 @@ object Profile {
     require(k >= 2, s"k < 2 is vacuous, got $k")
     require(rounds >= 1 && rounds <= 16,
       s"need 1 <= rounds <= 16, got $rounds")
-    val cp = new graft.Checkpointer(df.sparkSession, None)
-    var cur = cp(df
-      .filter(quasiCols.map(col(_).isNotNull).reduce(_ && _))
-      .select(quasiCols.map(c => col(c).cast("long").as(c)): _*)
-      .withColumn("__leaf", lit("r")))
-    for (_ <- 1 to rounds) {
-      val stats = cur.groupBy("__leaf").agg(
-        count(lit(1)).as("__n"),
-        quasiCols.flatMap(c => Seq(min(col(c)).as(s"__min_$c"),
-          max(col(c)).as(s"__max_$c"))): _*)
-      val ranges: Seq[(String, Column)] = quasiCols.map(c =>
-        c -> (col(s"__max_$c") - col(s"__min_$c")))
-      val maxRange = ranges.map(_._2).reduceLeft((a, b) => greatest(a, b))
-      val splitAttr = ranges.init.foldRight(lit(quasiCols.last)) {
-        case ((c: String, r: Column), acc: Column) =>
-          when(r >= maxRange, lit(c)).otherwise(acc)
+    graft.Checkpointer.using(df.sparkSession, None) { cp =>
+      var cur = cp(df
+        .filter(quasiCols.map(col(_).isNotNull).reduce(_ && _))
+        .select(quasiCols.map(c => col(c).cast("long").as(c)): _*)
+        .withColumn("__leaf", lit("r")))
+      for (_ <- 1 to rounds) {
+        val stats = cur.groupBy("__leaf").agg(
+          count(lit(1)).as("__n"),
+          quasiCols.flatMap(c => Seq(min(col(c)).as(s"__min_$c"),
+            max(col(c)).as(s"__max_$c"))): _*)
+        val ranges: Seq[(String, Column)] = quasiCols.map(c =>
+          c -> (col(s"__max_$c") - col(s"__min_$c")))
+        val maxRange = ranges.map(_._2).reduceLeft((a, b) => greatest(a, b))
+        val splitAttr = ranges.init.foldRight(lit(quasiCols.last)) {
+          case ((c: String, r: Column), acc: Column) =>
+            when(r >= maxRange, lit(c)).otherwise(acc)
+        }
+        val st = stats.select(col("__leaf"), col("__n"),
+          splitAttr.as("__attr"))
+        val splitVal = quasiCols.init.foldRight(col(quasiCols.last)) {
+          case (c: String, acc: Column) =>
+            when(col("__attr") === c, col(c)).otherwise(acc)
+        }
+        val withVal = cur.join(st, "__leaf").withColumn("__sv", splitVal)
+        val wLeaf = Window.partitionBy("__leaf").orderBy("__sv")
+        val medf = withVal
+          .withColumn("__rn", row_number().over(wLeaf))
+          .filter(col("__rn") === expr("(__n + 1) div 2"))
+          .select(col("__leaf"), col("__sv").as("__med"))
+        val withMed = withVal.join(medf, "__leaf")
+        val nl = withMed.groupBy("__leaf").agg(
+          sum(when(col("__sv") <= col("__med"), 1L).otherwise(0L))
+            .as("__nl"))
+        cur = cp(withMed.join(nl, "__leaf")
+          .withColumn("__leaf",
+            when(col("__n") >= 2 * k && col("__n") - col("__nl") >= k,
+              concat(col("__leaf"),
+                when(col("__sv") <= col("__med"), "L").otherwise("R")))
+              .otherwise(col("__leaf")))
+          .select(col("__leaf") +: quasiCols.map(col): _*))
       }
-      val st = stats.select(col("__leaf"), col("__n"),
-        splitAttr.as("__attr"))
-      val splitVal = quasiCols.init.foldRight(col(quasiCols.last)) {
-        case (c: String, acc: Column) =>
-          when(col("__attr") === c, col(c)).otherwise(acc)
-      }
-      val withVal = cur.join(st, "__leaf").withColumn("__sv", splitVal)
-      val wLeaf = Window.partitionBy("__leaf").orderBy("__sv")
-      val medf = withVal
-        .withColumn("__rn", row_number().over(wLeaf))
-        .filter(col("__rn") === expr("(__n + 1) div 2"))
-        .select(col("__leaf"), col("__sv").as("__med"))
-      val withMed = withVal.join(medf, "__leaf")
-      val nl = withMed.groupBy("__leaf").agg(
-        sum(when(col("__sv") <= col("__med"), 1L).otherwise(0L))
-          .as("__nl"))
-      cur = cp(withMed.join(nl, "__leaf")
-        .withColumn("__leaf",
-          when(col("__n") >= 2 * k && col("__n") - col("__nl") >= k,
-            concat(col("__leaf"),
-              when(col("__sv") <= col("__med"), "L").otherwise("R")))
-            .otherwise(col("__leaf")))
-        .select(col("__leaf") +: quasiCols.map(col): _*))
+      // Loud k-contract: splits guarantee children >= k, but a degenerate
+      // input (< k rows after the null filter) would otherwise release the
+      // root leaf as-is — a quiet privacy breach. The guard rides the
+      // released `n` column so no optimizer rule can prune it.
+      val out = cur.groupBy("__leaf").agg(
+        count(lit(1)).as("__nraw"),
+        quasiCols.flatMap(c => Seq(min(col(c)).as(s"${c}_min"),
+          max(col(c)).as(s"${c}_max"))): _*)
+        .withColumn("n", when(assert_true(col("__nraw") >= k,
+          lit(s"mondrianAnonymize: leaf with n < k=$k (input has fewer " +
+            "than k non-null rows) — refusing to release")).isNull,
+          col("__nraw")))
+        .select(col("__leaf").as("leaf") +: col("n") +:
+          quasiCols.flatMap(c => Seq(col(s"${c}_min"), col(s"${c}_max"))): _*)
+      val res = cp(out)
+      res
     }
-    // Loud k-contract: splits guarantee children >= k, but a degenerate
-    // input (< k rows after the null filter) would otherwise release the
-    // root leaf as-is — a quiet privacy breach. The guard rides the
-    // released `n` column so no optimizer rule can prune it.
-    val out = cur.groupBy("__leaf").agg(
-      count(lit(1)).as("__nraw"),
-      quasiCols.flatMap(c => Seq(min(col(c)).as(s"${c}_min"),
-        max(col(c)).as(s"${c}_max"))): _*)
-      .withColumn("n", when(assert_true(col("__nraw") >= k,
-        lit(s"mondrianAnonymize: leaf with n < k=$k (input has fewer " +
-          "than k non-null rows) — refusing to release")).isNull,
-        col("__nraw")))
-      .select(col("__leaf").as("leaf") +: col("n") +:
-        quasiCols.flatMap(c => Seq(col(s"${c}_min"), col(s"${c}_max"))): _*)
-    val res = cp(out)
-    cp.close()
-    res
   }
 
   def tClosenessViolations(df: DataFrame, quasiCols: Seq[String],

@@ -46,49 +46,49 @@ object SeqMine {
     require(minSupport >= 1, s"need minSupport >= 1, got $minSupport")
     require(maxLen >= 1 && maxLen <= 8, s"need 1 <= maxLen <= 8, got $maxLen")
     require(orderCols.nonEmpty, "need at least one ordering column")
-    val cp = new graft.Checkpointer(df.sparkSession, None)
-    val w = Window.partitionBy(keyCol).orderBy(orderCols.map(col): _*)
-    val ev = df.filter(col(itemCol).isNotNull)
-      .withColumn("__pos", row_number().over(w))
-      .select(col(keyCol).as("__k"), col(itemCol).cast("string").as("__i"),
-        col("__pos"))
-    val freq1 = cp.pin(ev.groupBy("__i")
-      .agg(countDistinct("__k").as("support"))
-      .filter(col("support") >= minSupport))
-    val n1 = freq1.count()
-    require(n1 <= maxPatterns,
-      s"$n1 frequent items exceed maxPatterns=$maxPatterns; raise minSupport")
-    // prune to frequent items once — every pattern is built from them
-    val evF = cp.pin(ev.join(freq1.select("__i"), Seq("__i"), "left_semi"))
-    var results = freq1
-      .select(col("__i").as("pattern"), lit(1).as("len"), col("support"))
-    var frontier = cp(evF.groupBy(col("__k"), col("__i").as("__p"))
-      .agg(min("__pos").as("__end")))
-    var live = n1
-    for (len <- 2 to maxLen if live > 0) {
-      val ext = evF.join(frontier, Seq("__k"))
-        .filter(col("__pos") > col("__end"))
-        .groupBy(col("__k"),
-          concat(col("__p"), lit("→"), col("__i")).as("__p"))
-        .agg(min("__pos").as("__end"))
-      val sup = cp.pin(ext.groupBy("__p")
+    graft.Checkpointer.using(df.sparkSession, None) { cp =>
+      val w = Window.partitionBy(keyCol).orderBy(orderCols.map(col): _*)
+      val ev = df.filter(col(itemCol).isNotNull)
+        .withColumn("__pos", row_number().over(w))
+        .select(col(keyCol).as("__k"), col(itemCol).cast("string").as("__i"),
+          col("__pos"))
+      val freq1 = cp.pin(ev.groupBy("__i")
         .agg(countDistinct("__k").as("support"))
         .filter(col("support") >= minSupport))
-      live = sup.count()
-      require(live <= maxPatterns,
-        s"$live frequent length-$len patterns exceed " +
-          s"maxPatterns=$maxPatterns; raise minSupport")
-      if (live > 0) {
-        frontier = cp(ext.join(sup.select("__p"), Seq("__p"), "left_semi"))
-        results = results.unionByName(sup
-          .select(col("__p").as("pattern"), lit(len).as("len"),
-            col("support")))
+      val n1 = freq1.count()
+      require(n1 <= maxPatterns,
+        s"$n1 frequent items exceed maxPatterns=$maxPatterns; raise minSupport")
+      // prune to frequent items once — every pattern is built from them
+      val evF = cp.pin(ev.join(freq1.select("__i"), Seq("__i"), "left_semi"))
+      var results = freq1
+        .select(col("__i").as("pattern"), lit(1).as("len"), col("support"))
+      var frontier = cp(evF.groupBy(col("__k"), col("__i").as("__p"))
+        .agg(min("__pos").as("__end")))
+      var live = n1
+      for (len <- 2 to maxLen if live > 0) {
+        val ext = evF.join(frontier, Seq("__k"))
+          .filter(col("__pos") > col("__end"))
+          .groupBy(col("__k"),
+            concat(col("__p"), lit("→"), col("__i")).as("__p"))
+          .agg(min("__pos").as("__end"))
+        val sup = cp.pin(ext.groupBy("__p")
+          .agg(countDistinct("__k").as("support"))
+          .filter(col("support") >= minSupport))
+        live = sup.count()
+        require(live <= maxPatterns,
+          s"$live frequent length-$len patterns exceed " +
+            s"maxPatterns=$maxPatterns; raise minSupport")
+        if (live > 0) {
+          frontier = cp(ext.join(sup.select("__p"), Seq("__p"), "left_semi"))
+          results = results.unionByName(sup
+            .select(col("__p").as("pattern"), lit(len).as("len"),
+              col("support")))
+        }
       }
+      // materialize the result as the final (uncleaned) generation BEFORE
+      // close() frees the pinned per-level support frames it reads
+      val out = cp(results)
+      out
     }
-    // materialize the result as the final (uncleaned) generation BEFORE
-    // close() frees the pinned per-level support frames it reads
-    val out = cp(results)
-    cp.close()
-    out
   }
 }

@@ -78,86 +78,86 @@ object Topics {
     // theta and the cell frame are alive at the same time inside a
     // round — a single tracker would free theta's blocks the moment the
     // cells materialize
-    val cp = new graft.Checkpointer(spark, checkpointDir)
-    val cpCells = new graft.Checkpointer(spark, checkpointDir)
-    try {
-      val words = df.select(col(idCol).as("__d"),
-        explode(split(col(textCol), "\\s+")).as("__w"))
-        .filter(length(col("__w")) > 0)
-      // vocab: top-V words by (count desc, word) — model-sized collect
-      val vocab = words.groupBy("__w").agg(count(lit(1)).as("__c"))
-        .orderBy(col("__c").desc, col("__w")).limit(topV)
-        .collect().map(_.getString(0))
-      require(vocab.nonEmpty,
-        "plsa: corpus has no words (empty or all-whitespace text)")
-      val vocabSet = typedLit(vocab.map(_ -> 1).toMap)
-      val counts = cp.pin(words
-        .filter(element_at(vocabSet, col("__w")).isNotNull)
-        .groupBy("__d", "__w").agg(count(lit(1)).as("__n")))
+    graft.Checkpointer.using(spark, checkpointDir) { cp =>
+      graft.Checkpointer.using(spark, checkpointDir) { cpCells =>
+        val words = df.select(col(idCol).as("__d"),
+          explode(split(col(textCol), "\\s+")).as("__w"))
+          .filter(length(col("__w")) > 0)
+        // vocab: top-V words by (count desc, word) — model-sized collect
+        val vocab = words.groupBy("__w").agg(count(lit(1)).as("__c"))
+          .orderBy(col("__c").desc, col("__w")).limit(topV)
+          .collect().map(_.getString(0))
+        require(vocab.nonEmpty,
+          "plsa: corpus has no words (empty or all-whitespace text)")
+        val vocabSet = typedLit(vocab.map(_ -> 1).toMap)
+        val counts = cp.pin(words
+          .filter(element_at(vocabSet, col("__w")).isNotNull)
+          .groupBy("__d", "__w").agg(count(lit(1)).as("__n")))
 
-      // φ0: topic md5(word) mod k gets count 2, others 1 — exact ratios
-      def md5ModK(s: String): Int = {
-        val h = java.lang.Long.parseLong(
-          org.apache.commons.codec.digest.DigestUtils.md5Hex(s)
-            .substring(0, 15), 16)
-        (h % k).toInt
-      }
-      var phiCounts: Map[(Int, String), Long] =
-        (for (z <- 0 until k; w <- vocab)
-          yield (z, w) -> (if (md5ModK(w) == z) 2L else 1L)).toMap
-      def phiProbs: IndexedSeq[Map[String, Double]] = {
-        val tot = (0 until k).map(z =>
-          vocab.map(w => phiCounts((z, w))).sum)
-        (0 until k).map(z => vocab.map(w =>
-          w -> phiCounts((z, w)).toDouble / tot(z).toDouble).toMap)
-      }
+        // φ0: topic md5(word) mod k gets count 2, others 1 — exact ratios
+        def md5ModK(s: String): Int = {
+          val h = java.lang.Long.parseLong(
+            org.apache.commons.codec.digest.DigestUtils.md5Hex(s)
+              .substring(0, 15), 16)
+          (h % k).toInt
+        }
+        var phiCounts: Map[(Int, String), Long] =
+          (for (z <- 0 until k; w <- vocab)
+            yield (z, w) -> (if (md5ModK(w) == z) 2L else 1L)).toMap
+        def phiProbs: IndexedSeq[Map[String, Double]] = {
+          val tot = (0 until k).map(z =>
+            vocab.map(w => phiCounts((z, w))).sum)
+          (0 until k).map(z => vocab.map(w =>
+            w -> phiCounts((z, w)).toDouble / tot(z).toDouble).toMap)
+        }
 
-      // θ0: topic md5(doc) mod k gets 2e6 micro-units, others 1e6
-      val mod = draw60(col("__d")) % k
-      var theta = cp(counts.select("__d").distinct()
-        .select(col("__d") +: (0 until k).map(z =>
-          when(mod === z, lit(2000000L)).otherwise(lit(1000000L))
-            .as(s"t_$z")): _*))
+        // θ0: topic md5(doc) mod k gets 2e6 micro-units, others 1e6
+        val mod = draw60(col("__d")) % k
+        var theta = cp(counts.select("__d").distinct()
+          .select(col("__d") +: (0 until k).map(z =>
+            when(mod === z, lit(2000000L)).otherwise(lit(1000000L))
+              .as(s"t_$z")): _*))
 
-      for (_ <- 1 to iters) {
-        val phis = phiProbs.map(typedLit(_))
-        val tot = (0 until k).map(z => col(s"t_$z").cast("double"))
-          .reduceLeft(_ + _)
-        val joined = counts.join(theta, Seq("__d"))
-          .withColumn("__tot", tot)
-        // pinned posterior chain: num_z = (t_z/tot)·φ_z(w);
-        // den = ((num_0 + num_1) + …) left-associated
-        val nums = (0 until k).map(z =>
-          (col(s"t_$z").cast("double") / col("__tot")) *
-            element_at(phis(z), col("__w")))
-        val den = nums.reduceLeft(_ + _)
-        val cells = cpCells(joined.select(
-          col("__d") +: col("__w") +: (0 until k).map(z =>
-            round((col("__n").cast("double") * (nums(z) / den)) * lit(1e6))
-              .cast("long").as(s"c_$z")): _*))
-        val phiRows = cells.groupBy("__w").agg(
-          sum("c_0").as("c_0"),
-          (1 until k).map(z => sum(s"c_$z").as(s"c_$z")): _*)
-          .collect()
-        theta = cp(cells.groupBy("__d").agg(
-          greatest(sum(s"c_0"), lit(1L)).as("t_0"),
-          (1 until k).map(z =>
-            greatest(sum(s"c_$z"), lit(1L)).as(s"t_$z")): _*))
-        phiCounts = (for (z <- 0 until k; r <- phiRows) yield
-          (z, r.getString(0)) -> math.max(r.getLong(1 + z), 1L)).toMap ++
-          // vocab words absent from every doc cell keep the 1-floor
-          (for (z <- 0 until k; w <- vocab
-            if !phiRows.exists(_.getString(0) == w))
-            yield (z, w) -> 1L)
+        for (_ <- 1 to iters) {
+          val phis = phiProbs.map(typedLit(_))
+          val tot = (0 until k).map(z => col(s"t_$z").cast("double"))
+            .reduceLeft(_ + _)
+          val joined = counts.join(theta, Seq("__d"))
+            .withColumn("__tot", tot)
+          // pinned posterior chain: num_z = (t_z/tot)·φ_z(w);
+          // den = ((num_0 + num_1) + …) left-associated
+          val nums = (0 until k).map(z =>
+            (col(s"t_$z").cast("double") / col("__tot")) *
+              element_at(phis(z), col("__w")))
+          val den = nums.reduceLeft(_ + _)
+          val cells = cpCells(joined.select(
+            col("__d") +: col("__w") +: (0 until k).map(z =>
+              round((col("__n").cast("double") * (nums(z) / den)) * lit(1e6))
+                .cast("long").as(s"c_$z")): _*))
+          val phiRows = cells.groupBy("__w").agg(
+            sum("c_0").as("c_0"),
+            (1 until k).map(z => sum(s"c_$z").as(s"c_$z")): _*)
+            .collect()
+          theta = cp(cells.groupBy("__d").agg(
+            greatest(sum(s"c_0"), lit(1L)).as("t_0"),
+            (1 until k).map(z =>
+              greatest(sum(s"c_$z"), lit(1L)).as(s"t_$z")): _*))
+          phiCounts = (for (z <- 0 until k; r <- phiRows) yield
+            (z, r.getString(0)) -> math.max(r.getLong(1 + z), 1L)).toMap ++
+            // vocab words absent from every doc cell keep the 1-floor
+            (for (z <- 0 until k; w <- vocab
+              if !phiRows.exists(_.getString(0) == w))
+              yield (z, w) -> 1L)
+        }
+        // push the final (data-sized) cell generation out of storage —
+        // the model keeps only theta and the vocab-bounded phi
+        cpCells(theta.limit(1))
+        val docOut = theta.select(col("__d").as(idCol) +:
+          (0 until k).map(z => col(s"t_$z")): _*).localCheckpoint(true)
+        val tw = (for (z <- 0 until k; w <- vocab)
+          yield (z, w, phiCounts((z, w)))).toSeq
+        PlsaModel(k, idCol, docOut, tw)
       }
-      // push the final (data-sized) cell generation out of storage —
-      // the model keeps only theta and the vocab-bounded phi
-      cpCells(theta.limit(1))
-      val docOut = theta.select(col("__d").as(idCol) +:
-        (0 until k).map(z => col(s"t_$z")): _*).localCheckpoint(true)
-      val tw = (for (z <- 0 until k; w <- vocab)
-        yield (z, w, phiCounts((z, w)))).toSeq
-      PlsaModel(k, idCol, docOut, tw)
-    } finally { cpCells.close(); cp.close() }
+    }
   }
 }

@@ -49,40 +49,40 @@ object LoopPlanDump {
     // mirror Graph.labelPropagation's loop body (round 2 shape: the
     // labels side is a materialized generation, as mid-loop rounds see
     // after a checkpoint); `longIds` mirrors the production knob
-    def q176LoopBody(longIds: Boolean): org.apache.spark.sql.DataFrame = {
-      val cp = new graft.Checkpointer(spark, None)
-      val edges = q176Edges
-      val rawE = edges.select(col("u"), col("v")).distinct()
-      val e = cp.pin(if (!longIds) rawE else {
-        val nodes = Seq("u", "v").map(c => edges.select(col(c).as("node")))
-          .reduce(_ unionAll _).distinct().orderBy("node")
-        val withIds = nodes.select(col("node"))
-          .as(org.apache.spark.sql.Encoders.STRING).rdd.zipWithIndex()
-        import spark.implicits._
-        val dict = cp.pin(withIds.toDF("node", "nid"))
-        def enc(df: org.apache.spark.sql.DataFrame, c: String) =
-          df.join(dict.select(col("node").as(c), col("nid").as(s"__$c")), c)
-            .drop(c).withColumnRenamed(s"__$c", c)
-        enc(enc(rawE, "u"), "v")
-      })
-      val nodes = e.select(col("u"))
-        .unionAll(e.select(col("v").as("u"))).distinct()
-      val labels = cp(nodes.select(col("u"), col("u").as("label")))
-      val votes = e
-        .join(labels.select(col("u").as("v"), col("label")), "v")
-        .repartition(col("u"))
-        .groupBy("u", "label").agg(count(lit(1)).as("n"))
-      votes
-        .groupBy("u").agg(min(struct((-col("n")).as("nn"),
-          col("label"))).as("__best"))
-        .select(col("u"), col("__best.label").as("label"))
-    }
+    def dumpLoopBody(name: String, longIds: Boolean): Unit =
+      graft.Checkpointer.using(spark, None) { cp =>
+        val edges = q176Edges
+        val rawE = edges.select(col("u"), col("v")).distinct()
+        val e = cp.pin(if (!longIds) rawE else {
+          val nodes = Seq("u", "v").map(c => edges.select(col(c).as("node")))
+            .reduce(_ unionAll _).distinct().orderBy("node")
+          val withIds = nodes.select(col("node"))
+            .as(org.apache.spark.sql.Encoders.STRING).rdd.zipWithIndex()
+          import spark.implicits._
+          val dict = cp.pin(withIds.toDF("node", "nid"))
+          def enc(df: org.apache.spark.sql.DataFrame, c: String) =
+            df.join(dict.select(col("node").as(c), col("nid").as(s"__$c")), c)
+              .drop(c).withColumnRenamed(s"__$c", c)
+          enc(enc(rawE, "u"), "v")
+        })
+        val nodes = e.select(col("u"))
+          .unionAll(e.select(col("v").as("u"))).distinct()
+        val labels = cp(nodes.select(col("u"), col("u").as("label")))
+        val votes = e
+          .join(labels.select(col("u").as("v"), col("label")), "v")
+          .repartition(col("u"))
+          .groupBy("u", "label").agg(count(lit(1)).as("n"))
+        dump(name, votes
+          .groupBy("u").agg(min(struct((-col("n")).as("nn"),
+            col("label"))).as("__best"))
+          .select(col("u"), col("__best.label").as("label")))
+      }
 
     queries.foreach {
       case "q176_label_prop" =>
-        dump("q176_label_prop_loopbody", q176LoopBody(longIds = false))
+        dumpLoopBody("q176_label_prop_loopbody", longIds = false)
       case "q176_label_prop_longids" =>
-        dump("q176_label_prop_loopbody_longids", q176LoopBody(longIds = true))
+        dumpLoopBody("q176_label_prop_loopbody_longids", longIds = true)
       case other =>
         System.err.println(s"[loopplan] no loop-body recipe for $other")
     }

@@ -364,6 +364,11 @@ class GLMSpec extends SparkSpec {
         s"se $i: ${r(2)} vs ${l.stdErr(i)}")
       assert(math.abs(r(4).toDouble - l.pValues(i)) < 1e-5 * l.pValues(i) + 1e-12,
         s"p $i: ${r(4)} vs ${l.pValues(i)}")
+      // the model's own statistics are the printed ones
+      assert(math.abs(g.zValues(i) - l.tValues(i)) < 1e-8 * math.abs(l.tValues(i)),
+        s"t $i: ${g.zValues(i)} vs ${l.tValues(i)}")
+      assert(math.abs(g.pValues(i) - l.pValues(i)) < 1e-6 * l.pValues(i) + 1e-12,
+        s"p $i: ${g.pValues(i)} vs ${l.pValues(i)}")
     }
     // a fixed-dispersion family prints the unscaled kernel and z tests
     val b = GLM.fit(bern, Seq("x1", "x2"), "y")
