@@ -18,15 +18,24 @@ import org.apache.spark.sql.types.DoubleType
   *    dispatched to the distributed path; the rest silently went
   *    single-partition, GLM.scala:640-642 — a gap, not a semantic, so we
   *    keep ONE code path for any partitioning);
-  *  - each IRLS iteration is **one** distributed aggregation job: the
-  *    working response z, weights w, μ, η are column expressions with
-  *    literal coefficients (recomputed from β, never persisted), and the
-  *    weighted normal equations AND the deviance sum come back in the same
-  *    `agg` pass over a persisted input (the reference launches 3–4 jobs per
-  *    iteration, GLM.scala:452-462). [[Gram.normal]] projects z and w once
-  *    per row before its sums, and the final statistics and null-deviance
-  *    passes project μ once, so no pass plans a copy of the η/μ tree per
-  *    sum (see [[Gram]] for why and what it saves);
+  *  - each IRLS iteration is **one** pass: the working response z,
+  *    weights w, μ, η are column expressions with literal coefficients
+  *    (recomputed from β, never persisted), and the weighted normal
+  *    equations AND the deviance sum come back from the same pass (the
+  *    reference launches 3–4 jobs per iteration, GLM.scala:452-462);
+  *  - where the pass runs is decided once, from a verified row count: when
+  *    the working frame is a table of at most [[SuffStats.CollapseMax]]
+  *    pattern rows (a discrete design's collapse, or a caller's
+  *    `countCol` frame) it is collected once and every IRLS, statistics
+  *    and null-deviance pass runs on the driver with no Spark job — the
+  *    reference's local fit of single-partition data (GLM.scala:254-315),
+  *    but over the same column expressions, through a generated projection
+  *    ([[DriverRows]]). A pass over a few thousand rows is otherwise one
+  *    Spark action, ~0.25 s of fixed cost. Any other frame is persisted and
+  *    each pass is one `agg` job over it; [[Gram.normal]] projects z and w
+  *    once per row before its sums, and the final statistics and
+  *    null-deviance passes project μ once, so no pass plans a copy of the
+  *    η/μ tree per sum (see [[Gram]] for why and what it saves);
   *  - convergence is on RELATIVE deviance change |ΔD| / (|D| + 0.1) < tol
   *    (R glm's criterion, default here 1e-10). The reference converges on
   *    ABSOLUTE |ΔD| < 1e-6 (reference: GLM.scala:281,452), which never
@@ -38,10 +47,10 @@ import org.apache.spark.sql.types.DoubleType
   *  - derived statistics follow reference: GLM.scala:59-88 `createObj`:
   *    dispersion = Pearson/dfResidual, AIC = −2·logLik + 2p.
   *
-  * Scale: per-iteration driver↔executor traffic is the p²-sized Gram buffer
-  * only; the input DataFrame is persisted once before the loop and each
-  * iteration is a single whole-stage-codegen'd scan over it (probit's Φ/Φ⁻¹
-  * UDFs are the one non-codegen expression, applied per-row once per pass).
+  * Scale: on the distributed path per-iteration driver↔executor traffic is
+  * the p²-sized Gram buffer only; the input DataFrame is persisted once
+  * before the loop and each iteration is a single whole-stage-codegen'd
+  * scan over it.
   */
 final class GLMModel(
     val xnames: Array[String],
@@ -227,7 +236,8 @@ final class GLMModel(
   /** R-style summary (reference: GLM.scala:998-1025). Where the
     * dispersion is estimated the standard errors are √dispersion ×
     * `stdErr` and the tests are t ([[zValues]], [[pValues]]), as in R's
-    * `summary.glm`; elsewhere they are `stdErr` and z.
+    * `summary.glm`; elsewhere they are `stdErr` and z, and the printed
+    * dispersion is 1 (the `dispersion` field stays Pearson/dfResidual).
     */
   def summary: String = {
     import NumFormat._
@@ -242,7 +252,8 @@ final class GLMModel(
       sb ++= f"${xnames(i)}%-20s${cell(coefs(i))}${cell(se(i))}${cell(zv(i))}${cell(pv(i))} ${stars(pv(i))}\n"
     }
     sb ++= "---\n"
-    sb ++= s"(Dispersion parameter for $family family taken to be ${sigDigits(dispersion, 6)})\n\n"
+    val shown = if (dispersionEstimated) sigDigits(dispersion, 6).toString else "1"
+    sb ++= s"(Dispersion parameter for $family family taken to be $shown)\n\n"
     sb ++= s"    Null deviance: ${sigDigits(nullDeviance, 6)} on $dfNull degrees of freedom\n"
     sb ++= s"Residual deviance: ${sigDigits(deviance, 6)} on $dfResidual degrees of freedom\n"
     sb ++= s"AIC: ${sigDigits(aic, 6)}\n\n"
@@ -356,11 +367,11 @@ object GLM {
     *                  unlike `weightCol`, which leaves n counting rows).
     *                  Outer loops that pre-collapse a discrete design to
     *                  (pattern, count) sufficient statistics pass it so
-    *                  every IRLS pass runs over patterns, not rows. With
-    *                  it set the frame is read through `coalesce(1)` —
-    *                  every pass is ONE task — so it must be model-sized
-    *                  (pattern rows, on the order of
-    *                  [[SuffStats.CollapseMax]]), never a row-level frame
+    *                  every IRLS pass runs over patterns, not rows. A
+    *                  frame of at most [[SuffStats.CollapseMax]] rows is
+    *                  collected once and fitted on the driver; a larger
+    *                  one is persisted and spread like any uncollapsed
+    *                  input, each pass one distributed job
     */
   def fit(
       df: DataFrame,
@@ -382,8 +393,8 @@ object GLM {
     val fam = Family(family)
     val link = LinkFn(if (linkName.isEmpty) fam.defaultLink else linkName)
 
-    // Assemble one flat working DataFrame and persist it: every IRLS pass
-    // re-scans this (and only this).
+    // Assemble one flat working frame: every pass reads this (and only
+    // this), collected or persisted below.
     val xs0 = xCols.map(c => col(c).cast(DoubleType))
     val xsNames = xCols.indices.map(i => s"x$i")
     val proj =
@@ -395,30 +406,27 @@ object GLM {
       countCol.map(col(_).cast(DoubleType).as("cnt")).toSeq
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     val proj0 = df.select(proj: _*)
-    // Sufficient-statistics collapse when the design is discrete — see
-    // [[SuffStats]] for the class, the adaptive gate and its costs.
-    var cntOpt: Option[Column] = countCol.map(_ => col("cnt"))
+    // The pattern rows: the caller's count-carrying frame, or the
+    // sufficient-statistics collapse of a discrete design (see
+    // [[SuffStats]] for the class, the adaptive gate and its costs). When
+    // they number at most SuffStats.CollapseMax they are collected once and
+    // every pass below runs on the driver with no Spark job (see [[Gram]]).
     var collapsed: Option[SuffStats.Collapsed] = None
-    val work: DataFrame =
-      if (countCol.isDefined) {
-        // caller pre-collapsed (rows already carry a replication count):
-        // single-partition view, same rationale as SuffStats
-        proj0.coalesce(1).persist(StorageLevel.MEMORY_AND_DISK)
-      } else {
+    val local: Option[DriverRows] =
+      if (countCol.isDefined) DriverRows.collect(proj0, SuffStats.CollapseMax)
+      else {
         collapsed = SuffStats.collapse(proj0, "cnt")
-        collapsed match {
-          case Some(c) =>
-            cntOpt = Some(col("cnt"))
-            c.view
-          case None =>
-            // spread the working set across the cluster before persisting:
-            // every IRLS iteration re-scans this frame, and a single-file
-            // source would otherwise pin all iterations to one task
-            (if (proj0.rdd.getNumPartitions >= math.max(2, parallelism / 2)) proj0
-             else proj0.repartition(parallelism))
-              .persist(StorageLevel.MEMORY_AND_DISK)
-        }
+        collapsed.flatMap(c => DriverRows.collect(c.view, SuffStats.CollapseMax))
       }
+    val cntOpt: Option[Column] =
+      if (countCol.isDefined || collapsed.isDefined) Some(col("cnt")) else None
+    // otherwise every pass is one aggregation over this persisted frame,
+    // spread across the cluster first: a single-file source would pin
+    // every IRLS pass to one task
+    val work: Option[DataFrame] = if (local.isDefined) None else Some(
+      (if (proj0.rdd.getNumPartitions >= math.max(2, parallelism / 2)) proj0
+       else proj0.repartition(parallelism))
+        .persist(StorageLevel.MEMORY_AND_DISK))
     // scale a per-row aggregate term by the replication count (identity
     // when uncollapsed — expressions stay byte-identical to the r14 path)
     def wc(c: Column): Column = cntOpt.map(c * _).getOrElse(c)
@@ -430,6 +438,21 @@ object GLM {
     val y = col("y"); val m = col("m"); val off = col("off"); val pw = col("pw")
 
     def clamp(mu: Column): Column = fam.clampMu(mu, m)
+
+    def gram(z: Column, w: Column, extras: Seq[Column]): Normal = local match {
+      case Some(rows) => Gram.normal(rows, xs, z, w, extras)
+      case None       => Gram.normal(work.get, xs, z, w, extras)
+    }
+    // Σ of each per-row term of μ; a distributed pass projects μ once per
+    // row instead of inlining it into every sum (the same reasoning as
+    // Gram.normal's projection)
+    def sums(mu: Column)(terms: Column => Seq[Column]): Array[Double] = local match {
+      case Some(rows) => rows.sums(terms(mu))
+      case None =>
+        val t = terms(col("mu")).map(sum)
+        val r = work.get.select(col("*"), mu.as("mu")).agg(t.head, t.tail: _*).head()
+        Array.tabulate(t.size)(r.getDouble)
+    }
 
     try {
       var beta: BDV[Double] = initCoefs.orNull
@@ -456,9 +479,9 @@ object GLM {
         val z = etaE + (y - muE) * lp - off
         val w = pw / (fam.variance(muE, m) * lp * lp)
 
-        // ONE distributed pass: weighted normal equations + deviance.
-        val g = Gram.normal(work, xs, z, cntOpt.map(w * _).getOrElse(w),
-          extras = Seq(sum(wc(pw * fam.deviance(y, muE, m)))))
+        // ONE pass: weighted normal equations + deviance.
+        val g = gram(z, cntOpt.map(w * _).getOrElse(w),
+          extras = Seq(wc(pw * fam.deviance(y, muE, m))))
         dev = g.extras(0)
         lastGram = g
 
@@ -478,7 +501,7 @@ object GLM {
 
       // Intermediate fits inside outer loops (EM rounds) only need β and
       // the deviance the IRLS pass already computed — skip the two stats
-      // jobs (Pearson/loglik pass + null-deviance pass) and mark the
+      // passes (Pearson/loglik pass + null-deviance pass) and mark the
       // derived statistics NaN/0
       if (!computeStats) {
         return new GLMModel(names, yCol, intercept, fam.name, link, beta,
@@ -490,24 +513,21 @@ object GLM {
       val etaF = xs.zipWithIndex
         .map { case (c, i) => c * graft.functions.stableLit(beta(i)) }
         .reduce(_ + _) + off
-      // μ̂ is projected once per row, not inlined into every sum (the same
-      // reasoning as Gram.normal's projection)
-      val muF = col("mu")
-      val statsRow = work.select(col("*"), clamp(link.inverse(etaF, m)).as("mu")).agg(
-        sum(wc(pw * (y - muF) * (y - muF) / fam.variance(muF, m))).as("pearson"),
-        sum(wc(pw * fam.logLik(y, muF, m))).as("ll"),
-        sum(wc(pw * y)).as("y_sum"),
-        sum(wc(pw * m)).as("m_sum"),
+      val stats = sums(clamp(link.inverse(etaF, m))) { muF => Seq(
+        wc(pw * (y - muF) * (y - muF) / fam.variance(muF, m)), // Pearson χ²
+        wc(pw * fam.logLik(y, muF, m)),                        // log-likelihood
+        wc(pw * y),
+        wc(pw * m),
         // n counts OBSERVATIONS: rows, or the replication-count sum when
         // the frame is collapsed to (pattern, count) sufficient stats
-        cntOpt.map(c => sum(c).cast("long")).getOrElse(count(lit(1))).as("n"),
+        cntOpt.getOrElse(lit(1.0)),
         // Σ ln w over observations (NOT ln(w·cnt) — the count replicates
         // the row, it does not scale its prior weight)
-        sum(wc(log(pw))).as("sum_log_w"),
-        sum(wc(pw)).as("w_sum")).head()
-      val pearson = statsRow.getDouble(0)
-      val pHat = statsRow.getDouble(2) / statsRow.getDouble(3)
-      val n = statsRow.getLong(4)
+        wc(log(pw)),
+        wc(pw)) }
+      val pearson = stats(0)
+      val pHat = stats(2) / stats(3)
+      val n = stats(4).toLong
       // gaussian log-likelihood follows R's logLik.glm convention: profile
       // σ̂² = RSS_w/n into ll = −n/2·(ln(2π·RSS_w/n) + 1) + ½Σln(w) (the
       // weighted-normal density term — R's aic.gaussian subtracts
@@ -516,30 +536,27 @@ object GLM {
       // expression is the unit-dispersion term, correct for the others.
       // inverse-gaussian likewise profiles its dispersion (the exact
       // inverse of R's aic.invgauss, which uses Σw where gaussian uses n);
-      // the statsRow ll slot carries its −(3/2)Σw·ln y data term. The
-      // quasi families' per-row term is NaN, so their ll/AIC are NaN —
+      // the stats log-likelihood slot carries its −(3/2)Σw·ln y data term.
+      // The quasi families' per-row term is NaN, so their ll/AIC are NaN —
       // R reports NA.
       val ll = fam.name match {
         case "gaussian" =>
-          -0.5 * n * (math.log(2.0 * math.Pi * dev / n) + 1.0) +
-            0.5 * statsRow.getDouble(5)
+          -0.5 * n * (math.log(2.0 * math.Pi * dev / n) + 1.0) + 0.5 * stats(5)
         case "inverse-gaussian" =>
-          val wsum = statsRow.getDouble(6)
-          -0.5 * wsum * (math.log(2.0 * math.Pi * dev / wsum) + 1.0) +
-            statsRow.getDouble(1)
-        case _ => statsRow.getDouble(1)
+          val wsum = stats(6)
+          -0.5 * wsum * (math.log(2.0 * math.Pi * dev / wsum) + 1.0) + stats(1)
+        case _ => stats(1)
       }
 
       // Null deviance: the intercept-only MLE mean is m·(Σwy/Σwm) for both
       // families (binomial rate and, with m = 1, the Poisson ȳ) — closed
       // form, one small extra pass.
-      val nullDev = work.select(col("*"), clamp(m * pHat).as("mu"))
-        .agg(sum(wc(pw * fam.deviance(y, col("mu"), m)))).head().getDouble(0)
+      val nullDev = sums(clamp(m * pHat))(mu0 => Seq(wc(pw * fam.deviance(y, mu0, m))))(0)
 
       new GLMModel(names, yCol, intercept, fam.name, link, beta, se,
         dev, nullDev, pearson, ll, n, iterations, ixtwx)
     } finally {
-      work.unpersist(blocking = false)
+      work.foreach(_.unpersist(blocking = false))
       collapsed.foreach(_.unpersist())
     }
   }

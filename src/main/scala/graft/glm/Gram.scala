@@ -1,8 +1,13 @@
 package graft.glm
 
 import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Weighted normal-equation components:
   *
@@ -40,6 +45,16 @@ import org.apache.spark.sql.functions._
   * `treeAggregate` over packed double arrays (still p²-sized payloads,
   * log-depth reduction — the reference's exact network shape,
   * reference: LM.scala:150-152).
+  *
+  * A model-sized frame already collected to the driver ([[DriverRows]])
+  * takes the same packed loop with no Spark job at all — the analog of the
+  * reference's local-Breeze fit of single-partition data
+  * (reference: GLM.scala:254-315 `fitSingleBinomial`). One Spark action
+  * on a one-partition frame costs ~0.25 s of fixed driver and scheduler
+  * time whatever its size, so over a few thousand pattern rows the pass
+  * IS that cost. The loop's arithmetic is the expression path's term for
+  * term (`(w·xᵢ)·xⱼ`, summed from 0.0 in row order), so on rows collected
+  * in the order one task would scan them every sum is bit-identical.
   */
 final case class Normal(
     p: Int,
@@ -72,9 +87,9 @@ object Gram {
     * @param xs     feature column expressions (already double)
     * @param y      response expression
     * @param w      weight expression (defaults to 1.0)
-    * @param extras additional aggregate expressions evaluated in the same
-    *               pass (e.g. a deviance sum inside the IRLS loop) — each
-    *               must be a single aggregate returning a double
+    * @param extras per-row double terms summed in the same pass (e.g. the
+    *               IRLS deviance contributions); their sums come back in
+    *               [[Normal.extras]]
     */
   def normal(
       df: DataFrame,
@@ -85,18 +100,15 @@ object Gram {
     val p = xs.size
     require(p > 0, "at least one feature column required")
     if (p > maxExprWidth) {
-      // wide path: the Gram goes through packed treeAggregate buffers;
-      // extras (e.g. the IRLS deviance sum) run as one additional tiny agg
-      // job — two jobs instead of one, only above the expression-width cap
-      val g = normalWide(df, xs, y, w)
-      if (extras.isEmpty) return g
-      val row = df.agg(extras.head, extras.tail: _*).head()
-      val ex = Array.tabulate(extras.size)(k => row.get(k) match {
-        case null      => 0.0
-        case x: Double => x
-        case x: Number => x.doubleValue()
-      })
-      return g.copy(extras = ex)
+      // wide path: one treeAggregate of the packed buffers, extras included
+      val nExtras = extras.size
+      val len = bufferLength(p, nExtras)
+      val buf = df.select(packedCols(xs, y, w, extras): _*).queryExecution.toRdd
+        .mapPartitions(it => Iterator.single(Gram.accumulate(it, p, nExtras)))
+        .treeAggregate(new Array[Double](len))(
+          seqOp = (a, b) => { var i = 0; while (i < len) { a(i) += b(i); i += 1 }; a },
+          combOp = (a, b) => { var i = 0; while (i < len) { a(i) += b(i); i += 1 }; a })
+      return fromBuffer(buf, p, nExtras)
     }
 
     // project the inputs once (see the object doc); df's own columns ride
@@ -120,80 +132,143 @@ object Gram {
       sum(wc * yc).as("y_sum"),
       sum(wc).as("w_sum"),
       count(lit(1)).as("n"))
-    val all = upper ++ moment ++ scalars ++ extras
+    val all = upper ++ moment ++ scalars ++ extras.map(sum)
     val row = rows.agg(all.head, all.tail: _*).head()
-
-    unpack(row, p, extras.size)
-  }
-
-  private def unpack(row: Row, p: Int, nExtras: Int): Normal = {
-    val nUpper = p * (p + 1) / 2
-    def d(i: Int): Double = row.get(i) match {
+    fromBuffer(Array.tabulate(row.length)(i => row.get(i) match {
       case null      => 0.0
       case x: Double => x
       case x: Number => x.doubleValue()
-    }
-    val xtx = BDM.zeros[Double](p, p)
-    for (i <- 0 until p; j <- i until p) {
-      val v = d(utIndex(i, j, p))
-      xtx(i, j) = v
-      xtx(j, i) = v
-    }
-    val xty = BDV.tabulate(p)(i => d(nUpper + i))
-    val base = nUpper + p
-    val extras = Array.tabulate(nExtras)(k => d(base + 4 + k))
-    Normal(p, xtx, xty, d(base), d(base + 1), d(base + 2), row.getLong(base + 3), extras)
+    }), p, extras.size)
   }
 
-  /** Wide-p path: single-pass `treeAggregate` over packed buffers.
-    * Buffer layout: [upper-tri xtx (p(p+1)/2) | xty (p) | yty, ySum, wSum, n].
+  /** The same normal equations over a frame held on the driver: one
+    * generated projection of x…, y, w and the extras per row, summed by
+    * the packed loop in collect order. No Spark job runs.
     */
-  private def normalWide(df: DataFrame, xs: Seq[Column], y: Column, w: Column): Normal = {
+  private[glm] def normal(
+      rows: DriverRows,
+      xs: Seq[Column],
+      y: Column,
+      w: Column,
+      extras: Seq[Column]): Normal = {
     val p = xs.size
+    require(p > 0, "at least one feature column required")
+    fromBuffer(accumulate(rows.project(packedCols(xs, y, w, extras)), p, extras.size),
+      p, extras.size)
+  }
+
+  /** Buffer layout: [upper-tri xtx (p(p+1)/2) | xty (p) | yty, ySum, wSum, n | extras]. */
+  private def bufferLength(p: Int, nExtras: Int): Int = p * (p + 1) / 2 + p + 4 + nExtras
+
+  /** The packed loop's input row: x…, y, w, then the extras, as doubles. */
+  private def packedCols(xs: Seq[Column], y: Column, w: Column, extras: Seq[Column]): Seq[Column] =
+    (xs ++ Seq(y, w) ++ extras).map(_.cast("double"))
+
+  /** Sums the normal-equation terms of `packedCols` rows into a fresh
+    * buffer, from 0.0 in row order — each slot the exact sequence of
+    * additions Spark's `sum` makes over the same rows. A null input reads
+    * as 0.0, so a term it nulls adds 0.0 (given finite co-factors) where
+    * `sum` would skip it.
+    */
+  private def accumulate(it: Iterator[InternalRow], p: Int, nExtras: Int): Array[Double] = {
     val nUpper = p * (p + 1) / 2
-    val len = nUpper + p + 4
-    val rows = df.select(array(xs.map(_.cast("double")): _*).as("x"),
-      y.cast("double").as("y"), w.cast("double").as("w"))
-
-    val agg = rows.queryExecution.toRdd
-      .mapPartitions { it =>
-        val buf = new Array[Double](len)
-        val xArr = new Array[Double](p)
-        while (it.hasNext) {
-          val r = it.next()
-          val xd = r.getArray(0)
-          var i = 0
-          while (i < p) { xArr(i) = xd.getDouble(i); i += 1 }
-          val yv = r.getDouble(1)
-          val wv = r.getDouble(2)
-          i = 0
-          var k = 0
-          while (i < p) {
-            val wxi = wv * xArr(i)
-            var j = i
-            while (j < p) { buf(k) += wxi * xArr(j); k += 1; j += 1 }
-            buf(nUpper + i) += wxi * yv
-            i += 1
-          }
-          buf(nUpper + p) += wv * yv * yv
-          buf(nUpper + p + 1) += wv * yv
-          buf(nUpper + p + 2) += wv
-          buf(nUpper + p + 3) += 1.0
-        }
-        Iterator.single(buf)
+    val base = nUpper + p
+    val buf = new Array[Double](bufferLength(p, nExtras))
+    val xArr = new Array[Double](p)
+    while (it.hasNext) {
+      val r = it.next()
+      var i = 0
+      while (i < p) { xArr(i) = r.getDouble(i); i += 1 }
+      val yv = r.getDouble(p)
+      val wv = r.getDouble(p + 1)
+      i = 0
+      var k = 0
+      while (i < p) {
+        val wxi = wv * xArr(i)
+        var j = i
+        while (j < p) { buf(k) += wxi * xArr(j); k += 1; j += 1 }
+        buf(nUpper + i) += wxi * yv
+        i += 1
       }
-      .treeAggregate(new Array[Double](len))(
-        seqOp = (a, b) => { var i = 0; while (i < len) { a(i) += b(i); i += 1 }; a },
-        combOp = (a, b) => { var i = 0; while (i < len) { a(i) += b(i); i += 1 }; a })
+      buf(base) += wv * yv * yv
+      buf(base + 1) += wv * yv
+      buf(base + 2) += wv
+      buf(base + 3) += 1.0
+      k = 0
+      while (k < nExtras) { buf(base + 4 + k) += r.getDouble(p + 2 + k); k += 1 }
+    }
+    buf
+  }
 
+  private def fromBuffer(buf: Array[Double], p: Int, nExtras: Int): Normal = {
+    val nUpper = p * (p + 1) / 2
+    val base = nUpper + p
     val xtx = BDM.zeros[Double](p, p)
     for (i <- 0 until p; j <- i until p) {
-      val v = agg(utIndex(i, j, p))
+      val v = buf(utIndex(i, j, p))
       xtx(i, j) = v
       xtx(j, i) = v
     }
-    val xty = BDV.tabulate(p)(i => agg(nUpper + i))
-    Normal(p, xtx, xty, agg(nUpper + p), agg(nUpper + p + 1), agg(nUpper + p + 2),
-      agg(nUpper + p + 3).toLong, Array.empty)
+    Normal(p, xtx, BDV.tabulate(p)(i => buf(nUpper + i)), buf(base), buf(base + 1),
+      buf(base + 2), buf(base + 3).toLong, Array.tabulate(nExtras)(k => buf(base + 4 + k)))
+  }
+}
+
+/** A model-sized frame collected to the driver once, so that every later
+  * pass over it runs there with no Spark job (see [[Gram]]). Column
+  * expressions are resolved against the frame's own plan and evaluated by
+  * one generated projection per pass: the same expressions a distributed
+  * pass would run, so no family or link needs a scalar twin, and the same
+  * generated arithmetic (interpreted `eval` can differ from generated code
+  * in the last bit: `Exp` calls `StrictMath.exp` there and `Math.exp` in
+  * generated code). The plan is analyzed, not optimized, so a constant
+  * subtree is computed by the generated code instead of folded through
+  * `eval`; the two agree where such a subtree is plain arithmetic or calls
+  * one function from both (negbin's `lgamma(θ)`), as in every family and
+  * link here. Rows are visited in the order `collect()`
+  * returned them, which for a one-partition frame is the order its one
+  * task scans.
+  */
+private[glm] final class DriverRows private (frame: DataFrame, rows: Array[InternalRow]) {
+
+  /** `cols` evaluated per row, in collect order; the returned row object
+    * is reused, so read each one before advancing.
+    */
+  def project(cols: Seq[Column]): Iterator[InternalRow] = {
+    val proj = frame.select(cols: _*).queryExecution.analyzed match {
+      case Project(list, child) =>
+        GenerateUnsafeProjection.generate(
+          BindReferences.bindReferences(list, AttributeSeq(child.output)),
+          SQLConf.get.subexpressionEliminationEnabled)
+      case other => throw new IllegalStateException(s"not a projection:\n$other")
+    }
+    rows.iterator.map(proj)
+  }
+
+  /** Σ of each per-row double term, from 0.0 in collect order (a null term
+    * adds nothing) — Spark's `sum` over the same rows, bit for bit.
+    */
+  def sums(terms: Seq[Column]): Array[Double] = {
+    val acc = new Array[Double](terms.size)
+    project(terms.map(_.cast("double"))).foreach { r =>
+      var k = 0
+      while (k < acc.length) { acc(k) += r.getDouble(k); k += 1 }
+    }
+    acc
+  }
+}
+
+private[glm] object DriverRows {
+
+  /** `df`'s rows on the driver when it has at most `max` of them (one
+    * bounded collect, in partition order); None when it has more.
+    */
+  def collect(df: DataFrame, max: Int): Option[DriverRows] = {
+    val got = df.limit(max + 1).collect()
+    if (got.length > max) None
+    else {
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(df.schema)
+      Some(new DriverRows(df, got.map(r => toCatalyst(r).asInstanceOf[InternalRow])))
+    }
   }
 }

@@ -20,9 +20,14 @@ import org.apache.spark.storage.StorageLevel
   * (one job, approx_count_distinct); a passing sample still verifies
   * against the true grouped cardinality before committing (a sample
   * under the cap does not bound the full frame). The collapsed frame is
-  * viewed through `coalesce(1)`: at ≤ `CollapseMax` rows a single task
-  * per pass beats 32 near-empty tasks (measured: the fleet of tiny
-  * tasks, not the data, dominated collapsed-fit wall time at sf0.1).
+  * viewed through `coalesce(1)`. Fits that iterate over it collect it
+  * once and run their passes on the driver (GLM.fit through
+  * [[DriverRows]], Multinomial, Ordinal); the one partition fixes the
+  * collect order, which is the order one task would scan and sum it in.
+  * A pass that still runs as a Spark job over the view (ZeroInfl's
+  * E-step, NegBin's θ step) is one task instead of 32 near-empty ones
+  * (measured: the fleet of tiny tasks, not the data, dominated
+  * collapsed-fit wall time at sf0.1).
   */
 private[glm] object SuffStats {
 

@@ -1,6 +1,8 @@
 package graft.glm
 
 import graft.SparkSpec
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 class GLMSpec extends SparkSpec {
@@ -391,7 +393,7 @@ class GLMSpec extends SparkSpec {
 
   test("wide-p GLM (p > maxExprWidth) converges via the packed Gram path") {
     // 70 hash-derived pseudo-random features force the treeAggregate Gram;
-    // the per-iteration deviance extra runs as its own agg job on that path
+    // the per-iteration deviance extra is summed in its packed buffers
     // (this previously threw "extras unsupported on the wide path")
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .withColumn("yy", when(col("l_discount") >= 0.05, 1.0).otherwise(0.0))
@@ -576,5 +578,62 @@ class GLMSpec extends SparkSpec {
       sum(abs(col("r_response") - (col("yy") - col("x1") * m.coefs(1)
         - col("x2") * m.coefs(2) - m.coefs(0))))).head()
     (0 until 4).foreach(i => assert(agg.getDouble(i) < 1e-6, s"slot $i: ${agg.getDouble(i)}"))
+  }
+
+  test("summary prints dispersion 1 for binomial, poisson and negbin, as R does") {
+    val counts = bern.withColumn("k", floor($"x2" * 3))
+    Seq(
+      GLM.fit(bern, Seq("x1", "x2"), "y"),
+      GLM.fit(counts, Seq("x1"), "k", family = "poisson"),
+      GLM.fit(counts, Seq("x1"), "k", family = "negbin(2.0)")).foreach { m =>
+      assert(m.summary.contains(s"(Dispersion parameter for ${m.family} family taken to be 1)"),
+        m.summary)
+      // the field is still the Pearson estimate
+      assert(m.dispersion != 1.0)
+    }
+    val g = GLM.fit(bern, Seq("x1"), "x2", family = "gaussian")
+    assert(g.summary.contains(
+      s"family taken to be ${NumFormat.sigDigits(g.dispersion, 6)})"), g.summary)
+  }
+
+  /** Runs `f`; returns the jobs it started and (tasks, call-site details)
+    * of each stage it completed.
+    */
+  private def observe(f: => Unit): (Int, Seq[(Int, String)]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.add((e.stageInfo.numTasks, e.stageInfo.details))
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(l)
+    try { f; TestBus.drain(sc) } finally sc.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    (jobs.get, stages.asScala.toSeq)
+  }
+
+  test("a collapsed discrete design runs its IRLS passes with no Spark job") {
+    val disc = bern.select($"y", round($"x1").as("a"), floor($"x2" * 2).as("b"))
+    // tol = 0 never converges, so each fit runs exactly maxIter passes
+    def jobs(iters: Int): Int =
+      observe(GLM.fit(disc, Seq("a", "b"), "y", tol = 0.0, maxIter = iters))._1
+    val (two, six) = (jobs(2), jobs(6))
+    assert(two == six, s"maxIter 2 ran $two jobs, maxIter 6 ran $six")
+  }
+
+  test("a countCol frame above the collapse cap spreads its Gram pass over tasks") {
+    val n = SuffStats.CollapseMax + 904
+    val df = spark.range(0, n, 1, 4).select(
+      ($"id" / n.toDouble).as("x"),
+      when($"id" % 3 === 0, 1.0).otherwise(0.0).as("y"),
+      ($"id" % 2 + 1).cast("double").as("cnt"))
+    val (_, stages) = observe(GLM.fit(df, Seq("x"), "y", maxIter = 1,
+      computeStats = false, countCol = Some("cnt")))
+    val gram = stages.filter(_._2.contains("graft.glm.Gram$.normal"))
+    assert(gram.nonEmpty, "no Gram pass ran as a job")
+    assert(gram.map(_._1).max > 1, s"Gram stages ran on ${gram.map(_._1)} tasks")
   }
 }

@@ -14,7 +14,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * and sums products of the projected columns: the weight tree appears once
   * in the plan instead of once per sum (p(p+1)/2 + p + 2 copies), the pass
   * stays one aggregation, and the sums are bit-identical to summing over a
-  * frame that materialized the weight first.
+  * frame that materialized the weight first. The packed loop, on the
+  * driver over collected rows or per partition on the wide path, sums the
+  * same terms bit for bit.
   */
 class GramSpec extends SparkSpec {
 
@@ -34,7 +36,8 @@ class GramSpec extends SparkSpec {
     * of this kind over η, μ and the link derivative).
     */
   private val wExpr: Column = exp(col("a") * 0.37) / (lit(1.0) + col("b") * col("b"))
-  private val extras: Seq[Column] = Seq(sum(col("a") * col("c")), max(col("b")))
+  /** Per-row terms summed in the same pass. */
+  private val extras: Seq[Column] = Seq(col("a") * col("c"), col("b"))
 
   private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
 
@@ -110,11 +113,33 @@ class GramSpec extends SparkSpec {
       .withColumn("_gram_w", lit(1e6)).withColumn("_GRAM_y", lit(-3.0))
       .withColumn("_gram_x0", lit(7.0)).withColumn("__gram_x1", col("c") * 11.0)
       .withColumn("w", wExpr)
-    val ex = extras :+ sum(col("_gram_w"))
+    val ex = extras :+ col("_gram_w")
     val g = Gram.normal(crowded, xs, y, wExpr, ex)
     val h = Gram.normal(df.withColumn("w", wExpr), xs, y, col("w"), extras)
     assertBitEqual(g.copy(extras = g.extras.init), h)
     // an extra over a frame column still reads that column
     assert(g.extras.last == 2000 * 1e6)
+  }
+
+  test("over rows collected to the driver the sums are bit-identical and no job runs") {
+    val df = frame(parts = 1)
+    val rows = DriverRows.collect(df, SuffStats.CollapseMax).get
+    var g: Normal = null
+    val (jobs, qes) = observe { g = Gram.normal(rows, xs, y, wExpr, extras) }
+    assert(jobs == 0 && qes.isEmpty, s"$jobs jobs, ${qes.size} actions")
+    assertBitEqual(g, Gram.normal(df, xs, y, wExpr, extras))
+    // a frame above the bound is not collected
+    assert(DriverRows.collect(df, 1999).isEmpty)
+  }
+
+  test("the wide path sums its extras in its one pass, as the driver loop does") {
+    val df = frame(parts = 1)
+    val wide = (0 until Gram.maxExprWidth + 2).map(k => sin(col("id") * (0.1 + 0.01 * k)))
+    val (jobs, _) = observe(Gram.normal(df, wide, y, wExpr))
+    var g: Normal = null
+    val (jobsEx, _) = observe { g = Gram.normal(df, wide, y, wExpr, extras) }
+    assert(jobsEx == jobs, s"extras added ${jobsEx - jobs} jobs")
+    assertBitEqual(g, Gram.normal(DriverRows.collect(df, SuffStats.CollapseMax).get,
+      wide, y, wExpr, extras))
   }
 }
