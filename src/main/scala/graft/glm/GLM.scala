@@ -25,13 +25,18 @@ import org.apache.spark.sql.types.DoubleType
   *    reference launches 3–4 jobs per iteration, GLM.scala:452-462);
   *  - where the pass runs is decided once, from a verified row count: when
   *    the working frame is a table of at most [[SuffStats.CollapseMax]]
-  *    pattern rows (a discrete design's collapse, or a caller's
-  *    `countCol` frame) it is collected once and every IRLS, statistics
-  *    and null-deviance pass runs on the driver with no Spark job — the
+  *    pattern rows (a discrete design's distinct rows, found in one
+  *    bounded scan by [[SuffStats.patterns]], or a caller's `countCol`
+  *    frame) it is brought to the driver once and every IRLS, statistics
+  *    and null-deviance pass runs there with no Spark job — the
   *    reference's local fit of single-partition data (GLM.scala:254-315),
   *    but over the same column expressions, through a generated projection
   *    ([[DriverRows]]). A pass over a few thousand rows is otherwise one
-  *    Spark action, ~0.25 s of fixed cost. Any other frame is persisted and
+  *    Spark action, ~0.25 s of fixed cost. The rows are sorted by value
+  *    first, so a driver fit is bit-identical however its input was
+  *    ordered or partitioned. [[fitFormula]] finds the pattern rows before
+  *    encoding and encodes them on the driver, so a discrete formula fit
+  *    is one Spark job in all. Any other frame is persisted and
   *    each pass is one `agg` job over it; [[Gram.normal]] projects z and w
   *    once per row before its sums, and the final statistics and
   *    null-deviance passes project μ once, so no pass plans a copy of the
@@ -369,9 +374,9 @@ object GLM {
     *                  (pattern, count) sufficient statistics pass it so
     *                  every IRLS pass runs over patterns, not rows. A
     *                  frame of at most [[SuffStats.CollapseMax]] rows is
-    *                  collected once and fitted on the driver; a larger
-    *                  one is persisted and spread like any uncollapsed
-    *                  input, each pass one distributed job
+    *                  collected once, sorted, and fitted on the driver; a
+    *                  larger one is persisted and spread like any
+    *                  uncollapsed input, each pass one distributed job
     */
   def fit(
       df: DataFrame,
@@ -390,6 +395,30 @@ object GLM {
       computeStats: Boolean = true,
       countCol: Option[String] = None): GLMModel = {
     graft.plans.GraftExtensions.ensureRegistered(df.sparkSession)
+    fitOn(Left(df), xCols, yCol, family, linkName, intercept, mCol, offsetCol,
+      weightCol, tol, maxIter, verbose, initCoefs, computeStats, countCol)
+  }
+
+  /** [[fit]] over a frame (Left) or over rows already on the driver
+    * (Right, with `countCol` their replication count), which
+    * [[fitFormula]] encodes from its collapsed input.
+    */
+  private def fitOn(
+      src: Either[DataFrame, DriverRows],
+      xCols: Seq[String],
+      yCol: String,
+      family: String,
+      linkName: String,
+      intercept: Boolean,
+      mCol: Option[String],
+      offsetCol: Option[String],
+      weightCol: Option[String],
+      tol: Double,
+      maxIter: Int,
+      verbose: Boolean = false,
+      initCoefs: Option[BDV[Double]] = None,
+      computeStats: Boolean = true,
+      countCol: Option[String]): GLMModel = {
     val fam = Family(family)
     val link = LinkFn(if (linkName.isEmpty) fam.defaultLink else linkName)
 
@@ -404,29 +433,31 @@ object GLM {
         offsetCol.map(col(_).cast(DoubleType)).getOrElse(lit(0.0)).as("off"),
         weightCol.map(col(_).cast(DoubleType)).getOrElse(lit(1.0)).as("pw")) ++
       countCol.map(col(_).cast(DoubleType).as("cnt")).toSeq
-    val parallelism = df.sparkSession.sparkContext.defaultParallelism
-    val proj0 = df.select(proj: _*)
     // The pattern rows: the caller's count-carrying frame, or the
-    // sufficient-statistics collapse of a discrete design (see
-    // [[SuffStats]] for the class, the adaptive gate and its costs). When
-    // they number at most SuffStats.CollapseMax they are collected once and
-    // every pass below runs on the driver with no Spark job (see [[Gram]]).
-    var collapsed: Option[SuffStats.Collapsed] = None
-    val local: Option[DriverRows] =
-      if (countCol.isDefined) DriverRows.collect(proj0, SuffStats.CollapseMax)
-      else {
-        collapsed = SuffStats.collapse(proj0, "cnt")
-        collapsed.flatMap(c => DriverRows.collect(c.view, SuffStats.CollapseMax))
-      }
+    // sufficient-statistics table of a discrete design (one bounded scan,
+    // see [[SuffStats.patterns]]). When they number at most
+    // SuffStats.CollapseMax they are brought to the driver once and every
+    // pass below runs there with no Spark job (see [[Gram]]), over the rows
+    // sorted by value, so no sum depends on the input's row order.
+    val found: Either[DataFrame, DriverRows] = src match {
+      case Right(rows) => Right(rows.select(proj))
+      case Left(df) =>
+        val proj0 = df.select(proj: _*)
+        (if (countCol.isDefined) DriverRows.collect(proj0, SuffStats.CollapseMax)
+         else SuffStats.patterns(proj0, "cnt")).toRight(proj0)
+    }
+    val local: Option[DriverRows] = found.toOption.map(_.sorted)
     val cntOpt: Option[Column] =
-      if (countCol.isDefined || collapsed.isDefined) Some(col("cnt")) else None
+      if (countCol.isDefined || local.isDefined) Some(col("cnt")) else None
     // otherwise every pass is one aggregation over this persisted frame,
     // spread across the cluster first: a single-file source would pin
     // every IRLS pass to one task
-    val work: Option[DataFrame] = if (local.isDefined) None else Some(
+    val work: Option[DataFrame] = found.swap.toOption.map { proj0 =>
+      val parallelism = proj0.sparkSession.sparkContext.defaultParallelism
       (if (proj0.rdd.getNumPartitions >= math.max(2, parallelism / 2)) proj0
        else proj0.repartition(parallelism))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
     // scale a per-row aggregate term by the replication count (identity
     // when uncollapsed — expressions stay byte-identical to the r14 path)
     def wc(c: Column): Column = cntOpt.map(c * _).getOrElse(c)
@@ -555,10 +586,7 @@ object GLM {
 
       new GLMModel(names, yCol, intercept, fam.name, link, beta, se,
         dev, nullDev, pearson, ll, n, iterations, ixtwx)
-    } finally {
-      work.foreach(_.unpersist(blocking = false))
-      collapsed.foreach(_.unpersist())
-    }
+    } finally work.foreach(_.unpersist(blocking = false))
   }
 
   /** Formula front-end (dummy-encodes string columns first; interaction
@@ -566,6 +594,17 @@ object GLM {
     * `mCol` / `offsetCol` / `weightCol` pass through to [[fit]] and are
     * excluded from `.`-term expansion and encoding (they ride along
     * numeric-cast).
+    *
+    * A discrete input is collapsed BEFORE encoding: one bounded scan of
+    * the NA-dropped response, term and pass-through columns
+    * ([[SuffStats.patterns]]) brings at most [[SuffStats.CollapseMax]]
+    * distinct rows to the driver with their counts. The factor levels are
+    * read from those rows (in [[ModelMatrix.levels]]' order), the rows are
+    * encoded on the driver by the same column expressions, and [[fit]]
+    * runs over them with count semantics: the whole fit is that one Spark
+    * job, with no level scan, shuffle or cache. Any other input takes the
+    * distributed path: [[ModelMatrix.levels]], then [[fit]] over the
+    * encoded frame. Both give what [[fit]] gives over the encoded frame.
     */
   def fitFormula(
       df: DataFrame,
@@ -577,6 +616,7 @@ object GLM {
       weightCol: Option[String] = None,
       tol: Double = 1e-10,
       maxIter: Int = 50): GLMModel = {
+    graft.plans.GraftExtensions.ensureRegistered(df.sparkSession)
     val extras = Seq(mCol, offsetCol, weightCol).flatten.distinct
     val f0 = Formula.parse(formula)
       .resolve(df.columns.toSeq.filterNot(extras.contains))
@@ -586,13 +626,28 @@ object GLM {
     val stringCols = base.filter(c =>
       dropped.schema(c).dataType == org.apache.spark.sql.types.StringType &&
         !extras.contains(c))
-    val lv = ModelMatrix.levels(dropped, stringCols)
-    val feats = ModelMatrix.termColumns(f0.terms, lv)
-    val encoded = dropped.select(
-      col(f0.response).cast("double").as(f0.response) +:
-        (feats.map(_._2) ++ extras.map(c => col(c).cast("double").as(c))): _*)
-    fit(encoded, feats.map(_._1), f0.response, family = family, linkName = linkName,
-      intercept = f0.intercept, mCol = mCol, offsetCol = offsetCol,
-      weightCol = weightCol, tol = tol, maxIter = maxIter)
+    // (feature names, the encoded frame's columns) for given levels
+    def encoding(lv: Map[String, Array[String]]): (Seq[String], Seq[Column]) = {
+      val feats = ModelMatrix.termColumns(f0.terms, lv)
+      (feats.map(_._1), col(f0.response).cast("double").as(f0.response) +:
+        (feats.map(_._2) ++ extras.map(c => col(c).cast("double").as(c))))
+    }
+    def fitTo(src: Either[DataFrame, DriverRows], xCols: Seq[String],
+        countCol: Option[String]): GLMModel =
+      fitOn(src, xCols, f0.response, family, linkName, f0.intercept, mCol, offsetCol,
+        weightCol, tol, maxIter, countCol = countCol)
+    val cnt = SuffStats.freshName(dropped.columns.toSeq)
+    SuffStats.patterns(dropped, cnt) match {
+      case Some(rows) =>
+        val lv = stringCols.map(c =>
+          c -> ModelMatrix.levelOrder(rows.project(Seq(col(c))).map(_.getString(0)).toSeq)).toMap
+        val (names, cols) = encoding(lv)
+        // the count takes a name no encoded column has
+        val cntOut = SuffStats.freshName(names ++ extras :+ f0.response)
+        fitTo(Right(rows.select(cols :+ col(cnt).as(cntOut))), names, Some(cntOut))
+      case None =>
+        val (names, cols) = encoding(ModelMatrix.levels(dropped, stringCols))
+        fitTo(Left(dropped.select(cols: _*)), names, None)
+    }
   }
 }

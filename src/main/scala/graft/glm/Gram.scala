@@ -3,8 +3,8 @@ package graft.glm
 import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences}
-import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeSeq, BindReferences, BoundReference, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.{GenerateOrdering, GenerateUnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -143,7 +143,7 @@ object Gram {
 
   /** The same normal equations over a frame held on the driver: one
     * generated projection of x…, y, w and the extras per row, summed by
-    * the packed loop in collect order. No Spark job runs.
+    * the packed loop in row order. No Spark job runs.
     */
   private[glm] def normal(
       rows: DriverRows,
@@ -214,7 +214,7 @@ object Gram {
   }
 }
 
-/** A model-sized frame collected to the driver once, so that every later
+/** A model-sized frame brought to the driver once, so that every later
   * pass over it runs there with no Spark job (see [[Gram]]). Column
   * expressions are resolved against the frame's own plan and evaluated by
   * one generated projection per pass: the same expressions a distributed
@@ -225,27 +225,40 @@ object Gram {
   * subtree is computed by the generated code instead of folded through
   * `eval`; the two agree where such a subtree is plain arithmetic or calls
   * one function from both (negbin's `lgamma(θ)`), as in every family and
-  * link here. Rows are visited in the order `collect()`
-  * returned them, which for a one-partition frame is the order its one
-  * task scans.
+  * link here. Rows are visited in the order they were found (for
+  * [[DriverRows.collect]] of a one-partition frame, the order its one task
+  * scans) until [[sorted]] puts them in the order of their values.
   */
-private[glm] final class DriverRows private (frame: DataFrame, rows: Array[InternalRow]) {
+private[glm] final class DriverRows private[glm] (frame: DataFrame, rows: Array[InternalRow]) {
 
-  /** `cols` evaluated per row, in collect order; the returned row object
-    * is reused, so read each one before advancing.
+  /** `cols` evaluated per row, in row order; the returned row object is
+    * reused, so read each one before advancing.
     */
-  def project(cols: Seq[Column]): Iterator[InternalRow] = {
-    val proj = frame.select(cols: _*).queryExecution.analyzed match {
-      case Project(list, child) =>
-        GenerateUnsafeProjection.generate(
-          BindReferences.bindReferences(list, AttributeSeq(child.output)),
-          SQLConf.get.subexpressionEliminationEnabled)
-      case other => throw new IllegalStateException(s"not a projection:\n$other")
-    }
-    rows.iterator.map(proj)
+  def project(cols: Seq[Column]): Iterator[InternalRow] =
+    rows.iterator.map(projection(frame.select(cols: _*)))
+
+  /** `cols` evaluated per row as new driver rows: a generated projection,
+    * no Spark job (a select over a `LocalRelation` would fold through
+    * interpreted `eval`).
+    */
+  def select(cols: Seq[Column]): DriverRows = {
+    val sel = frame.select(cols: _*)
+    val proj = projection(sel)
+    new DriverRows(sel, rows.map(r => proj(r).copy(): InternalRow))
   }
 
-  /** Σ of each per-row double term, from 0.0 in collect order (a null term
+  /** The rows in ascending order of all their columns, by a generated
+    * ordering: sums over them no longer depend on how the rows were found
+    * (partitioning, input order, hash order).
+    */
+  def sorted: DriverRows = {
+    val ord = GenerateOrdering.generate(frame.schema.fields.toSeq.zipWithIndex.map {
+      case (f, i) => SortOrder(BoundReference(i, f.dataType, nullable = true), Ascending)
+    })
+    new DriverRows(frame, rows.sorted(ord))
+  }
+
+  /** Σ of each per-row double term, from 0.0 in row order (a null term
     * adds nothing) — Spark's `sum` over the same rows, bit for bit.
     */
   def sums(terms: Seq[Column]): Array[Double] = {
@@ -255,6 +268,15 @@ private[glm] final class DriverRows private (frame: DataFrame, rows: Array[Inter
       while (k < acc.length) { acc(k) += r.getDouble(k); k += 1 }
     }
     acc
+  }
+
+  /** The generated projection of a select over `frame`. */
+  private def projection(sel: DataFrame): UnsafeProjection = sel.queryExecution.analyzed match {
+    case Project(list, child) =>
+      GenerateUnsafeProjection.generate(
+        BindReferences.bindReferences(list, AttributeSeq(child.output)),
+        SQLConf.get.subexpressionEliminationEnabled)
+    case other => throw new IllegalStateException(s"not a projection:\n$other")
   }
 }
 

@@ -1,6 +1,10 @@
 package graft.glm
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, GraftSqlShim}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -14,24 +18,43 @@ import org.apache.spark.storage.StorageLevel
   * subsequent pass — at ANY input scale — runs over at most
   * `CollapseMax` pattern rows with the count as a replication weight.
   *
-  * The gate is adaptive and EXACT on the skip side: a ~20k-row sample
-  * with more distinct tuples than the cap proves the full frame has
-  * more, so continuous designs skip for the price of one small scan
-  * (one job, approx_count_distinct); a passing sample still verifies
-  * against the true grouped cardinality before committing (a sample
-  * under the cap does not bound the full frame). The collapsed frame is
-  * viewed through `coalesce(1)`. Fits that iterate over it collect it
-  * once and run their passes on the driver (GLM.fit through
-  * [[DriverRows]], Multinomial, Ordinal); the one partition fixes the
-  * collect order, which is the order one task would scan and sum it in.
-  * A pass that still runs as a Spark job over the view (ZeroInfl's
-  * E-step, NegBin's θ step) is one task instead of 32 near-empty ones
-  * (measured: the fleet of tiny tasks, not the data, dominated
-  * collapsed-fit wall time at sf0.1).
+  * Two entry points build that table:
+  *
+  *  - [[patterns]] brings it to the driver in one bounded scan. Each task
+  *    hash-counts its rows by their bytes, with floats normalized as
+  *    Spark's group-by does, and stops reading once it meets a new tuple
+  *    past the cap; the driver merges the task tables. That is one job,
+  *    with no shuffle and nothing persisted, and it is exact: it returns
+  *    the table iff the frame has at most `CollapseMax` distinct tuples,
+  *    whatever the row order or partitioning. A continuous design costs
+  *    each task ~`CollapseMax` rows. `GLM.fit` and `GLM.fitFormula` use it
+  *    and sort the rows they fit, so the order the table was found in
+  *    reaches no sum.
+  *  - [[collapse]] builds it as a cached frame, for the fits that still
+  *    run Spark jobs over the table (ZeroInfl's E-step, NegBin's θ step,
+  *    GroupedGLM's grouped passes) or collect it and replay it in collect
+  *    order (Multinomial, Ordinal). Its gate is a ~20k-row sample: one with
+  *    more distinct tuples than the cap (approx_count_distinct, one job)
+  *    proves the full frame has more, so the skip side is exact; a passing
+  *    sample is verified against the true grouped cardinality (a group-by,
+  *    a persist and a count) before committing. The frame is viewed
+  *    through `coalesce(1)`: a job over it is one task instead of 32
+  *    near-empty ones (measured: the fleet of tiny tasks, not the data,
+  *    dominated collapsed-fit wall time at sf0.1), and a collect returns
+  *    the order that one task scans. `patterns` needs neither: its table
+  *    is never a frame, and its consumers sort it.
   */
 private[glm] object SuffStats {
 
   val CollapseMax = 4096
+
+  /** A count-column name equal to none of `taken` (case-insensitively). */
+  def freshName(taken: Seq[String]): String = {
+    val lower = taken.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    var name = "cnt"
+    while (lower(name)) name = "_" + name
+    name
+  }
 
   /** `view` is the single-partition working frame (pattern rows + count);
     * `unpersist()` releases the backing cache (the view is a coalesce
@@ -39,6 +62,41 @@ private[glm] object SuffStats {
     */
   final case class Collapsed(view: DataFrame, private val handle: DataFrame) {
     def unpersist(): Unit = handle.unpersist(blocking = false)
+  }
+
+  /** `df`'s distinct rows (all columns form the pattern) on the driver,
+    * each with a double `cntCol` replication count, when there are at most
+    * `CollapseMax` of them; None otherwise. One job over `df`'s rows (see
+    * the object doc); the rows come in no particular order.
+    */
+  def patterns(df: DataFrame, cntCol: String): Option[DriverRows] = {
+    val max = CollapseMax
+    val fields = df.schema.fields.toSeq
+    val key = fields.indices.map(i =>
+      GraftSqlShim.normalizeFloats(BoundReference(i, fields(i).dataType, nullable = true)))
+    val tables = df.queryExecution.toRdd.mapPartitions { it =>
+      val proj = UnsafeProjection.create(key)
+      val counts = new java.util.HashMap[UnsafeRow, Array[Long]]
+      var over = false
+      while (!over && it.hasNext) {
+        val k = proj(it.next())
+        val c = counts.get(k)
+        if (c != null) c(0) += 1
+        else if (counts.size < max) counts.put(k.copy(), Array(1L))
+        else over = true
+      }
+      Iterator.single(if (over) None else Some(counts))
+    }.collect()
+    if (tables.exists(_.isEmpty)) return None
+    val merged = new java.util.HashMap[UnsafeRow, Array[Long]]
+    for (t <- tables.flatten; e <- t.entrySet.asScala) {
+      val c = merged.putIfAbsent(e.getKey, e.getValue)
+      if (c != null) c(0) += e.getValue()(0)
+    }
+    if (merged.size > max) return None
+    val rows = merged.entrySet.asScala.toArray.map(e =>
+      new JoinedRow(e.getKey, InternalRow(e.getValue()(0).toDouble)): InternalRow)
+    Some(new DriverRows(df.select(col("*"), lit(0.0).as(cntCol)), rows))
   }
 
   /** Collapse `df` (all columns form the pattern) to one row per

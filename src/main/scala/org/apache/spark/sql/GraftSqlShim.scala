@@ -4,9 +4,11 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Two `private[sql]` doors, opened for [[graft.Checkpointer]]:
+/** `private[sql]` doors. Most are opened for [[graft.Checkpointer]]:
   * materializing a DataFrame as an RDD of INTERNAL rows and rebuilding a
-  * DataFrame over one with truthful statistics attached.
+  * DataFrame over one with truthful statistics attached. One more,
+  * [[normalizeFloats]], gives `graft.glm.SuffStats` Spark's group-by key
+  * rule.
   *
   * `Dataset.rdd` (what the checkpointer used before) decodes every
   * InternalRow into an external `Row` — boxing each double, converting
@@ -55,6 +57,13 @@ object GraftSqlShim {
   def estimatedSizeInBytes(df: Dataset[Row]): BigInt =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution
       .optimizedPlan.stats.sizeInBytes
+
+  /** `e` as Spark's group-by keys on it: every float and double in it
+    * (inside structs and arrays too) with -0.0 read as 0.0 and every NaN
+    * as one NaN, so two values group together iff their bytes are equal.
+    */
+  def normalizeFloats(e: catalyst.expressions.Expression): catalyst.expressions.Expression =
+    catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 
   /** Materialize `rdd` (the action that makes a local checkpoint live)
     * while measuring it: returns (rowCount, exactBytes). One job — the

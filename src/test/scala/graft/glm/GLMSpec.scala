@@ -3,6 +3,7 @@ package graft.glm
 import graft.SparkSpec
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class GLMSpec extends SparkSpec {
@@ -635,5 +636,79 @@ class GLMSpec extends SparkSpec {
     val gram = stages.filter(_._2.contains("graft.glm.Gram$.normal"))
     assert(gram.nonEmpty, "no Gram pass ran as a job")
     assert(gram.map(_._1).max > 1, s"Gram stages ran on ${gram.map(_._1)} tasks")
+  }
+
+  /** A discrete design with two string factors (3 and 4 levels) and a
+    * 5-valued numeric over the Bernoulli rows.
+    */
+  private lazy val factors = bern.select($"y",
+    when($"x1" < -0.5, "lo").when($"x1" < 0.5, "mid").otherwise("hi").as("f"),
+    concat(lit("g"), floor($"x2" * 2).cast("string")).as("g"),
+    round($"x1").as("d"))
+
+  /** Every statistic of a model as raw bits, then n and the iteration count. */
+  private def fingerprint(m: GLMModel): Seq[Long] = {
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    m.coefs.toArray.map(bits).toSeq ++ m.stdErr.toArray.map(bits) ++
+      Seq(m.deviance, m.nullDeviance, m.pearson, m.loglik).map(bits) ++ Seq(m.n, m.iter.toLong)
+  }
+
+  test("a discrete fit is bit-identical whatever the input's row order and partitioning") {
+    val disc = bern.select($"y", round($"x1").as("a"), floor($"x2" * 2).as("b"))
+    def numericFits(d: DataFrame): Seq[Seq[Long]] =
+      Seq(GLM.fit(d, Seq("a", "b"), "y"), GLM.fit(d, Seq("a", "b"), "y", family = "poisson"))
+        .map(fingerprint)
+    def formulaFits(d: DataFrame): Seq[Seq[Long]] =
+      Seq(GLM.fitFormula(d, "y ~ f + g + d"), GLM.fitFormula(d, "y ~ g * d", linkName = "probit"))
+        .map(fingerprint)
+    val (numeric, formula) = (numericFits(disc), formulaFits(factors))
+    for (reorder <- Seq[DataFrame => DataFrame](_.repartition(3), _.orderBy(rand(7)))) {
+      assert(numericFits(reorder(disc)) == numeric)
+      assert(formulaFits(reorder(factors)) == formula)
+    }
+  }
+
+  test("fitFormula on a discrete string-factor design is one job, bit-identical to fit") {
+    var m: GLMModel = null
+    val (jobs, stages) = observe { m = GLM.fitFormula(factors, "y ~ f + g + d") }
+    assert(jobs == 1, s"$jobs jobs")
+    assert(!stages.exists(_._2.contains("graft.glm.ModelMatrix")),
+      "a level scan ran: " + stages.map(_._2.linesIterator.next()).mkString("; "))
+    val encoded = ModelMatrix.encode(factors)
+    assert(m.featureNames.toSeq == Seq("f_lo", "f_mid", "g_g1", "g_g2", "g_g3", "d"))
+    assert(fingerprint(m) == fingerprint(GLM.fit(encoded, m.featureNames.toSeq, "y")))
+  }
+
+  test("exactly CollapseMax distinct rows collapse and one more do not; -0.0 is 0.0") {
+    val k = SuffStats.CollapseMax
+    // `distinct` (x, y) patterns over about twice as many rows
+    def frame(distinct: Int, parts: Int) = spark.range(0, 2L * distinct + 7, 1, parts).select(
+      (($"id" % distinct) / distinct.toDouble).as("x"),
+      ($"id" % distinct % 2).cast("double").as("y"))
+    // the number of pattern rows, when there is a table
+    def patterns(df: DataFrame): Option[Double] =
+      SuffStats.patterns(df, "cnt").map(_.sums(Seq(lit(1.0))).head)
+    for (parts <- Seq(1, 4)) {
+      assert(patterns(frame(k, parts)).contains(k.toDouble))
+      assert(patterns(frame(k + 1, parts)).isEmpty)
+    }
+    def gramJobs(df: DataFrame): Int =
+      observe(GLM.fit(df, Seq("x"), "y", maxIter = 1, computeStats = false))._2
+        .count(_._2.contains("graft.glm.Gram$.normal"))
+    assert(gramJobs(frame(k, 4)) == 0)
+    assert(gramJobs(frame(k + 1, 4)) > 0)
+
+    // x = 0 is written as 0.0 on even ids and -0.0 on odd ones
+    val signed = spark.range(0, 420, 1, 4).select(
+      when($"id" % 3 =!= 0, ($"id" % 3).cast("double"))
+        .when($"id" % 2 === 0, lit(0.0)).otherwise(lit(-0.0)).as("x"),
+      when($"id" % 7 < 3, 1.0).otherwise(0.0).as("y"))
+    assert(signed.filter($"x" === 0.0).select("x").collect()
+      .map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(0))).distinct.length == 2)
+    assert(patterns(signed).contains(6.0))
+    val m = GLM.fit(signed, Seq("x"), "y")
+    assert(m.n == 420)
+    val plusZero = signed.select(($"x" + 0.0).as("x"), $"y")
+    assert(fingerprint(m) == fingerprint(GLM.fit(plusZero, Seq("x"), "y")))
   }
 }
