@@ -401,7 +401,9 @@ object GLM {
 
   /** [[fit]] over a frame (Left) or over rows already on the driver
     * (Right, with `countCol` their replication count), which
-    * [[fitFormula]] encodes from its collapsed input.
+    * [[fitFormula]] encodes from its collapsed input. `scan = false` skips
+    * the pattern scan of a frame already known to have more than
+    * [[SuffStats.CollapseMax]] distinct rows.
     */
   private def fitOn(
       src: Either[DataFrame, DriverRows],
@@ -418,7 +420,8 @@ object GLM {
       verbose: Boolean = false,
       initCoefs: Option[BDV[Double]] = None,
       computeStats: Boolean = true,
-      countCol: Option[String]): GLMModel = {
+      countCol: Option[String],
+      scan: Boolean = true): GLMModel = {
     val fam = Family(family)
     val link = LinkFn(if (linkName.isEmpty) fam.defaultLink else linkName)
 
@@ -444,7 +447,8 @@ object GLM {
       case Left(df) =>
         val proj0 = df.select(proj: _*)
         (if (countCol.isDefined) DriverRows.collect(proj0, SuffStats.CollapseMax)
-         else SuffStats.patterns(proj0, "cnt")).toRight(proj0)
+         else if (scan) SuffStats.patterns(proj0, "cnt")
+         else None).toRight(proj0)
     }
     val local: Option[DriverRows] = found.toOption.map(_.sorted)
     val cntOpt: Option[Column] =
@@ -604,7 +608,11 @@ object GLM {
     * runs over them with count semantics: the whole fit is that one Spark
     * job, with no level scan, shuffle or cache. Any other input takes the
     * distributed path: [[ModelMatrix.levels]], then [[fit]] over the
-    * encoded frame. Both give what [[fit]] gives over the encoded frame.
+    * encoded frame without a second pattern scan, so such an input is read
+    * for patterns once. Both give what [[fit]] gives over the encoded frame
+    * when the encoding keeps distinct rows distinct; where it merges some
+    * (an `a:b` product of two numerics), a raw input above the cap is
+    * fitted uncollapsed even if its encoding would fit under it.
     */
   def fitFormula(
       df: DataFrame,
@@ -635,7 +643,7 @@ object GLM {
     def fitTo(src: Either[DataFrame, DriverRows], xCols: Seq[String],
         countCol: Option[String]): GLMModel =
       fitOn(src, xCols, f0.response, family, linkName, f0.intercept, mCol, offsetCol,
-        weightCol, tol, maxIter, countCol = countCol)
+        weightCol, tol, maxIter, countCol = countCol, scan = false)
     val cnt = SuffStats.freshName(dropped.columns.toSeq)
     SuffStats.patterns(dropped, cnt) match {
       case Some(rows) =>

@@ -118,11 +118,11 @@ object Multinomial {
     * object doc. Baseline = first class in sorted order, as in
     * `nnet::multinom` (which baselines the first factor level).
     *
-    * On a discrete design (verified by [[SuffStats]]' gate) the
-    * (x…, class) contingency table is a complete sufficient statistic
-    * for the softmax likelihood, so it is collected (≤ CollapseMax rows
-    * — model-sized by the verified count, the q300 discipline) and the
-    * whole BHHH alternation replays on the driver with counts as
+    * On a discrete design the (x…, class) contingency table is a
+    * complete sufficient statistic for the softmax likelihood, so it is
+    * brought to the driver (≤ CollapseMax rows, found by
+    * [[SuffStats.patterns]]' bounded scan — the q300 discipline), sorted
+    * by value, and the whole BHHH alternation replays there with counts as
     * replication weights: ONE distributed pass total instead of one per
     * candidate step, at any input scale. The scalar math mirrors the
     * distributed column expressions term for term; continuous designs
@@ -154,15 +154,15 @@ object Multinomial {
       .select((yIdx.as("__y") +: x.zipWithIndex.map { case (c, i) =>
         c.as(s"__x$i") }): _*)
 
-    SuffStats.collapse(base0, "__cnt") match {
-      case Some(cc) =>
-        // one row per (class, x-pattern) with its count — model-sized by
-        // the verified gate; replay BHHH on the driver
-        val pats = cc.view.collect().map { r =>
+    SuffStats.patterns(base0, "__cnt") match {
+      case Some(rows) =>
+        // one row per (class, x-pattern) with its count, sorted by value so
+        // no sum below depends on the input's row order; replay BHHH on
+        // the driver
+        val pats = rows.sorted.project((base0.columns.toSeq :+ "__cnt").map(col)).map { r =>
           (r.getInt(0), Array.tabulate(pFeat)(i => r.getDouble(1 + i)),
             r.getDouble(1 + pFeat))
-        }
-        cc.unpersist()
+        }.toArray
         val n = pats.map(_._3).sum.toLong
         // per-pattern design value: intercept (1) then features — the
         // scalar twin of designCol below

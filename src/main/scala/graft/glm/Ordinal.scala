@@ -47,11 +47,11 @@ object Ordinal {
     }
   }
 
-  /** On a discrete design (verified by [[SuffStats]]' gate) the
-    * (label, x…) contingency table is a complete sufficient statistic
-    * for the cumulative-logit likelihood, so it is collected
-    * (model-sized by the verified count) and the whole BHHH alternation
-    * replays on the driver with counts as replication weights — ONE
+  /** On a discrete design the (label, x…) contingency table is a
+    * complete sufficient statistic for the cumulative-logit likelihood, so
+    * it is brought to the driver (at most `CollapseMax` rows, found by
+    * [[SuffStats.patterns]]' bounded scan), sorted by value, and the whole
+    * BHHH alternation replays there with counts as replication weights — ONE
     * distributed pass total instead of one per candidate step, at any
     * input scale. The scalar math mirrors the distributed column
     * expressions term for term; continuous designs keep the distributed
@@ -67,13 +67,13 @@ object Ordinal {
 
     val sel0 = base0.select((col(labelCol).cast("int").as("__lbl") +:
       x.zipWithIndex.map { case (c, i) => c.as(s"__x$i") }): _*)
-    SuffStats.collapse(sel0, "__cnt") match {
-      case Some(cc) =>
-        val raw = cc.view.collect().map { r =>
+    SuffStats.patterns(sel0, "__cnt") match {
+      case Some(rows) =>
+        // sorted by value, so no sum below depends on the input's row order
+        val raw = rows.sorted.project((sel0.columns.toSeq :+ "__cnt").map(col)).map { r =>
           (r.getInt(0), Array.tabulate(p)(i => r.getDouble(1 + i)),
             r.getDouble(1 + p))
-        }
-        cc.unpersist()
+        }.toArray
         val levels = raw.map(_._1).distinct.sorted.toSeq
         val k = levels.length
         require(k >= 2, s"need >= 2 ordered classes, got $levels")

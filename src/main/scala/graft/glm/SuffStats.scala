@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, GraftSqlShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -20,29 +21,32 @@ import org.apache.spark.storage.StorageLevel
   *
   * Two entry points build that table:
   *
-  *  - [[patterns]] brings it to the driver in one bounded scan. Each task
-  *    hash-counts its rows by their bytes, with floats normalized as
-  *    Spark's group-by does, and stops reading once it meets a new tuple
-  *    past the cap; the driver merges the task tables. That is one job,
-  *    with no shuffle and nothing persisted, and it is exact: it returns
-  *    the table iff the frame has at most `CollapseMax` distinct tuples,
+  *  - [[patterns]] brings it to the driver in one bounded scan. At most
+  *    one task per core (the partitions coalesced, no shuffle) hash-counts
+  *    its rows by their bytes, with floats normalized as Spark's group-by
+  *    does, and stops reading once it meets a new tuple past the cap. The
+  *    task tables are merged on the executors, at most 16 to a merge (a
+  *    shuffle of tables only past 16 tasks), so the driver takes in a few
+  *    tables of at most `CollapseMax` keys at any partition count. That
+  *    is one job, with nothing persisted, and it is exact: it returns the
+  *    table iff the frame has at most `CollapseMax` distinct tuples,
   *    whatever the row order or partitioning. A continuous design costs
-  *    each task ~`CollapseMax` rows. `GLM.fit` and `GLM.fitFormula` use it
+  *    each task ~`CollapseMax` rows. `GLM.fit`,
+  *    `GLM.fitFormula`, `Ordinal.fit` and `Multinomial.fitSoftmax` use it
   *    and sort the rows they fit, so the order the table was found in
   *    reaches no sum.
   *  - [[collapse]] builds it as a cached frame, for the fits that still
   *    run Spark jobs over the table (ZeroInfl's E-step, NegBin's θ step,
-  *    GroupedGLM's grouped passes) or collect it and replay it in collect
-  *    order (Multinomial, Ordinal). Its gate is a ~20k-row sample: one with
-  *    more distinct tuples than the cap (approx_count_distinct, one job)
-  *    proves the full frame has more, so the skip side is exact; a passing
-  *    sample is verified against the true grouped cardinality (a group-by,
-  *    a persist and a count) before committing. The frame is viewed
-  *    through `coalesce(1)`: a job over it is one task instead of 32
-  *    near-empty ones (measured: the fleet of tiny tasks, not the data,
-  *    dominated collapsed-fit wall time at sf0.1), and a collect returns
-  *    the order that one task scans. `patterns` needs neither: its table
-  *    is never a frame, and its consumers sort it.
+  *    GroupedGLM's grouped passes, the K `GLM.fit` calls of
+  *    `Multinomial.fitOneVsRest`). Its gate is a ~20k-row sample: one
+  *    whose approximate distinct count (approx_count_distinct, one job)
+  *    passes the cap by 10% skips the collapse; any other is verified
+  *    against the true grouped cardinality (a group-by, a persist and a
+  *    count) before committing. So near the cap the two entry points can
+  *    decide differently. The frame is viewed through `coalesce(1)`: a job
+  *    over it is one task instead of 32 near-empty ones (measured: the
+  *    fleet of tiny tasks, not the data, dominated collapsed-fit wall time
+  *    at sf0.1). `patterns` needs neither: its table is never a frame.
   */
 private[glm] object SuffStats {
 
@@ -67,37 +71,69 @@ private[glm] object SuffStats {
   /** `df`'s distinct rows (all columns form the pattern) on the driver,
     * each with a double `cntCol` replication count, when there are at most
     * `CollapseMax` of them; None otherwise. One job over `df`'s rows (see
-    * the object doc); the rows come in no particular order.
+    * the object doc), run as a SQL execution of `df`'s plan so that SQL
+    * listeners see it as they see any action; the rows come in no
+    * particular order.
     */
-  def patterns(df: DataFrame, cntCol: String): Option[DriverRows] = {
+  def patterns(df: DataFrame, cntCol: String): Option[DriverRows] =
+    patterns(df, cntCol, df.sparkSession.sparkContext.defaultParallelism)
+
+  /** [[patterns]] with at most `tasks` scan tasks. */
+  private[glm] def patterns(df: DataFrame, cntCol: String, tasks: Int): Option[DriverRows] = {
     val max = CollapseMax
     val fields = df.schema.fields.toSeq
     val key = fields.indices.map(i =>
       GraftSqlShim.normalizeFloats(BoundReference(i, fields(i).dataType, nullable = true)))
-    val tables = df.queryExecution.toRdd.mapPartitions { it =>
-      val proj = UnsafeProjection.create(key)
-      val counts = new java.util.HashMap[UnsafeRow, Array[Long]]
-      var over = false
-      while (!over && it.hasNext) {
-        val k = proj(it.next())
-        val c = counts.get(k)
-        if (c != null) c(0) += 1
-        else if (counts.size < max) counts.put(k.copy(), Array(1L))
-        else over = true
-      }
-      Iterator.single(if (over) None else Some(counts))
-    }.collect()
-    if (tables.exists(_.isEmpty)) return None
-    val merged = new java.util.HashMap[UnsafeRow, Array[Long]]
-    for (t <- tables.flatten; e <- t.entrySet.asScala) {
-      val c = merged.putIfAbsent(e.getKey, e.getValue)
-      if (c != null) c(0) += e.getValue()(0)
+    // b's counts added into a; None once either side or the union passed the cap
+    def merge(a: Option[Table], b: Option[Table]): Option[Table] = (a, b) match {
+      case (Some(x), Some(y)) =>
+        y.forEach { (k, c) =>
+          val cur = x.putIfAbsent(k, c)
+          if (cur != null) cur(0) += c(0)
+        }
+        if (x.size > max) None else a
+      case _ => None
     }
-    if (merged.size > max) return None
-    val rows = merged.entrySet.asScala.toArray.map(e =>
-      new JoinedRow(e.getKey, InternalRow(e.getValue()(0).toDouble)): InternalRow)
-    Some(new DriverRows(df.select(col("*"), lit(0.0).as(cntCol)), rows))
+    val qe = df.queryExecution
+    val table = SQLExecution.withNewExecutionId(qe, Some("patterns")) {
+      // at most one task per core, each scanning several partitions into
+      // one table: a continuous design then stops after ~max rows per task,
+      // not per partition, and no table of a small partition is shipped
+      val rdd = qe.toRdd
+      val scan = if (rdd.getNumPartitions > tasks) rdd.coalesce(tasks) else rdd
+      val tables = scan.mapPartitions { it =>
+        val proj = UnsafeProjection.create(key)
+        val counts = new Table
+        var over = false
+        while (!over && it.hasNext) {
+          val k = proj(it.next())
+          val c = counts.get(k)
+          if (c != null) c(0) += 1
+          else if (counts.size < max) counts.put(k.copy(), Array(1L))
+          else over = true
+        }
+        Iterator.single(if (over) None else Some(counts))
+      }
+      // merged on the executors, at most ~MergeFanIn tables per merge, so
+      // the driver receives a few tables of at most `max` keys whatever
+      // the task count; up to MergeFanIn tasks need no shuffle
+      val n = tables.getNumPartitions
+      val depth =
+        if (n <= MergeFanIn) 1 else math.ceil(math.log(n) / math.log(MergeFanIn)).toInt
+      tables.treeAggregate(Option(new Table))(merge, merge, depth)
+    }
+    table.map { t =>
+      val rows = t.entrySet.asScala.toArray.map(e =>
+        new JoinedRow(e.getKey, InternalRow(e.getValue()(0).toDouble)): InternalRow)
+      new DriverRows(df.select(col("*"), lit(0.0).as(cntCol)), rows)
+    }
   }
+
+  /** One task's pattern counts: key bytes to a one-slot count. */
+  private type Table = java.util.HashMap[UnsafeRow, Array[Long]]
+
+  /** The most per-task tables one merge in [[patterns]] takes in. */
+  private val MergeFanIn = 16
 
   /** Collapse `df` (all columns form the pattern) to one row per
     * distinct tuple with a double `cntCol` replication count, when the

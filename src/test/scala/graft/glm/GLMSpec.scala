@@ -711,4 +711,29 @@ class GLMSpec extends SparkSpec {
     val plusZero = signed.select(($"x" + 0.0).as("x"), $"y")
     assert(fingerprint(m) == fingerprint(GLM.fit(plusZero, Seq("x"), "y")))
   }
+
+  test("a discrete frame over 200 partitions collapses exactly in one scan job") {
+    // 286 (a, b, y) patterns over 40k rows
+    val df = spark.range(0, 40000, 1, 200).select(
+      ($"id" % 13).cast("double").as("a"),
+      concat(lit("b"), ($"id" / 13 % 11).cast("long").cast("string")).as("b"),
+      (($"id" * 7919) % 10 < 3).cast("double").as("y"))
+    val exact = df.groupBy("a", "b", "y").count().collect().map(r =>
+      (r.getDouble(0), r.getString(1), r.getDouble(2)) -> r.getLong(3).toDouble).toMap
+    def table(rows: Option[DriverRows]) = rows.get.project(Seq($"a", $"b", $"y", $"cnt")).map(r =>
+      (r.getDouble(0), r.getString(1), r.getDouble(2)) -> r.getDouble(3)).toMap
+    // by default one scan task per core
+    var got: Option[DriverRows] = None
+    val (jobs, stages) = observe { got = SuffStats.patterns(df, "cnt") }
+    assert(jobs == 1 && stages.map(_._1) == Seq(spark.sparkContext.defaultParallelism),
+      s"$jobs jobs, stage tasks ${stages.map(_._1)}")
+    assert(exact.size == 286 && table(got) == exact)
+    // 200 scan tasks: the driver takes in a few merged tables, not one per task
+    val (jobs200, stages200) = observe { got = SuffStats.patterns(df, "cnt", tasks = 200) }
+    assert(jobs200 == 1 && stages200.exists(_._1 == 200) && stages200.last._1 <= 32,
+      s"$jobs200 jobs, stage tasks ${stages200.map(_._1)}")
+    assert(table(got) == exact)
+    assert(fingerprint(GLM.fitFormula(df, "y ~ a + b")) ==
+      fingerprint(GLM.fitFormula(df.coalesce(1), "y ~ a + b")))
+  }
 }

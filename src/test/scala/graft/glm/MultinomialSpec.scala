@@ -138,4 +138,13 @@ class MultinomialSpec extends SparkSpec {
     for (c <- 0 until 2; j <- 0 until 3)
       assert(math.abs(a.beta(c)(j) - b.beta(c)(j)) < 1e-9)
   }
+
+  test("a collapsed fitSoftmax is bit-identical whatever the input's row order and partitioning") {
+    val df = softRows.toDF("x1", "x2", "cls")
+    def bits(m: Multinomial.SoftmaxModel): Seq[Long] =
+      (m.beta.flatten :+ m.loglik).map(java.lang.Double.doubleToRawLongBits).toSeq
+    val a = bits(Multinomial.fitSoftmax(df, Seq("x1", "x2"), "cls"))
+    assert(bits(Multinomial.fitSoftmax(df.repartition(7), Seq("x1", "x2"), "cls")) == a)
+    assert(bits(Multinomial.fitSoftmax(df.orderBy(rand(7)), Seq("x1", "x2"), "cls")) == a)
+  }
 }

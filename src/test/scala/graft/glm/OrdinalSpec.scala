@@ -97,4 +97,14 @@ class OrdinalSpec extends SparkSpec {
     assert(math.abs(a.beta(0) - b.beta(0)) < 1e-10)
     assert(math.abs(a.thresholds(0) - b.thresholds(0)) < 1e-10)
   }
+
+  test("a collapsed fit is bit-identical whatever the input's row order and partitioning") {
+    // 300 distinct (y, x) rows: a pattern table of count-1 rows
+    val df = data3.toDF("y", "x")
+    def bits(m: Ordinal.OrdinalModel): Seq[Long] =
+      (m.thresholds ++ m.beta :+ m.loglik).map(java.lang.Double.doubleToRawLongBits).toSeq
+    val a = bits(Ordinal.fit(df, "y", Seq("x")))
+    assert(bits(Ordinal.fit(df.repartition(9), "y", Seq("x"))) == a)
+    assert(bits(Ordinal.fit(df.orderBy(rand(7)), "y", Seq("x"))) == a)
+  }
 }
