@@ -46,17 +46,18 @@ import org.apache.spark.sql.catalyst.InternalRow
   * engine's bytes-per-task split ([[graft.ops.splitBytes]], the 128 KB
   * `fanOut` split, measured at two scales in r15), and `close()` restores
   * it the same way. AQE's default floor is 1 MB, and a loop round's
-  * shuffle is usually smaller: [[graft.ops.Graph.labelPropagation]] over
-  * 100k edges shuffles 0.1–1.3 MB per round, so AQE folded every round
-  * into one or two tasks while the other cores sat idle (31 jobs on 47
-  * tasks, executor utilization 0.16 in one traced op, local[4]). With
-  * the floor each loop shuffle gets max(bytes / parallelism, 128 KB) per
-  * partition. Together with that op's one-shuffle round a traced op ran
-  * 22 jobs on 96 tasks at utilization 0.39, and its time per round fell
-  * from 0.85 to 0.62 s. The floor pays off there because the single
-  * shuffle carries every vote: against the same round without the floor
-  * the op's median fell from 8.5 to 7.5 s (5 of 6 runs), while with the
-  * old two-exchange round it did not move (5 of 9). Partition counts
+  * shuffle is usually smaller: a [[graft.ops.Graph.labelPropagation]]
+  * round that shuffled its votes over 100k edges moved 0.1–1.3 MB, so
+  * AQE folded every round into one or two tasks while the other cores
+  * sat idle (31 jobs on 47 tasks, executor utilization 0.16 in one
+  * traced op, local[4]). With the floor each loop shuffle gets
+  * max(bytes / parallelism, 128 KB) per partition. Measured on that
+  * round body with one vote shuffle per round: a traced op ran 22 jobs
+  * on 96 tasks at utilization 0.39, its time per round fell from 0.85
+  * to 0.62 s, and its median fell from 8.5 to 7.5 s against the same
+  * body without the floor (5 of 6 runs); with the older two-exchange
+  * round the floor did not move the op (5 of 9). That op now shuffles
+  * only its edges, once, and no longer each round. Partition counts
   * decide the order of floating-point sums, so the floor must never
   * outlive the loop that set it.
   *
@@ -126,6 +127,16 @@ private[graft] final class Checkpointer private (spark: SparkSession,
   }
   private var pinned: List[RDD[InternalRow]] = Nil
 
+  /** [[pin]] for a frame that the loop groups by its partitioning key:
+    * the pinned frame reports the partitioning it was computed with
+    * (hash of that key), so those groupings add no exchange.
+    */
+  def pinPartitioned(df: DataFrame): DataFrame = {
+    val out = checkpointRdd(df, serialized = true, partitioned = true)
+    pinned ::= out._2
+    out._1
+  }
+
   /** Checkpoint a generation that BACKS the returned result — tracked
     * nowhere, never freed by [[close]]; like the final [[apply]]
     * generation it lives until the RDD is garbage-collected. For
@@ -164,14 +175,14 @@ private[graft] final class Checkpointer private (spark: SparkSession,
     * state). Generation-chain frames ([[apply]]) stay deserialized:
     * they are short-lived and re-read in the hot loop.
     */
-  private def checkpointRdd(df: DataFrame,
-      serialized: Boolean = false): (DataFrame, RDD[InternalRow], Long) = {
+  private def checkpointRdd(df: DataFrame, serialized: Boolean = false,
+      partitioned: Boolean = false): (DataFrame, RDD[InternalRow], Long) = {
     // INTERNAL rows end to end (GraftSqlShim): `df.rdd` would decode every
     // row to an external Row here and re-encode it on every downstream
     // read — pure per-row overhead for a frame only Spark itself touches.
     // (Partitioning/ordering preservation was tried and measured a net
     // loss — see the GraftSqlShim scaladoc; only exact statistics ride
-    // along.)
+    // along, unless a loop-invariant frame asks for its partitioning.)
     val rdd = GraftSqlShim.toInternalRdd(df)
     if (reliable) rdd.checkpoint()
     else {
@@ -182,7 +193,8 @@ private[graft] final class Checkpointer private (spark: SparkSession,
     // materialize now (so the predecessor can be freed), measuring exact
     // row count + bytes in the same job for truthful planner statistics
     val (n, bytes) = GraftSqlShim.materializeCounted(rdd, df.schema)
-    (GraftSqlShim.fromInternalRdd(df, rdd, Some((n, bytes))), rdd, n)
+    (GraftSqlShim.fromInternalRdd(df, rdd, Some((n, bytes)), partitioned),
+      rdd, n)
   }
 
   private def clean(r: RDD[InternalRow]): Unit = if (r != null) {

@@ -2,7 +2,7 @@ package graft.glm
 
 import breeze.linalg.{DenseVector => BDV}
 import org.apache.commons.math3.distribution.{NormalDistribution, TDistribution}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.types.DoubleType
@@ -454,11 +454,15 @@ object GLM {
     val cntOpt: Option[Column] =
       if (countCol.isDefined || local.isDefined) Some(col("cnt")) else None
     // otherwise every pass is one aggregation over this persisted frame,
-    // spread across the cluster first: a single-file source would pin
-    // every IRLS pass to one task
+    // spread across the cluster first (a single-file source would pin
+    // every IRLS pass to one task), or merged down to one task per core
+    // without a shuffle (every pass over many small partitions pays a
+    // task per partition)
     val work: Option[DataFrame] = found.swap.toOption.map { proj0 =>
       val parallelism = proj0.sparkSession.sparkContext.defaultParallelism
-      (if (proj0.rdd.getNumPartitions >= math.max(2, parallelism / 2)) proj0
+      val parts = GraftSqlShim.numOutputPartitions(proj0)
+      (if (parts > parallelism) proj0.coalesce(parallelism)
+       else if (parts >= math.max(2, parallelism / 2)) proj0
        else proj0.repartition(parallelism))
         .persist(StorageLevel.MEMORY_AND_DISK)
     }

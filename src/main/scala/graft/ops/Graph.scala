@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,61 +17,11 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Order-preserving node dictionary (guide §2.3 "narrower types —
-    * shuffle fewer bytes"): string node ids are re-shuffled by EVERY
-    * round of the iterative ops below, paying variable-length payload
-    * bytes plus string hashing/comparison in each exchange and hash
-    * aggregate. A dense long id halves the shuffle payload and makes
-    * the per-round keys fixed-width. Ids are assigned by DISTRIBUTED
-    * sort + zipWithIndex (no single-partition window), so `nid` order ==
-    * string order and min/label-tie semantics survive encoding; the
-    * dict is pinned through the caller's Checkpointer, whose exact
-    * Statistics let the encode/decode joins auto-broadcast when small.
-    * Returns None (op runs unencoded) when the id column is not a
-    * string.
-    *
-    * OFF by default (`spark.graft.graph.longIds=true` enables): measured
-    * at sf0.1/local[32] the dict build (distinct + sort + zipWithIndex)
-    * plus encode/decode joins cost MORE than the narrower per-round
-    * shuffles save (q176 5.85 → 8.29 s, q122 3.65 → 4.85 s min-of-4;
-    * shuffle bytes −25%, 87 → 66 MB). The trade inverts when
-    * iterations × shuffle volume dwarf the one-time dict build — long
-    * production runs over big graphs with fat string ids (URLs, UUIDs)
-    * — so it ships as a production knob, not a local default.
-    * GraphLongIdSpec pins flag-on/off result parity.
-    */
-  private def nodeDict(cp: graft.Checkpointer, edges: DataFrame,
-      cols: Seq[String]): Option[DataFrame] = {
-    import org.apache.spark.sql.types.StringType
-    if (!edges.sparkSession.conf.getOption("spark.graft.graph.longIds")
-        .exists(_.toBoolean)) return None
-    if (!cols.forall(c => edges.schema(c).dataType == StringType)) return None
-    val nodes = cols.map(c => edges.select(col(c).as("node")))
-      .reduce(_ unionAll _).distinct().orderBy("node")
-    val spark = edges.sparkSession
-    val enc = org.apache.spark.sql.Encoders.STRING
-    val withIds = nodes.select(col("node")).as(enc).rdd
-      .zipWithIndex()
-    import spark.implicits._
-    Some(cp.pin(withIds.toDF("node", "nid")))
-  }
-
-  /** Edges whose endpoints are both non-null: [[encodeCol]]'s inner
-    * joins drop a null endpoint, so the ops that can encode drop such
-    * edges on both paths to return the same rows either way.
+  /** Edges whose endpoints are both non-null: no null node can appear in
+    * the result of an op that drops them first.
     */
   private def dropNullEnds(edges: DataFrame): DataFrame =
     edges.filter(col("u").isNotNull && col("v").isNotNull)
-
-  /** Replace string column `c` of `df` with its dict id (same name). */
-  private def encodeCol(df: DataFrame, dict: DataFrame, c: String): DataFrame =
-    df.join(dict.select(col("node").as(c), col("nid").as(s"__$c")), c)
-      .drop(c).withColumnRenamed(s"__$c", c)
-
-  /** Inverse of [[encodeCol]]. */
-  private def decodeCol(df: DataFrame, dict: DataFrame, c: String): DataFrame =
-    df.join(dict.select(col("nid").as(c), col("node").as(s"__$c")), c)
-      .drop(c).withColumnRenamed(s"__$c", c)
 
   /** k-core decomposition by iterative peeling on an UNDIRECTED graph
     * (edge list `(u, v)`; duplicates, self-loops and both orientations
@@ -314,19 +264,32 @@ object Graph {
     * engine-reproducible (asynchronous LPA is not). Nodes with no
     * out-edges keep their label.
     *
-    * One round = one equi-join, then ONE shuffle of its (node, label)
-    * rows by node, after which the vote count and the arg-max run in the
-    * same stage.
+    * One round = one stage, with no shuffle. The distinct edges are
+    * shuffled ONCE, by `u`, and pinned through the [[graft.Checkpointer]]
+    * with that partitioning. The state is one (u, label) row per node
+    * with an out-edge: round 1 reads label = v with no join, and round i
+    * left-joins the edges to the broadcast previous state on `v` (a `v`
+    * with no out-edges is not in it and votes with its own id). The vote
+    * count and the arg-max then group by keys that start with `u`, inside
+    * the edges' partitions (the arg-max is a sort aggregate, so each
+    * round sorts its votes within a partition). Nodes that appear only as
+    * `v` never update, so they are added once, to the final generation.
+    *
+    * The state is broadcast only while the pinned edges are within
+    * `spark.sql.autoBroadcastJoinThreshold` by their measured size (the
+    * planner's own test for broadcasting them): the state has at most one
+    * row per edge, with an edge row's column types, so that size bounds
+    * it. Above the threshold the join is left to the planner, which
+    * shuffles both sides.
+    *
     * Fixed `rounds`, no convergence probe: the analytical use runs a
     * handful of rounds, and a fixed count keeps the oracle unrollable.
     * Rounds share compiled stages: the [[graft.Checkpointer]] keeps
-    * stage ids out of generated class names, so from round 3 on every
-    * round's codegen is a cache hit (a 10-round run over 100k edges went
-    * from 85–118 janino compiles per op to 0).
+    * stage ids out of generated class names, so every round between the
+    * second and the last runs the second round's compiled stage.
     *
-    * Edges with a NULL `u` or `v` are dropped before either id path, so
-    * no null node appears in the result and `spark.graft.graph.longIds`
-    * (whose encode joins would drop them anyway) returns the same rows.
+    * Edges with a NULL `u` or `v` are dropped, so no null node appears in
+    * the result.
     *
     * @return (u, label) for every node that appears in a non-null edge
     */
@@ -334,61 +297,30 @@ object Graph {
       checkpointEvery: Int = 0): DataFrame = {
     require(rounds >= 1, "need at least one round")
     graft.Checkpointer.using(edges.sparkSession, None) { cp =>
-      val nonNull = dropNullEnds(edges)
-      // long node ids for the per-round shuffles (see [[nodeDict]]): the
-      // vote counts are exact integers and nid order == string order, so
-      // the (n desc, label asc) winner is identical under encoding
-      val dictOpt = nodeDict(cp, nonNull, Seq("u", "v"))
-      val rawE = nonNull.select(col("u"), col("v")).distinct()
-      val e = cp.pin(dictOpt match {
-        case Some(d) => encodeCol(encodeCol(rawE, d, "u"), d, "v")
-        case None => rawE
-      })
-      val nodes = e.select(col("u"))
-        .unionAll(e.select(col("v").as("u"))).distinct()
-      // a node with no out-edges never updates: its label stays its own id
-      // for the whole run, so the sink frame is STATIC — unioning it back
-      // each round keeps every generation a single-consumer lazy chain
-      // (a coalesce-join against the previous labels would consume each
-      // generation twice and replay the whole prefix per round, the
-      // dangling-PageRank lesson)
-      val sinkLabels = cp.pin(
-        nodes.join(e.select(col("u")).distinct(), Seq("u"), "left_anti")
-          .select(col("u"), col("u").as("label")))
-      var labels = nodes.select(col("u"), col("u").as("label"))
-      for (i <- 1 to rounds) {
-        // the join output is shuffled once by u (no partition count, so AQE
-        // sizes it under the Checkpointer's coalesce floor), and both
-        // aggregations below group by keys that start with u, so neither
-        // adds an exchange. This gives up the partial count before the
-        // shuffle (it carries one row per edge, not per (u, label)); the
-        // second exchange per round cost more than that on skewed graphs
-        // of 100k and 500k edges (op median 7.7 → 5.9 s and 21.4 → 14.2 s)
-        val votes = e
-          .join(labels.select(col("u").as("v"), col("label")), "v")
-          .repartition(col("u"))
-          .groupBy("u", "label").agg(count(lit(1)).as("n"))
-        // arg-max by (n desc, label asc) as a MIN over (−n, label) structs:
-        // same winner as a rank-1 window (struct comparison is
-        // lexicographic), without sorting every vote row per u
-        val adopted = votes
-          .groupBy("u").agg(min(struct((-col("n")).as("nn"),
-            col("label"))).as("__best"))
-          .select(col("u"), col("__best.label").as("label"))
-        val next = adopted.unionByName(sinkLabels)
-        labels =
-          if (i == rounds || (checkpointEvery > 0 && i % checkpointEvery == 0))
-            cp(next)
-          else next
+      val e = cp.pinPartitioned(dropNullEnds(edges)
+        .select(col("u"), col("v")).repartition(col("u")).distinct())
+      val bcast = GraftSqlShim.withinBroadcastThreshold(e)
+      // arg-max by (n desc, label asc) as a MIN over (−n, label) structs:
+      // same winner as a rank-1 window (struct comparison is
+      // lexicographic), without sorting every vote row per u
+      def adopt(votes: DataFrame): DataFrame = votes
+        .groupBy("u", "label").agg(count(lit(1)).as("n"))
+        .groupBy("u").agg(min(struct((-col("n")).as("nn"),
+          col("label"))).as("__best"))
+        .select(col("u"), col("__best.label").as("label"))
+      var state = adopt(e.select(col("u"), col("v").as("label")))
+      for (i <- 2 to rounds) {
+        // the checkpointEvery cadence cuts the lineage after round i − 1
+        if (checkpointEvery > 0 && (i - 1) % checkpointEvery == 0)
+          state = cp(state)
+        val prev = state.select(col("u").as("v"), col("label").as("__l"))
+        state = adopt(e
+          .join(if (bcast) broadcast(prev) else prev, Seq("v"), "left")
+          .select(col("u"), coalesce(col("__l"), col("v")).as("label")))
       }
-      // decode (and materialize) BEFORE close() frees the pinned dict
-      val out = dictOpt match {
-        case Some(d) =>
-          cp(decodeCol(decodeCol(labels, d, "label"), d, "u")
-            .select(col("u"), col("label")))
-        case None => labels
-      }
-      out
+      val sinks = e.select(col("v").as("u"))
+        .join(e.select(col("u")).distinct(), Seq("u"), "left_anti").distinct()
+      cp(state.unionByName(sinks.select(col("u"), col("u").as("label"))))
     }
   }
 
@@ -571,9 +503,8 @@ object Graph {
     * per iteration, carried as a broadcast one-row frame (no driver
     * action, the loop stays fully declarative).
     *
-    * Edges with a NULL `u` or `v` are dropped before either id path, so
-    * no null node appears in the result and `spark.graft.graph.longIds`
-    * (whose encode joins would drop them anyway) returns the same rows.
+    * Edges with a NULL `u` or `v` are dropped, so no null node appears in
+    * the result.
     *
     * @return (u, rank) for every node of a non-null edge, Σ rank = 1
     *         (float tolerance)
@@ -587,13 +518,7 @@ object Graph {
     // lazy plan (a distinct, a filter over a big fact) — pin it ONCE so
     // all consumers read a materialized frame
     graft.Checkpointer.using(edges.sparkSession, None) { cp =>
-      val nonNull = dropNullEnds(edges)
-      // long node ids for the per-iteration shuffles (see [[nodeDict]])
-      val dictOpt = nodeDict(cp, nonNull, Seq("u", "v"))
-      val e = cp.pin(dictOpt match {
-        case Some(d) => encodeCol(encodeCol(nonNull, d, "u"), d, "v")
-        case None => nonNull
-      })
+      val e = cp.pin(dropNullEnds(edges))
       val deg = e.groupBy("u").agg(count(lit(1)).as("d"))
       // dangling detection: does any edge TARGET a node that never appears
       // as a source? One anti-join probe with a `take(1)` short circuit
@@ -603,7 +528,7 @@ object Graph {
         .join(deg.select(col("u").as("__s")), col("v") === col("__s"),
           "left_anti")
         .isEmpty
-      val ranksOut = if (!hasDangling) {
+      if (!hasDangling) {
         // node universe ≡ source keys; scalar metadata via one count job
         val n = deg.count()
         // closed graph (every node is a source — always true for
@@ -657,14 +582,6 @@ object Graph {
         }
         ranks
       }
-      // decode (and materialize) BEFORE close() frees the pinned dict;
-      // the final generation backs the result and stays alive
-      val out = dictOpt match {
-        case Some(d) =>
-          cp(decodeCol(ranksOut, d, "u").select(col("u"), col("r")))
-        case None => ranksOut
-      }
-      out
     }
   }
 

@@ -47,42 +47,26 @@ object LoopPlanDump {
     }
 
     // mirror Graph.labelPropagation's loop body (round 2 shape: the
-    // labels side is a materialized generation, as mid-loop rounds see
-    // after a checkpoint); `longIds` mirrors the production knob
-    def dumpLoopBody(name: String, longIds: Boolean): Unit =
+    // state side is a materialized generation, as mid-loop rounds see
+    // after a checkpoint; the state is broadcast, as the op does when the
+    // edges are within the broadcast threshold)
+    def dumpLoopBody(name: String): Unit =
       graft.Checkpointer.using(spark, None) { cp =>
-        val edges = q176Edges
-        val rawE = edges.select(col("u"), col("v")).distinct()
-        val e = cp.pin(if (!longIds) rawE else {
-          val nodes = Seq("u", "v").map(c => edges.select(col(c).as("node")))
-            .reduce(_ unionAll _).distinct().orderBy("node")
-          val withIds = nodes.select(col("node"))
-            .as(org.apache.spark.sql.Encoders.STRING).rdd.zipWithIndex()
-          import spark.implicits._
-          val dict = cp.pin(withIds.toDF("node", "nid"))
-          def enc(df: org.apache.spark.sql.DataFrame, c: String) =
-            df.join(dict.select(col("node").as(c), col("nid").as(s"__$c")), c)
-              .drop(c).withColumnRenamed(s"__$c", c)
-          enc(enc(rawE, "u"), "v")
-        })
-        val nodes = e.select(col("u"))
-          .unionAll(e.select(col("v").as("u"))).distinct()
-        val labels = cp(nodes.select(col("u"), col("u").as("label")))
-        val votes = e
-          .join(labels.select(col("u").as("v"), col("label")), "v")
-          .repartition(col("u"))
+        val e = cp.pinPartitioned(q176Edges.select(col("u"), col("v"))
+          .repartition(col("u")).distinct())
+        def adopt(votes: org.apache.spark.sql.DataFrame) = votes
           .groupBy("u", "label").agg(count(lit(1)).as("n"))
-        dump(name, votes
           .groupBy("u").agg(min(struct((-col("n")).as("nn"),
             col("label"))).as("__best"))
-          .select(col("u"), col("__best.label").as("label")))
+          .select(col("u"), col("__best.label").as("label"))
+        val prev = cp(adopt(e.select(col("u"), col("v").as("label"))))
+          .select(col("u").as("v"), col("label").as("__l"))
+        dump(name, adopt(e.join(broadcast(prev), Seq("v"), "left")
+          .select(col("u"), coalesce(col("__l"), col("v")).as("label"))))
       }
 
     queries.foreach {
-      case "q176_label_prop" =>
-        dumpLoopBody("q176_label_prop_loopbody", longIds = false)
-      case "q176_label_prop_longids" =>
-        dumpLoopBody("q176_label_prop_loopbody_longids", longIds = true)
+      case "q176_label_prop" => dumpLoopBody("q176_label_prop_loopbody")
       case other =>
         System.err.println(s"[loopplan] no loop-body recipe for $other")
     }

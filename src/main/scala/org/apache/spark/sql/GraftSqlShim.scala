@@ -33,7 +33,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * and their per-file work (q200 k-core 9.5 s → 29 s, task time 3.4 s →
   * 849 s, thread dumps pinned in BypassMergeSortShuffleWriter file
   * churn). The statistics, by contrast, are a pure win — see
-  * [[materializeCounted]].
+  * [[materializeCounted]]. A loop-invariant frame that every round
+  * groups by its key can still ask for its partitioning
+  * ([[fromInternalRdd]]'s `partitioned`).
   */
 object GraftSqlShim {
 
@@ -88,13 +90,27 @@ object GraftSqlShim {
     }
   }
 
+  /** Whether the planner would broadcast `df` on its size estimate:
+    * within `spark.sql.autoBroadcastJoinThreshold` (negative: never).
+    */
+  def withinBroadcastThreshold(df: Dataset[Row]): Boolean = {
+    val limit = df.sparkSession.asInstanceOf[classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
+    limit >= 0 && estimatedSizeInBytes(df) <= limit
+  }
+
   /** Rebuild a DataFrame over a MATERIALIZED internal-row RDD of
     * `origin`'s rows, carrying exact measured statistics (sizeInBytes
-    * floor of 1 keeps an empty frame from reading as "free").
+    * floor of 1 keeps an empty frame from reading as "free"). With
+    * `partitioned` the frame reports the output partitioning of the plan
+    * that produced `rdd` (`toInternalRdd(origin)`, already executed, so
+    * under AQE the final plan's), so a consumer that groups by that key
+    * adds no exchange.
     */
   def fromInternalRdd(origin: Dataset[Row],
       rdd: RDD[InternalRow],
-      stats: Option[(Long, Long)] = None): Dataset[Row] = {
+      stats: Option[(Long, Long)] = None,
+      partitioned: Boolean = false): Dataset[Row] = {
     val ds = origin.asInstanceOf[classic.Dataset[Row]]
     val originStats = stats.map { case (n, bytes) =>
       // The planner compares sizeInBytes directly against
@@ -109,9 +125,15 @@ object GraftSqlShim {
         sizeInBytes = BigInt(math.max(4L * bytes, 1L)),
         rowCount = Some(BigInt(n)))
     }
+    val partitioning =
+      if (!partitioned) catalyst.plans.physical.UnknownPartitioning(0)
+      else ds.queryExecution.executedPlan match {
+        case a: execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan.outputPartitioning
+        case p => p.outputPartitioning
+      }
     classic.Dataset.ofRows(ds.sparkSession,
-      LogicalRDD(ds.logicalPlan.output, rdd,
-        catalyst.plans.physical.UnknownPartitioning(0), Nil,
+      LogicalRDD(ds.logicalPlan.output, rdd, partitioning, Nil,
         isStreaming = false)(ds.sparkSession, originStats))
   }
 }

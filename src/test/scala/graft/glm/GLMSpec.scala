@@ -638,6 +638,24 @@ class GLMSpec extends SparkSpec {
     assert(gram.map(_._1).max > 1, s"Gram stages ran on ${gram.map(_._1)} tasks")
   }
 
+  test("a distributed fit over 200 partitions runs a task per core, same fit") {
+    // a continuous design: every IRLS pass runs as a job over the frame
+    def frame(parts: Int) = spark.range(0, 10000, 1, parts).select(
+      sin($"id" * 0.37).as("x1"), (($"id" * 7919) % 1000 / 1000.0).as("x2"),
+      (sin($"id" * 1.3) + sin($"id" * 0.37) > 0.2).cast("double").as("y"))
+    var wide: GLMModel = null
+    val (_, stages) = observe { wide = GLM.fit(frame(200), Seq("x1", "x2"), "y") }
+    val cores = spark.sparkContext.defaultParallelism
+    val gram = stages.filter(_._2.contains("graft.glm.Gram$.normal"))
+    assert(gram.nonEmpty && stages.forall(_._1 <= cores),
+      s"stage tasks ${stages.map(_._1)} on $cores cores")
+    val narrow = GLM.fit(frame(16), Seq("x1", "x2"), "y")
+    assert(wide.iter == narrow.iter)
+    wide.coefs.toArray.zip(narrow.coefs.toArray).foreach { case (a, b) =>
+      assert(math.abs(a - b) <= 1e-9 * math.abs(b), s"$a vs $b")
+    }
+  }
+
   /** A discrete design with two string factors (3 and 4 levels) and a
     * 5-valued numeric over the Bernoulli rows.
     */

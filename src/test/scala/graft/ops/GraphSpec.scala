@@ -164,43 +164,118 @@ class GraphSpec extends SparkSpec {
 
   test("labelPropagation: rounds share compiled stages (no codegen per extra round)") {
     // without id-free class names every round of the lazy chain gets new
-    // whole-stage-codegen stage numbers, so rounds 3-8 would each compile
+    // whole-stage-codegen stage numbers, so rounds 4-8 would each compile.
+    // The warm-up holds every shape of a round: round 1 has no join, the
+    // last round's state is not broadcast, and a middle round's state (a
+    // join, broadcast into the next round) first appears with 3 rounds
     val und = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"))
     val edges = (und ++ und.map(_.swap)).toDF("u", "v")
-    Graph.labelPropagation(edges, rounds = 2) // warm-up: rounds 1 and 2
+    Graph.labelPropagation(edges, rounds = 3) // warm-up: rounds 1 to 3
     val compiles = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME
     val before = compiles.getCount
     Graph.labelPropagation(edges, rounds = 8)
     assert(compiles.getCount === before,
-      s"${compiles.getCount - before} codegen compiles in rounds 3-8")
+      s"${compiles.getCount - before} codegen compiles in rounds 4-8")
   }
 
-  test("labelPropagation: one shuffle per round (an extra round is one more job)") {
-    // under AQE every shuffle stage runs as a job of its own, and the
-    // broadcast of the pinned edges is reused across rounds, so the job
-    // count grows by the number of exchanges per round
-    val und = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"))
-    val edges = (und ++ und.map(_.swap)).toDF("u", "v")
-    def jobs(rounds: Int): Int = {
-      val sc = spark.sparkContext
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      org.apache.spark.TestBus.drain(sc)
-      sc.addSparkListener(l)
-      try {
-        Graph.labelPropagation(edges, rounds)
-        org.apache.spark.TestBus.drain(sc)
-      } finally sc.removeSparkListener(l)
-      n.get
+  /** Runs `f`; returns the jobs it started and the shuffle bytes its
+    * tasks wrote.
+    */
+  private def observe(f: => Unit): (Int, Long) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
-    val two = jobs(2)
-    val three = jobs(3)
-    assert(three - two === 1, s"rounds = 2 ran $two jobs, rounds = 3 ran $three")
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(l)
+    try { f; org.apache.spark.TestBus.drain(sc) }
+    finally sc.removeSparkListener(l)
+    (jobs.get, bytes.get)
+  }
+
+  test("labelPropagation: a round is one broadcast job and shuffles nothing") {
+    // the edges are shuffled by u once; every round broadcasts the state
+    // (one job under AQE) and votes inside the edges' partitions
+    val und = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"))
+    val edges = ((und ++ und.map(_.swap)) :+ ("e", "f")).toDF("u", "v")
+    val (jobs2, bytes2) = observe(Graph.labelPropagation(edges, 2))
+    val (jobs6, bytes6) = observe(Graph.labelPropagation(edges, 6))
+    assert(jobs6 - jobs2 === 4, s"rounds = 2 ran $jobs2 jobs, rounds = 6 ran $jobs6")
+    assert(bytes2 > 0 && bytes6 === bytes2,
+      s"rounds = 2 wrote $bytes2 shuffle bytes, rounds = 6 wrote $bytes6")
+  }
+
+  /** Synchronous LPA on the driver: a node with out-edges adopts the most
+    * frequent label among its distinct out-neighbours, ties to the
+    * smallest; a node without out-edges keeps its own id.
+    */
+  private def lpaReference(edges: Seq[(String, String)],
+      rounds: Int): Map[String, String] = {
+    val adj = edges.distinct.groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2) }
+    var label = edges.flatMap { case (u, v) => Seq(u, v) }.map(n => n -> n).toMap
+    for (_ <- 1 to rounds) {
+      val prev = label
+      label = prev.map { case (u, own) =>
+        u -> adj.get(u).fold(own)(_.groupBy(prev).map { case (l, ls) =>
+          l -> ls.size }.minBy { case (l, n) => (-n, l) }._1)
+      }
+    }
+    label
+  }
+
+  test("labelPropagation: no-broadcast run equals broadcast run and driver LPA") {
+    // 2k skewed edges (cubed-uniform targets) from 300 sources into 400
+    // nodes, so n300..n399 are sinks
+    val rng = new scala.util.Random(17)
+    val pairs = Seq.fill(2000)((f"n${rng.nextInt(300)}%03d",
+      f"n${(math.pow(rng.nextDouble(), 3) * 400).toInt}%03d"))
+    val edges = pairs.toDF("u", "v")
+    def run(): Map[String, String] = Graph.labelPropagation(edges, rounds = 4)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val caller = spark.conf.getAll.get(key)
+    val plain = {
+      spark.conf.set(key, "-1")
+      try run() finally caller.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val ref = lpaReference(pairs, 4)
+    assert(ref.keySet.exists(_ >= "n300"))
+    assert(plain === ref)
+    assert(run() === ref)
+  }
+
+  test("null endpoints: LPA and pageRank drop the edge, no null node appears") {
+    val base = spark.range(0, 400).select(
+      concat(lit("p"), col("id") % 40).as("u"),
+      concat(lit("s"), col("id") % 7).as("v"))
+    val edges = base.unionByName(base.select(col("v").as("u"), col("u").as("v")))
+      .distinct()
+    // "pz" occurs only in an edge with a null end, so it must vanish too
+    val withNulls = edges.unionByName(Seq[(String, String)](("p1", null),
+      (null, "s2"), (null, null), ("pz", null)).toDF("u", "v"))
+    def run(e: org.apache.spark.sql.DataFrame) = (
+      Graph.labelPropagation(e, rounds = 3).orderBy("u").collect(),
+      Graph.pageRank(e, iters = 3).orderBy("u").collect())
+    val (lp, pr) = run(withNulls)
+    val (lpClean, prClean) = run(edges)
+    assert(lp.toSeq === lpClean.toSeq)
+    assert(pr.map(_.getString(0)).toSeq === prClean.map(_.getString(0)).toSeq)
+    pr.zip(prClean).foreach { case (a, b) =>
+      assert(math.abs(a.getDouble(1) - b.getDouble(1)) < 1e-9)
+    }
+    for (rows <- Seq(lp, pr); r <- rows) {
+      assert(!r.isNullAt(0) && r.getString(0) != "pz", r)
+      assert(!r.isNullAt(1), r)
+    }
   }
 
   test("degreeAssortativity: a star is perfectly disassortative (-1)") {
