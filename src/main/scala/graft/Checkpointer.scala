@@ -32,34 +32,38 @@ import org.apache.spark.sql.catalyst.InternalRow
   * `close()` restores the caller's value (or unsets it if there was
   * none). With ids in the names, Spark writes each whole-stage-codegen
   * stage number into the generated class name, so every round of a lazy
-  * R-round chain (e.g. [[graft.ops.Graph.labelPropagation]]'s default)
-  * is a distinct source text: a 10-round run over 100k edges generated
-  * 85–118 of them, more than the 100-entry codegen cache holds, so every
-  * run recompiled them all (118 compiles, 1.5 s of janino in one traced
-  * op, local[4]). With id-free names round k+1's stages have round k's
-  * source and hit the cache: 0 compiles, and the op's median fell from
-  * 9.0 to 5.1 s over 10 runs each. Plans, jobs, results and cached bytes
-  * are unchanged; only class names differ.
+  * R-round chain (the rounds of [[graft.ops.Graph.pageRank]] between
+  * checkpoints, or of [[graft.ops.Graph.labelPropagation]] above the
+  * broadcast threshold) is a distinct source text. Measured on label
+  * propagation's chain when it ran at every size: a 10-round run over
+  * 100k edges generated 85–118 of them, more than the 100-entry codegen
+  * cache holds, so every run recompiled them all (118 compiles, 1.5 s of
+  * janino in one traced op, local[4]). With id-free names round k+1's
+  * stages have round k's source and hit the cache: 0 compiles, and the
+  * op's median fell from 9.0 to 5.1 s over 10 runs each. Plans, jobs,
+  * results and cached bytes are unchanged; only class names differ.
   *
   * Coalesce floor: while open it also sets AQE's
   * `spark.sql.adaptive.coalescePartitions.minPartitionSize` to the
   * engine's bytes-per-task split ([[graft.ops.splitBytes]], the 128 KB
   * `fanOut` split, measured at two scales in r15), and `close()` restores
   * it the same way. AQE's default floor is 1 MB, and a loop round's
-  * shuffle is usually smaller: a [[graft.ops.Graph.labelPropagation]]
-  * round that shuffled its votes over 100k edges moved 0.1–1.3 MB, so
-  * AQE folded every round into one or two tasks while the other cores
-  * sat idle (31 jobs on 47 tasks, executor utilization 0.16 in one
-  * traced op, local[4]). With the floor each loop shuffle gets
-  * max(bytes / parallelism, 128 KB) per partition. Measured on that
-  * round body with one vote shuffle per round: a traced op ran 22 jobs
-  * on 96 tasks at utilization 0.39, its time per round fell from 0.85
-  * to 0.62 s, and its median fell from 8.5 to 7.5 s against the same
-  * body without the floor (5 of 6 runs); with the older two-exchange
-  * round the floor did not move the op (5 of 9). That op now shuffles
-  * only its edges, once, and no longer each round. Partition counts
-  * decide the order of floating-point sums, so the floor must never
-  * outlive the loop that set it.
+  * shuffle is usually smaller: a label-propagation round that shuffled
+  * its votes over 100k edges moved 0.1–1.3 MB, so AQE folded every round
+  * into one or two tasks while the other cores sat idle (31 jobs on 47
+  * tasks, executor utilization 0.16 in one traced op, local[4]). With
+  * the floor each loop shuffle gets max(bytes / parallelism, 128 KB) per
+  * partition. Measured on that round body with one vote shuffle per
+  * round: a traced op ran 22 jobs on 96 tasks at utilization 0.39, its
+  * time per round fell from 0.85 to 0.62 s, and its median fell from 8.5
+  * to 7.5 s against the same body without the floor (5 of 6 runs); with
+  * the older two-exchange round the floor did not move the op (5 of 9).
+  * Label propagation no longer shuffles per round, but the loops that
+  * still run through a Checkpointer do ([[graft.ops.Graph.pageRank]]'s
+  * contribution aggregate, the k-core peel's degree counts, the
+  * connected-components rounds), and the floor stays for them on that
+  * measurement. Partition counts decide the order of floating-point
+  * sums, so the floor must never outlive the loop that set it.
   *
   * Scope: a Checkpointer exists only inside [[Checkpointer.using]], which
   * closes it in a `finally`, so the caller's checkpoint dir and settings

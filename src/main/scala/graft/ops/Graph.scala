@@ -1,8 +1,15 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow,
+  InterpretedOrdering, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph propagation beyond connected components: PageRank over
   * an edge relation. Each iteration is one equi-join + one aggregation on
@@ -264,63 +271,249 @@ object Graph {
     * engine-reproducible (asynchronous LPA is not). Nodes with no
     * out-edges keep their label.
     *
-    * One round = one stage, with no shuffle. The distinct edges are
-    * shuffled ONCE, by `u`, and pinned through the [[graft.Checkpointer]]
-    * with that partitioning. The state is one (u, label) row per node
-    * with an out-edge: round 1 reads label = v with no join, and round i
-    * left-joins the edges to the broadcast previous state on `v` (a `v`
-    * with no out-edges is not in it and votes with its own id). The vote
-    * count and the arg-max then group by keys that start with `u`, inside
-    * the edges' partitions (the arg-max is a sort aggregate, so each
-    * round sorts its votes within a partition). Nodes that appear only as
-    * `v` never update, so they are added once, to the final generation.
+    * The distinct edges are shuffled ONCE, by `u`. The label state then
+    * lives in one of two places, chosen by a guard: whether the planner
+    * would broadcast the distinct edges, i.e. whether they are within
+    * `spark.sql.autoBroadcastJoinThreshold` by their measured size
+    * (`GraftSqlShim.withinBroadcastThreshold`). The state has at most one
+    * entry per edge, so that size bounds it.
     *
-    * The state is broadcast only while the pinned edges are within
-    * `spark.sql.autoBroadcastJoinThreshold` by their measured size (the
-    * planner's own test for broadcasting them): the state has at most one
-    * row per edge, with an edge row's column types, so that size bounds
-    * it. Above the threshold the join is left to the planner, which
-    * shuffles both sides.
+    *  - Within the threshold the state is an `Int` array on the driver.
+    *    One pass over the shuffled edges measures them and collects the
+    *    node set; the driver numbers the nodes in Spark's order for their
+    *    type (so the smallest id is the smallest label) and broadcasts
+    *    that dictionary. Each partition's edges are then cached as an
+    *    adjacency over those ids, and a round is one job: its tasks read
+    *    the broadcast label array and return each source's winning label,
+    *    which the driver writes into the next array. No round plans a
+    *    query. The result is a driver-held frame built from the last
+    *    array. Ids whose equality is not binary (strings under a
+    *    non-binary collation) take the loop below at any size.
+    *  - Above it the rounds are a lazy DataFrame chain over the edges,
+    *    pinned through the [[graft.Checkpointer]] with their partitioning.
+    *    The state is one (u, label) row per node with an out-edge: round
+    *    1 reads label = v with no join, and round i left-joins the edges
+    *    to the previous state on `v` (a `v` with no out-edges is not in it
+    *    and votes with its own id); the planner shuffles both sides. The
+    *    vote count and the arg-max group by keys that start with `u`
+    *    (the arg-max is a sort aggregate). Nodes that appear only as `v`
+    *    never update, so they are added once, to the final generation.
+    *    Rounds share compiled stages: the Checkpointer keeps stage ids out
+    *    of generated class names.
+    *
+    * Both paths return the same rows with the same schema.
     *
     * Fixed `rounds`, no convergence probe: the analytical use runs a
     * handful of rounds, and a fixed count keeps the oracle unrollable.
-    * Rounds share compiled stages: the [[graft.Checkpointer]] keeps
-    * stage ids out of generated class names, so every round between the
-    * second and the last runs the second round's compiled stage.
     *
     * Edges with a NULL `u` or `v` are dropped, so no null node appears in
     * the result.
     *
+    * @param checkpointEvery cut the chain's lineage every this many rounds
+    *                        (0 = never); only the DataFrame loop above the
+    *                        threshold has a lineage to cut
     * @return (u, label) for every node that appears in a non-null edge
     */
   def labelPropagation(edges: DataFrame, rounds: Int,
       checkpointEvery: Int = 0): DataFrame = {
     require(rounds >= 1, "need at least one round")
     graft.Checkpointer.using(edges.sparkSession, None) { cp =>
-      val e = cp.pinPartitioned(dropNullEnds(edges)
-        .select(col("u"), col("v")).repartition(col("u")).distinct())
-      val bcast = GraftSqlShim.withinBroadcastThreshold(e)
-      // arg-max by (n desc, label asc) as a MIN over (−n, label) structs:
-      // same winner as a rank-1 window (struct comparison is
-      // lexicographic), without sorting every vote row per u
-      def adopt(votes: DataFrame): DataFrame = votes
-        .groupBy("u", "label").agg(count(lit(1)).as("n"))
-        .groupBy("u").agg(min(struct((-col("n")).as("nn"),
-          col("label"))).as("__best"))
-        .select(col("u"), col("__best.label").as("label"))
-      var state = adopt(e.select(col("u"), col("v").as("label")))
-      for (i <- 2 to rounds) {
-        // the checkpointEvery cadence cuts the lineage after round i − 1
-        if (checkpointEvery > 0 && (i - 1) % checkpointEvery == 0)
-          state = cp(state)
-        val prev = state.select(col("u").as("v"), col("label").as("__l"))
-        state = adopt(e
-          .join(if (bcast) broadcast(prev) else prev, Seq("v"), "left")
-          .select(col("u"), coalesce(col("__l"), col("v")).as("label")))
+      // planned inside the scope, so its one shuffle gets the loop
+      // settings whichever path then reads it
+      val distinct = dropNullEnds(edges).select(col("u"), col("v"))
+        .repartition(col("u")).distinct()
+      LabelKernel(distinct, rounds).getOrElse {
+        val e = cp.pinPartitioned(distinct)
+        // arg-max by (n desc, label asc) as a MIN over (−n, label) structs:
+        // same winner as a rank-1 window (struct comparison is
+        // lexicographic), without sorting every vote row per u
+        def adopt(votes: DataFrame): DataFrame = votes
+          .groupBy("u", "label").agg(count(lit(1)).as("n"))
+          .groupBy("u").agg(min(struct((-col("n")).as("nn"),
+            col("label"))).as("__best"))
+          .select(col("u"), col("__best.label").as("label"))
+        var state = adopt(e.select(col("u"), col("v").as("label")))
+        for (i <- 2 to rounds) {
+          // the checkpointEvery cadence cuts the lineage after round i − 1
+          if (checkpointEvery > 0 && (i - 1) % checkpointEvery == 0)
+            state = cp(state)
+          val prev = state.select(col("u").as("v"), col("label").as("__l"))
+          state = adopt(e.join(prev, Seq("v"), "left")
+            .select(col("u"), coalesce(col("__l"), col("v")).as("label")))
+        }
+        val sinks = e.select(col("v").as("u"))
+          .join(e.select(col("u")).distinct(), Seq("u"), "left_anti").distinct()
+        cp(state.unionByName(sinks.select(col("u"), col("u").as("label"))))
       }
-      val sinks = e.select(col("v").as("u"))
-        .join(e.select(col("u")).distinct(), Seq("u"), "left_anti").distinct()
-      cp(state.unionByName(sinks.select(col("u"), col("u").as("label"))))
+    }
+  }
+
+  /** [[labelPropagation]]'s driver-state rounds (see there). */
+  private object LabelKernel {
+
+    /** The result for the distinct, `u`-partitioned edges `e`; None,
+      * having run only the measuring pass, when `e` is above the
+      * broadcast threshold or its ids are not binary-stable.
+      */
+    def apply(e: DataFrame, rounds: Int): Option[DataFrame] = {
+      val spark = e.sparkSession
+      val limit = GraftSqlShim.broadcastThreshold(spark)
+      if (limit < 0) return None
+      val Array(uF, vF) = e.schema.fields
+      // u and v compared as Spark compares them: in their common type
+      val t = if (uF.dataType == vF.dataType) uF.dataType
+        else e.select(col("u")).union(e.select(col("v"))).schema.head.dataType
+      if (!UnsafeRowUtils.isBinaryStable(t)) return None
+      // an endpoint as a one-field row whose bytes are equal iff Spark
+      // groups the two ids together
+      val tz = spark.conf.get("spark.sql.session.timeZone")
+      val key = Seq(uF, vF).zipWithIndex.map { case (f, i) =>
+        val ref = BoundReference(i, f.dataType, nullable = true)
+        GraftSqlShim.normalizeFloats(
+          if (f.dataType == t) ref else Cast(ref, t, Some(tz)))
+      }
+      val ord = InterpretedOrdering.forSchema(Seq(t))
+      val fallback = e.schema.defaultSize.toLong + 8L
+      // the bytes of two parts of `e`, with their node sets merged while
+      // the sum is within the guard
+      def merge(a: (Long, Option[Nodes]), b: (Long, Option[Nodes])) = {
+        val bytes = a._1 + b._1
+        (bytes, for (x <- a._2; y <- b._2
+          if GraftSqlShim.withinBroadcastThreshold(bytes, limit))
+          yield union(x, y, ord))
+      }
+      val qe = e.queryExecution
+      val (bytes, nodes) = SQLExecution.withNewExecutionId(qe, Some("labelPropagation")) {
+        val parts = qe.toRdd.mapPartitions { it =>
+          val ends = key.map(k => UnsafeProjection.create(Seq(k)))
+          val seen = new java.util.HashSet[UnsafeRow]
+          var bytes = 0L
+          // a part past the guard puts the whole of `e` past it
+          while (GraftSqlShim.withinBroadcastThreshold(bytes, limit) && it.hasNext) {
+            val r = it.next()
+            bytes += GraftSqlShim.rowBytes(r, fallback)
+            ends.foreach { p =>
+              val k = p(r)
+              if (!seen.contains(k)) seen.add(k.copy())
+            }
+          }
+          Iterator.single((bytes,
+            if (!GraftSqlShim.withinBroadcastThreshold(bytes, limit)) None
+            else {
+              val sorted = seen.toArray(new Array[UnsafeRow](seen.size))
+              java.util.Arrays.sort(sorted, ord)
+              Some(sorted)
+            }))
+        }
+        // merged on the executors, at most ~MergeFanIn parts per merge, so
+        // the driver takes in a few node sets whatever the partition count
+        val n = parts.getNumPartitions
+        val depth =
+          if (n <= MergeFanIn) 1 else math.ceil(math.log(n) / math.log(MergeFanIn)).toInt
+        parts.treeAggregate((0L, Option(Array.empty[UnsafeRow])))(merge, merge, depth)
+      }
+      if (!GraftSqlShim.withinBroadcastThreshold(bytes, limit)) return None
+      val dict = nodes.get
+      val sc = spark.sparkContext
+      val dictB = sc.broadcast(dict)
+      // the first round's job builds and caches each partition's adjacency
+      val adj = qe.toRdd.mapPartitions { it =>
+        val ends = key.map(k => UnsafeProjection.create(Seq(k)))
+        val id = new java.util.HashMap[UnsafeRow, Integer](2 * dictB.value.length)
+        dictB.value.zipWithIndex.foreach { case (k, i) => id.put(k, i) }
+        val codes = Array.newBuilder[Long]
+        it.foreach { r =>
+          codes += (id.get(ends(0)(r)).toLong << 32) | id.get(ends(1)(r)).toLong
+        }
+        Iterator.single(Adjacency(codes.result()))
+      }.persist(StorageLevel.MEMORY_ONLY)
+      try {
+        var label = Array.range(0, dict.length)
+        for (_ <- 1 to rounds) {
+          val prev = sc.broadcast(label)
+          val won = try sc.runJob(adj, (it: Iterator[Adjacency]) => it.next().vote(prev.value))
+            finally prev.destroy()
+          label = label.clone()
+          for ((src, lab) <- won; i <- src.indices) label(src(i)) = lab(i)
+        }
+        val rows = dict.indices.map(i => new GenericInternalRow(
+          Array[Any](dict(i).get(0, t), dict(label(i)).get(0, t))): InternalRow)
+        // the DataFrame loop's schema: u is nullable when either input end
+        // is, label always (an aggregate's result)
+        val out = GraftSqlShim.localFrame(spark, StructType(Seq(
+          StructField(uF.name, t, uF.nullable || vF.nullable),
+          StructField("label", t))), rows)
+        Some(if (vF.dataType == t) out
+          else out.select(col(uF.name), col("label").cast(vF.dataType)))
+      } finally {
+        adj.unpersist(blocking = false)
+        dictB.destroy()
+      }
+    }
+
+    /** Distinct one-field key rows in ascending order. */
+    private type Nodes = Array[UnsafeRow]
+
+    /** The most node sets one merge of the measuring pass takes in. */
+    private val MergeFanIn = 16
+
+    /** The sorted union of two sorted, distinct node arrays. */
+    private def union(a: Nodes, b: Nodes, ord: Ordering[InternalRow]): Nodes = {
+      val out = Array.newBuilder[UnsafeRow]
+      var i = 0; var j = 0
+      while (i < a.length || j < b.length) {
+        val c = if (i == a.length) 1 else if (j == b.length) -1
+          else ord.compare(a(i), b(j))
+        if (c <= 0) { out += a(i); i += 1; if (c == 0) j += 1 }
+        else { out += b(j); j += 1 }
+      }
+      out.result()
+    }
+  }
+
+  /** One partition's distinct edges over dense node ids, grouped by
+    * source: `src(i)` points at `nbr(off(i) until off(i + 1))`.
+    */
+  private final class Adjacency(val src: Array[Int], val off: Array[Int],
+      val nbr: Array[Int]) extends Serializable {
+
+    /** (`src`, each source's most frequent neighbour label under `label`,
+      * ties to the smallest label).
+      */
+    def vote(label: Array[Int]): (Array[Int], Array[Int]) = {
+      val votes = new Array[Int](label.length)
+      val won = new Array[Int](src.length)
+      for (i <- src.indices) {
+        var best = -1
+        var bestN = 0
+        var j = off(i)
+        while (j < off(i + 1)) {
+          val l = label(nbr(j))
+          val c = votes(l) + 1
+          votes(l) = c
+          if (c > bestN || (c == bestN && l < best)) { best = l; bestN = c }
+          j += 1
+        }
+        j = off(i)
+        while (j < off(i + 1)) { votes(label(nbr(j))) = 0; j += 1 }
+        won(i) = best
+      }
+      (src, won)
+    }
+  }
+
+  private object Adjacency {
+    /** From edges coded as `src << 32 | dst`, in any order. */
+    def apply(codes: Array[Long]): Adjacency = {
+      java.util.Arrays.sort(codes)
+      val src = Array.newBuilder[Int]
+      val off = Array.newBuilder[Int]
+      for (j <- codes.indices if j == 0 || (codes(j) >>> 32) != (codes(j - 1) >>> 32)) {
+        src += (codes(j) >>> 32).toInt
+        off += j
+      }
+      off += codes.length
+      new Adjacency(src.result(), off.result(), codes.map(_.toInt))
     }
   }
 

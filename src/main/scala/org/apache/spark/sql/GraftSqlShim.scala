@@ -6,9 +6,10 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 /** `private[sql]` doors. Most are opened for [[graft.Checkpointer]]:
   * materializing a DataFrame as an RDD of INTERNAL rows and rebuilding a
-  * DataFrame over one with truthful statistics attached. One more,
-  * [[normalizeFloats]], gives `graft.glm.SuffStats` Spark's group-by key
-  * rule.
+  * DataFrame over one with truthful statistics attached. [[normalizeFloats]]
+  * gives `graft.glm.SuffStats` and `graft.ops.Graph.labelPropagation`
+  * Spark's group-by key rule; [[broadcastThreshold]] and [[localFrame]]
+  * let label propagation decide on, and return, a driver-held result.
   *
   * `Dataset.rdd` (what the checkpointer used before) decodes every
   * InternalRow into an external `Row` — boxing each double, converting
@@ -80,24 +81,49 @@ object GraftSqlShim {
     val fallbackRowSize = schema.defaultSize.toLong + 8L
     rdd.mapPartitions { it =>
       var n = 0L; var b = 0L
-      it.foreach {
-        case u: catalyst.expressions.UnsafeRow => n += 1; b += u.getSizeInBytes
-        case _ => n += 1; b += fallbackRowSize
-      }
+      it.foreach { r => n += 1; b += rowBytes(r, fallbackRowSize) }
       Iterator((n, b))
     }.collect().foldLeft((0L, 0L)) { case ((n1, b1), (n2, b2)) =>
       (n1 + n2, b1 + b2)
     }
   }
 
-  /** Whether the planner would broadcast `df` on its size estimate:
-    * within `spark.sql.autoBroadcastJoinThreshold` (negative: never).
+  /** A row's measured bytes, as [[materializeCounted]] adds them up: an
+    * UnsafeRow's payload, `fallback` for any other row.
     */
-  def withinBroadcastThreshold(df: Dataset[Row]): Boolean = {
-    val limit = df.sparkSession.asInstanceOf[classic.SparkSession]
-      .sessionState.conf.autoBroadcastJoinThreshold
-    limit >= 0 && estimatedSizeInBytes(df) <= limit
+  def rowBytes(r: InternalRow, fallback: Long): Long = r match {
+    case u: catalyst.expressions.UnsafeRow => u.getSizeInBytes
+    case _ => fallback
   }
+
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes
+    * (negative: never broadcast).
+    */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+      .autoBroadcastJoinThreshold
+
+  /** Whether the planner broadcasts a frame that [[fromInternalRdd]]
+    * rebuilds over `bytes` measured bytes, under a broadcast threshold of
+    * `limit` (negative: never): its size estimate is
+    * [[plannedSizeInBytes]].
+    */
+  def withinBroadcastThreshold(bytes: Long, limit: Long): Boolean =
+    limit >= 0 && plannedSizeInBytes(bytes) <= limit
+
+  /** The size [[fromInternalRdd]] reports for `bytes` measured bytes:
+    * the payload inflated 4x (see there), and at least 1.
+    */
+  def plannedSizeInBytes(bytes: Long): Long = math.max(4L * bytes, 1L)
+
+  /** A frame over `rows` held on the driver (a local relation), with
+    * `schema`'s columns.
+    */
+  def localFrame(spark: SparkSession, schema: types.StructType,
+      rows: Seq[InternalRow]): Dataset[Row] =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      catalyst.plans.logical.LocalRelation(
+        catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 
   /** Rebuild a DataFrame over a MATERIALIZED internal-row RDD of
     * `origin`'s rows, carrying exact measured statistics (sizeInBytes
@@ -122,7 +148,7 @@ object GraftSqlShim {
       // (the ALS factor / rank-vector cases this exists for) stay far
       // under the threshold either way. rowCount stays exact.
       catalyst.plans.logical.Statistics(
-        sizeInBytes = BigInt(math.max(4L * bytes, 1L)),
+        sizeInBytes = BigInt(plannedSizeInBytes(bytes)),
         rowCount = Some(BigInt(n)))
     }
     val partitioning =

@@ -130,11 +130,12 @@ class CheckpointerSpec extends SparkSpec {
         }
       }
       assert(callerSettings === before)
-      // a public loop op whose first materialization fails
+      // a public loop op whose first materialization (pageRank's edge
+      // pin) fails inside its scope
       val edges = spark.range(20).select(concat(lit("n"), col("id")).as("u"),
         when(col("id") === 13, raise_error(lit("boom")))
           .otherwise(concat(lit("n"), col("id") + 1)).as("v"))
-      intercept[Exception](graft.ops.Graph.labelPropagation(edges, 2))
+      intercept[Exception](graft.ops.Graph.pageRank(edges, 2))
       assert(callerSettings === before)
     } finally spark.conf.unset(key)
   }

@@ -162,30 +162,46 @@ class GraphSpec extends SparkSpec {
     assert(ck === plain)
   }
 
-  test("labelPropagation: rounds share compiled stages (no codegen per extra round)") {
-    // without id-free class names every round of the lazy chain gets new
-    // whole-stage-codegen stage numbers, so rounds 4-8 would each compile.
-    // The warm-up holds every shape of a round: round 1 has no join, the
-    // last round's state is not broadcast, and a middle round's state (a
-    // join, broadcast into the next round) first appears with 3 rounds
-    val und = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"))
-    val edges = (und ++ und.map(_.swap)).toDF("u", "v")
-    Graph.labelPropagation(edges, rounds = 3) // warm-up: rounds 1 to 3
-    val compiles = org.apache.spark.metrics.source.CodegenMetrics
-      .METRIC_COMPILATION_TIME
-    val before = compiles.getCount
-    Graph.labelPropagation(edges, rounds = 8)
-    assert(compiles.getCount === before,
-      s"${compiles.getCount - before} codegen compiles in rounds 4-8")
+  /** `body` with `spark.sql.autoBroadcastJoinThreshold` at -1, which
+    * sends labelPropagation down its DataFrame loop.
+    */
+  private def noBroadcast[A](body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val caller = spark.conf.getAll.get(key)
+    spark.conf.set(key, "-1")
+    try body finally caller.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  /** Runs `f`; returns the jobs it started and the shuffle bytes its
-    * tasks wrote.
+  test("labelPropagation: rounds share compiled stages (no codegen per extra round)") {
+    // without id-free class names every round of the DataFrame loop gets
+    // new whole-stage-codegen stage numbers, so rounds 4-8 would each
+    // compile; the driver-state rounds compile nothing at all. The
+    // warm-up holds every shape of a round: round 1 has no join, and a
+    // middle round (a join over a join) first appears with 3 rounds
+    val und = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"))
+    val edges = (und ++ und.map(_.swap)).toDF("u", "v")
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    for (path <- Seq("driver state", "DataFrame loop")) {
+      def run(rounds: Int) =
+        if (path == "driver state") Graph.labelPropagation(edges, rounds)
+        else noBroadcast(Graph.labelPropagation(edges, rounds))
+      run(3) // warm-up: rounds 1 to 3
+      val before = compiles.getCount
+      run(8)
+      assert(compiles.getCount === before,
+        s"$path: ${compiles.getCount - before} codegen compiles in rounds 4-8")
+    }
+  }
+
+  /** Runs `f`; returns the jobs it started, the shuffle bytes its tasks
+    * wrote and the SQL executions it ran.
     */
-  private def observe(f: => Unit): (Int, Long) = {
+  private def observe(f: => Unit): (Int, Long, Int) = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val bytes = new java.util.concurrent.atomic.AtomicLong
+    val queries = new java.util.concurrent.atomic.AtomicInteger
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -195,31 +211,44 @@ class GraphSpec extends SparkSpec {
         if (e.taskMetrics != null)
           bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
+    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        queries.incrementAndGet()
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
+        queries.incrementAndGet()
+    }
     org.apache.spark.TestBus.drain(sc)
     sc.addSparkListener(l)
+    spark.listenerManager.register(ql)
     try { f; org.apache.spark.TestBus.drain(sc) }
-    finally sc.removeSparkListener(l)
-    (jobs.get, bytes.get)
+    finally {
+      sc.removeSparkListener(l)
+      spark.listenerManager.unregister(ql)
+    }
+    (jobs.get, bytes.get, queries.get)
   }
 
-  test("labelPropagation: a round is one broadcast job and shuffles nothing") {
-    // the edges are shuffled by u once; every round broadcasts the state
-    // (one job under AQE) and votes inside the edges' partitions
+  test("labelPropagation: one job per round") {
+    // the edges are shuffled by u once; each round is one job over their
+    // cached adjacency, with no query of its own
     val und = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"))
     val edges = ((und ++ und.map(_.swap)) :+ ("e", "f")).toDF("u", "v")
-    val (jobs2, bytes2) = observe(Graph.labelPropagation(edges, 2))
-    val (jobs6, bytes6) = observe(Graph.labelPropagation(edges, 6))
+    val (jobs2, bytes2, sql2) = observe(Graph.labelPropagation(edges, 2))
+    val (jobs6, bytes6, sql6) = observe(Graph.labelPropagation(edges, 6))
     assert(jobs6 - jobs2 === 4, s"rounds = 2 ran $jobs2 jobs, rounds = 6 ran $jobs6")
     assert(bytes2 > 0 && bytes6 === bytes2,
       s"rounds = 2 wrote $bytes2 shuffle bytes, rounds = 6 wrote $bytes6")
+    assert(sql6 === sql2, s"rounds = 2 ran $sql2 SQL executions, rounds = 6 ran $sql6")
   }
 
   /** Synchronous LPA on the driver: a node with out-edges adopts the most
     * frequent label among its distinct out-neighbours, ties to the
-    * smallest; a node without out-edges keeps its own id.
+    * smallest by `ord`; a node without out-edges keeps its own id.
     */
-  private def lpaReference(edges: Seq[(String, String)],
-      rounds: Int): Map[String, String] = {
+  private def lpaReference[A](edges: Seq[(A, A)], rounds: Int)(
+      implicit ord: Ordering[A]): Map[A, A] = {
     val adj = edges.distinct.groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2) }
     var label = edges.flatMap { case (u, v) => Seq(u, v) }.map(n => n -> n).toMap
     for (_ <- 1 to rounds) {
@@ -232,25 +261,105 @@ class GraphSpec extends SparkSpec {
     label
   }
 
-  test("labelPropagation: no-broadcast run equals broadcast run and driver LPA") {
-    // 2k skewed edges (cubed-uniform targets) from 300 sources into 400
-    // nodes, so n300..n399 are sinks
+  /** Spark's order of strings: by their UTF-8 bytes, unsigned. */
+  private val utf8Order: Ordering[String] = Ordering.by[String, Iterable[Int]](
+    _.getBytes("UTF-8").toSeq.map(_ & 0xff))(Ordering.Iterable[Int])
+
+  /** 2k skewed edges (cubed-uniform targets) from 300 sources into 400
+    * nodes, so n300..n399 are sinks.
+    */
+  private lazy val skewed = {
     val rng = new scala.util.Random(17)
-    val pairs = Seq.fill(2000)((f"n${rng.nextInt(300)}%03d",
+    Seq.fill(2000)((f"n${rng.nextInt(300)}%03d",
       f"n${(math.pow(rng.nextDouble(), 3) * 400).toInt}%03d"))
-    val edges = pairs.toDF("u", "v")
-    def run(): Map[String, String] = Graph.labelPropagation(edges, rounds = 4)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val caller = spark.conf.getAll.get(key)
-    val plain = {
-      spark.conf.set(key, "-1")
-      try run() finally caller.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
-    val ref = lpaReference(pairs, 4)
+  }
+
+  private def labels[A](df: org.apache.spark.sql.DataFrame): Map[A, A] =
+    df.collect().map(r => r.getAs[A](0) -> r.getAs[A](1)).toMap
+
+  test("labelPropagation: no-broadcast run equals broadcast run and driver LPA") {
+    val edges = skewed.toDF("u", "v")
+    def run() = labels[String](Graph.labelPropagation(edges, rounds = 4))
+    val plain = noBroadcast(run())
+    val ref = lpaReference(skewed, 4)
     assert(ref.keySet.exists(_ >= "n300"))
     assert(plain === ref)
     assert(run() === ref)
+    assert(Graph.labelPropagation(edges, 4).schema ===
+      noBroadcast(Graph.labelPropagation(edges, 4)).schema)
+  }
+
+  test("labelPropagation: state on the driver exactly within the broadcast threshold") {
+    // the guard reads the distinct edges' measured bytes as the planner
+    // would size a frame pinned over them
+    import org.apache.spark.sql.GraftSqlShim
+    val edges = skewed.toDF("u", "v")
+    val distinct = edges.repartition(col("u")).distinct()
+    val (_, bytes) = GraftSqlShim.materializeCounted(
+      GraftSqlShim.toInternalRdd(distinct), distinct.schema)
+    val size = GraftSqlShim.plannedSizeInBytes(bytes)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val caller = spark.conf.getAll.get(key)
+    def run(limit: Long) = {
+      spark.conf.set(key, limit)
+      try Graph.labelPropagation(edges, 3)
+      finally caller.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    def onDriver(df: org.apache.spark.sql.DataFrame) = df.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val (within, above) = (run(size), run(size - 1))
+    assert(onDriver(within) && !onDriver(above))
+    assert(labels[String](within) === labels[String](above))
+  }
+
+  test("labelPropagation: string ties go to the smallest label in Spark's UTF-8 order") {
+    // U+FFFD is EF BF BD in UTF-8 and U+1F600 is F0 9F 98 80, so Spark
+    // orders "\uFFFD" first; Java's String.compareTo compares UTF-16
+    // units and orders the emoji (D83D DE00) first
+    val (rep, emoji) = ("\uFFFD", "\uD83D\uDE00")
+    assert(emoji.compareTo(rep) < 0 && utf8Order.lt(rep, emoji))
+    val pairs = Seq(("c", rep), ("c", emoji), ("d", emoji), ("d", rep),
+      ("d", "c"), (rep, emoji), (emoji, rep), ("x", "d"), ("x", "c"))
+    val edges = pairs.toDF("u", "v")
+    for (rounds <- Seq(1, 2)) {
+      val kernel = labels[String](Graph.labelPropagation(edges, rounds))
+      assert(kernel("c") === rep, s"rounds = $rounds")
+      assert(kernel === noBroadcast(labels[String](Graph.labelPropagation(edges, rounds))))
+      assert(kernel === lpaReference(pairs, rounds)(utf8Order))
+    }
+  }
+
+  test("labelPropagation: a LongType-id graph") {
+    // ids of both signs and widths, so numeric order is not byte order
+    val pairs = skewed.map { case (u, v) =>
+      def id(s: String) = (s.drop(1).toLong - 150L) * 0x10000001L
+      (id(u), id(v))
+    }
+    val edges = pairs.toDF("u", "v")
+    val kernel = Graph.labelPropagation(edges, 4)
+    val plain = noBroadcast(Graph.labelPropagation(edges, 4))
+    assert(kernel.schema === plain.schema)
+    assert(kernel.schema.map(_.dataType).distinct ===
+      Seq(org.apache.spark.sql.types.LongType))
+    val ref = lpaReference(pairs, 4)
+    assert(labels[Long](kernel) === ref)
+    assert(labels[Long](plain) === ref)
+    // ends of two types meet in their common type, as in the loop's join
+    val mixed = pairs.map { case (u, v) => (u / 0x10000001L, (v / 0x10000001L).toInt) }
+      .toDF("u", "v")
+    def rows(df: org.apache.spark.sql.DataFrame) = (df.schema,
+      df.collect().map(r => (r.get(0), r.get(1))).toSet)
+    assert(rows(Graph.labelPropagation(mixed, 4)) ===
+      rows(noBroadcast(Graph.labelPropagation(mixed, 4))))
+  }
+
+  test("labelPropagation: the result does not depend on input partitioning or order") {
+    val edges = skewed.toDF("u", "v")
+    def run(e: org.apache.spark.sql.DataFrame) =
+      Graph.labelPropagation(e, 5).collect().toSeq
+    val base = run(edges)
+    assert(run(edges.repartition(7)) === base)
+    assert(run(edges.orderBy(rand(7))) === base)
   }
 
   test("null endpoints: LPA and pageRank drop the edge, no null node appears") {
