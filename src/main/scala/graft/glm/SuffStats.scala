@@ -5,7 +5,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, GraftSqlShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -21,13 +20,13 @@ import org.apache.spark.storage.StorageLevel
   *
   * Two entry points build that table:
   *
-  *  - [[patterns]] brings it to the driver in one bounded scan. At most
-  *    one task per core (the partitions coalesced, no shuffle) hash-counts
-  *    its rows by their bytes, with floats normalized as Spark's group-by
-  *    does, and stops reading once it meets a new tuple past the cap. The
-  *    task tables are merged on the executors, at most 16 to a merge (a
-  *    shuffle of tables only past 16 tasks), so the driver takes in a few
-  *    tables of at most `CollapseMax` keys at any partition count. That
+  *  - [[patterns]] brings it to the driver in one [[graft.BoundedScan]].
+  *    At most one task per core (the partitions coalesced, no shuffle)
+  *    hash-counts its rows by their bytes, with floats normalized as
+  *    Spark's group-by does, and stops reading once it meets a new tuple
+  *    past the cap. The task tables are merged on the executors, at most
+  *    16 to a merge (a shuffle of tables only past 16 tasks), so the
+  *    driver takes in a few tables of at most `CollapseMax` keys. That
   *    is one job, with nothing persisted, and it is exact: it returns the
   *    table iff the frame has at most `CollapseMax` distinct tuples,
   *    whatever the row order or partitioning. A continuous design costs
@@ -94,34 +93,20 @@ private[glm] object SuffStats {
         if (x.size > max) None else a
       case _ => None
     }
-    val qe = df.queryExecution
-    val table = SQLExecution.withNewExecutionId(qe, Some("patterns")) {
-      // at most one task per core, each scanning several partitions into
-      // one table: a continuous design then stops after ~max rows per task,
-      // not per partition, and no table of a small partition is shipped
-      val rdd = qe.toRdd
-      val scan = if (rdd.getNumPartitions > tasks) rdd.coalesce(tasks) else rdd
-      val tables = scan.mapPartitions { it =>
-        val proj = UnsafeProjection.create(key)
-        val counts = new Table
-        var over = false
-        while (!over && it.hasNext) {
-          val k = proj(it.next())
-          val c = counts.get(k)
-          if (c != null) c(0) += 1
-          else if (counts.size < max) counts.put(k.copy(), Array(1L))
-          else over = true
-        }
-        Iterator.single(if (over) None else Some(counts))
+    // a continuous design stops after ~max rows per task
+    val table = graft.BoundedScan(df, "patterns", tasks) { it =>
+      val proj = UnsafeProjection.create(key)
+      val counts = new Table
+      var over = false
+      while (!over && it.hasNext) {
+        val k = proj(it.next())
+        val c = counts.get(k)
+        if (c != null) c(0) += 1
+        else if (counts.size < max) counts.put(k.copy(), Array(1L))
+        else over = true
       }
-      // merged on the executors, at most ~MergeFanIn tables per merge, so
-      // the driver receives a few tables of at most `max` keys whatever
-      // the task count; up to MergeFanIn tasks need no shuffle
-      val n = tables.getNumPartitions
-      val depth =
-        if (n <= MergeFanIn) 1 else math.ceil(math.log(n) / math.log(MergeFanIn)).toInt
-      tables.treeAggregate(Option(new Table))(merge, merge, depth)
-    }
+      if (over) None else Some(counts)
+    }(merge)
     table.map { t =>
       val rows = t.entrySet.asScala.toArray.map(e =>
         new JoinedRow(e.getKey, InternalRow(e.getValue()(0).toDouble)): InternalRow)
@@ -131,9 +116,6 @@ private[glm] object SuffStats {
 
   /** One task's pattern counts: key bytes to a one-slot count. */
   private type Table = java.util.HashMap[UnsafeRow, Array[Long]]
-
-  /** The most per-task tables one merge in [[patterns]] takes in. */
-  private val MergeFanIn = 16
 
   /** Collapse `df` (all columns form the pattern) to one row per
     * distinct tuple with a double `cntCol` replication count, when the

@@ -1,15 +1,16 @@
 package graft.ops
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow,
-  InterpretedOrdering, UnsafeProjection, UnsafeRow}
+  InterpretedOrdering, JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType,
+  StructField, StructType}
 
 /** Iterative graph propagation beyond connected components: PageRank over
   * an edge relation. Each iteration is one equi-join + one aggregation on
@@ -271,35 +272,41 @@ object Graph {
     * engine-reproducible (asynchronous LPA is not). Nodes with no
     * out-edges keep their label.
     *
-    * The distinct edges are shuffled ONCE, by `u`. The label state then
-    * lives in one of two places, chosen by a guard: whether the planner
-    * would broadcast the distinct edges, i.e. whether they are within
-    * `spark.sql.autoBroadcastJoinThreshold` by their measured size
-    * (`GraftSqlShim.withinBroadcastThreshold`). The state has at most one
-    * entry per edge, so that size bounds it.
+    * The label state lives in one of two places, chosen by a guard:
+    * whether the planner would broadcast the distinct edges, i.e. whether
+    * they are within `spark.sql.autoBroadcastJoinThreshold` by their
+    * measured size (`GraftSqlShim.withinBroadcastThreshold` over the bytes
+    * of the distinct (u, v) rows). The state has at most one entry per
+    * edge, so that size bounds it.
     *
-    *  - Within the threshold the state is an `Int` array on the driver.
-    *    One pass over the shuffled edges measures them and collects the
-    *    node set; the driver numbers the nodes in Spark's order for their
-    *    type (so the smallest id is the smallest label) and broadcasts
-    *    that dictionary. Each partition's edges are then cached as an
-    *    adjacency over those ids, and a round is one job: its tasks read
-    *    the broadcast label array and return each source's winning label,
-    *    which the driver writes into the next array. No round plans a
-    *    query. The result is a driver-held frame built from the last
-    *    array. Ids whose equality is not binary (strings under a
-    *    non-binary collation) take the loop below at any size.
-    *  - Above it the rounds are a lazy DataFrame chain over the edges,
-    *    pinned through the [[graft.Checkpointer]] with their partitioning.
-    *    The state is one (u, label) row per node with an out-edge: round
-    *    1 reads label = v with no join, and round i left-joins the edges
-    *    to the previous state on `v` (a `v` with no out-edges is not in it
-    *    and votes with its own id); the planner shuffles both sides. The
-    *    vote count and the arg-max group by keys that start with `u`
-    *    (the arg-max is a sort aggregate). Nodes that appear only as `v`
-    *    never update, so they are added once, to the final generation.
-    *    Rounds share compiled stages: the Checkpointer keeps stage ids out
-    *    of generated class names.
+    *  - Within the threshold the whole run is one bounded scan
+    *    ([[graft.BoundedScan]]) plus driver arithmetic, with no shuffle and
+    *    nothing cached. Each scan task numbers its ends in a local
+    *    dictionary, keeps its distinct edges as codes over it and adds up
+    *    their bytes, and stops reading once that total passes the guard
+    *    (its edges are some of all the distinct edges, so all of them are
+    *    then past it too). The parts are merged exactly, so the guard reads
+    *    the same bytes whatever the input's partitioning, duplicates or
+    *    row order. The driver numbers the nodes in Spark's order for their
+    *    type (so the smallest id is the smallest label) and runs every
+    *    round in an `Int` label array over one adjacency of the edges. The
+    *    result is a driver-held frame built from the last array. Ids whose
+    *    equality is not binary (strings under a non-binary collation), and
+    *    ends of two types unless both are integral, take the loop below at
+    *    any size.
+    *  - Above it the rounds are a lazy DataFrame chain over the distinct
+    *    edges, shuffled once by `u` and pinned through the
+    *    [[graft.Checkpointer]] with that partitioning. The state is one
+    *    (u, label) row per node with an out-edge: round 1 reads label = v
+    *    with no join, and round i left-joins the edges to the previous
+    *    state on `v` (a `v` with no out-edges is not in it and votes with
+    *    its own id); the planner shuffles both sides. The vote count and
+    *    the arg-max group by keys that start with `u` (the arg-max is a
+    *    sort aggregate). Nodes that appear only as `v` never update, so
+    *    they are added once, to the final generation. Rounds share
+    *    compiled stages: the Checkpointer keeps stage ids out of generated
+    *    class names. When the guard sends the edges here, the scan above
+    *    has already read as much of them as it took to tell.
     *
     * Both paths return the same rows with the same schema.
     *
@@ -315,15 +322,27 @@ object Graph {
     * @return (u, label) for every node that appears in a non-null edge
     */
   def labelPropagation(edges: DataFrame, rounds: Int,
-      checkpointEvery: Int = 0): DataFrame = {
+      checkpointEvery: Int = 0): DataFrame =
+    labelPropagation(edges, rounds, checkpointEvery,
+      edges.sparkSession.sparkContext.defaultParallelism)
+
+  /** [[labelPropagation]] with at most `tasks` tasks in the driver-state
+    * path's scan.
+    */
+  private[graft] def labelPropagation(edges: DataFrame, rounds: Int,
+      checkpointEvery: Int, tasks: Int): DataFrame = {
     require(rounds >= 1, "need at least one round")
     graft.Checkpointer.using(edges.sparkSession, None) { cp =>
-      // planned inside the scope, so its one shuffle gets the loop
-      // settings whichever path then reads it
-      val distinct = dropNullEnds(edges).select(col("u"), col("v"))
-        .repartition(col("u")).distinct()
-      LabelKernel(distinct, rounds).getOrElse {
-        val e = cp.pinPartitioned(distinct)
+      // the scope's settings matter only to the loop (the driver-state path
+      // plans no round), but `e` is planned inside it too: the loop reads
+      // the rows of the scan's execution, so an input's own exchanges get
+      // the loop settings whichever path then reads them
+      val e = dropNullEnds(edges).select(col("u"), col("v"))
+      LabelKernel(e, rounds, tasks).getOrElse {
+        // `e`'s rows as the scan's execution made them, so an input with
+        // exchanges of its own does not run them again
+        val rows = GraftSqlShim.fromInternalRdd(e, e.queryExecution.toRdd)
+        val distinct = cp.pinPartitioned(rows.repartition(col("u")).distinct())
         // arg-max by (n desc, label asc) as a MIN over (−n, label) structs:
         // same winner as a rank-1 window (struct comparison is
         // lexicographic), without sorting every vote row per u
@@ -332,37 +351,43 @@ object Graph {
           .groupBy("u").agg(min(struct((-col("n")).as("nn"),
             col("label"))).as("__best"))
           .select(col("u"), col("__best.label").as("label"))
-        var state = adopt(e.select(col("u"), col("v").as("label")))
+        var state = adopt(distinct.select(col("u"), col("v").as("label")))
         for (i <- 2 to rounds) {
           // the checkpointEvery cadence cuts the lineage after round i − 1
           if (checkpointEvery > 0 && (i - 1) % checkpointEvery == 0)
             state = cp(state)
           val prev = state.select(col("u").as("v"), col("label").as("__l"))
-          state = adopt(e.join(prev, Seq("v"), "left")
+          state = adopt(distinct.join(prev, Seq("v"), "left")
             .select(col("u"), coalesce(col("__l"), col("v")).as("label")))
         }
-        val sinks = e.select(col("v").as("u"))
-          .join(e.select(col("u")).distinct(), Seq("u"), "left_anti").distinct()
+        val sinks = distinct.select(col("v").as("u"))
+          .join(distinct.select(col("u")).distinct(), Seq("u"), "left_anti").distinct()
         cp(state.unionByName(sinks.select(col("u"), col("u").as("label"))))
       }
     }
   }
 
-  /** [[labelPropagation]]'s driver-state rounds (see there). */
+  /** [[labelPropagation]]'s driver-state path (see there). */
   private object LabelKernel {
 
-    /** The result for the distinct, `u`-partitioned edges `e`; None,
-      * having run only the measuring pass, when `e` is above the
-      * broadcast threshold or its ids are not binary-stable.
+    /** The result for the non-null edges `e`; None when their distinct
+      * rows are past the broadcast guard (having read only as much of `e`
+      * as it took to tell) or their ids take the loop.
       */
-    def apply(e: DataFrame, rounds: Int): Option[DataFrame] = {
+    def apply(e: DataFrame, rounds: Int, tasks: Int): Option[DataFrame] = {
       val spark = e.sparkSession
       val limit = GraftSqlShim.broadcastThreshold(spark)
       if (limit < 0) return None
       val Array(uF, vF) = e.schema.fields
-      // u and v compared as Spark compares them: in their common type
+      // u and v compared as Spark compares them: in their common type. Ends
+      // of two types take the kernel only when both are integral, so that
+      // the cast to the wider one is exact and a node is one id on both
+      // ends (Long against Double, say, would merge ids above 2^53 that
+      // `distinct` keeps apart)
       val t = if (uF.dataType == vF.dataType) uF.dataType
-        else e.select(col("u")).union(e.select(col("v"))).schema.head.dataType
+        else if (integral(uF.dataType) && integral(vF.dataType))
+          e.select(col("u")).union(e.select(col("v"))).schema.head.dataType
+        else return None
       if (!UnsafeRowUtils.isBinaryStable(t)) return None
       // an endpoint as a one-field row whose bytes are equal iff Spark
       // groups the two ids together
@@ -372,148 +397,156 @@ object Graph {
         GraftSqlShim.normalizeFloats(
           if (f.dataType == t) ref else Cast(ref, t, Some(tz)))
       }
+      // the (u, v) row that `distinct` emits for an edge, in the ends' own
+      // types, from its two node rows: its bytes are what the guard adds up
+      val edgeRow = Seq(uF, vF).zipWithIndex.map { case (f, i) =>
+        val ref = BoundReference(i, t, nullable = true)
+        if (f.dataType == t) ref else Cast(ref, f.dataType, Some(tz))
+      }
       val ord = InterpretedOrdering.forSchema(Seq(t))
-      val fallback = e.schema.defaultSize.toLong + 8L
-      // the bytes of two parts of `e`, with their node sets merged while
-      // the sum is within the guard
-      def merge(a: (Long, Option[Nodes]), b: (Long, Option[Nodes])) = {
-        val bytes = a._1 + b._1
-        (bytes, for (x <- a._2; y <- b._2
-          if GraftSqlShim.withinBroadcastThreshold(bytes, limit))
-          yield union(x, y, ord))
-      }
-      val qe = e.queryExecution
-      val (bytes, nodes) = SQLExecution.withNewExecutionId(qe, Some("labelPropagation")) {
-        val parts = qe.toRdd.mapPartitions { it =>
-          val ends = key.map(k => UnsafeProjection.create(Seq(k)))
-          val seen = new java.util.HashSet[UnsafeRow]
-          var bytes = 0L
-          // a part past the guard puts the whole of `e` past it
-          while (GraftSqlShim.withinBroadcastThreshold(bytes, limit) && it.hasNext) {
-            val r = it.next()
-            bytes += GraftSqlShim.rowBytes(r, fallback)
-            ends.foreach { p =>
-              val k = p(r)
-              if (!seen.contains(k)) seen.add(k.copy())
-            }
-          }
-          Iterator.single((bytes,
-            if (!GraftSqlShim.withinBroadcastThreshold(bytes, limit)) None
-            else {
-              val sorted = seen.toArray(new Array[UnsafeRow](seen.size))
-              java.util.Arrays.sort(sorted, ord)
-              Some(sorted)
-            }))
-        }
-        // merged on the executors, at most ~MergeFanIn parts per merge, so
-        // the driver takes in a few node sets whatever the partition count
-        val n = parts.getNumPartitions
-        val depth =
-          if (n <= MergeFanIn) 1 else math.ceil(math.log(n) / math.log(MergeFanIn)).toInt
-        parts.treeAggregate((0L, Option(Array.empty[UnsafeRow])))(merge, merge, depth)
-      }
-      if (!GraftSqlShim.withinBroadcastThreshold(bytes, limit)) return None
-      val dict = nodes.get
-      val sc = spark.sparkContext
-      val dictB = sc.broadcast(dict)
-      // the first round's job builds and caches each partition's adjacency
-      val adj = qe.toRdd.mapPartitions { it =>
+      graft.BoundedScan(e, "labelPropagation", tasks) { it =>
         val ends = key.map(k => UnsafeProjection.create(Seq(k)))
-        val id = new java.util.HashMap[UnsafeRow, Integer](2 * dictB.value.length)
-        dictB.value.zipWithIndex.foreach { case (k, i) => id.put(k, i) }
+        val row = UnsafeProjection.create(edgeRow)
+        val pair = new JoinedRow
+        val ids = new java.util.HashMap[UnsafeRow, Integer]
+        val nodes = mutable.ArrayBuffer.empty[UnsafeRow]
+        def id(k: UnsafeRow): Int = {
+          val i = ids.get(k)
+          if (i != null) i
+          else { val c = k.copy(); ids.put(c, nodes.length); nodes += c; nodes.length - 1 }
+        }
+        val seen = new mutable.LongMap[Unit]
         val codes = Array.newBuilder[Long]
-        it.foreach { r =>
-          codes += (id.get(ends(0)(r)).toLong << 32) | id.get(ends(1)(r)).toLong
+        var bytes = 0L
+        // a part's distinct edges are some of `e`'s, so a part past the
+        // guard puts the whole of `e` past it
+        while (GraftSqlShim.withinBroadcastThreshold(bytes, limit) && it.hasNext) {
+          val r = it.next()
+          val (u, v) = (id(ends(0)(r)), id(ends(1)(r)))
+          val c = u.toLong << 32 | v
+          if (!seen.contains(c)) {
+            seen(c) = ()
+            codes += c
+            bytes += row(pair(nodes(u), nodes(v))).getSizeInBytes
+          }
         }
-        Iterator.single(Adjacency(codes.result()))
-      }.persist(StorageLevel.MEMORY_ONLY)
-      try {
-        var label = Array.range(0, dict.length)
-        for (_ <- 1 to rounds) {
-          val prev = sc.broadcast(label)
-          val won = try sc.runJob(adj, (it: Iterator[Adjacency]) => it.next().vote(prev.value))
-            finally prev.destroy()
-          label = label.clone()
-          for ((src, lab) <- won; i <- src.indices) label(src(i)) = lab(i)
-        }
-        val rows = dict.indices.map(i => new GenericInternalRow(
-          Array[Any](dict(i).get(0, t), dict(label(i)).get(0, t))): InternalRow)
+        if (!GraftSqlShim.withinBroadcastThreshold(bytes, limit)) None
+        else Some(Edges(nodes.toArray, codes.result(), bytes, ord))
+      } { (a, b) =>
+        for (x <- a; y <- b; m = x.union(y, ord, UnsafeProjection.create(edgeRow))
+          if GraftSqlShim.withinBroadcastThreshold(m.bytes, limit)) yield m
+      }.map { edges =>
+        val nodes = edges.nodes
+        val label = vote(edges.codes, nodes.length, rounds)
+        val rows = nodes.indices.map(i => new GenericInternalRow(
+          Array[Any](nodes(i).get(0, t), nodes(label(i)).get(0, t))): InternalRow)
         // the DataFrame loop's schema: u is nullable when either input end
         // is, label always (an aggregate's result)
         val out = GraftSqlShim.localFrame(spark, StructType(Seq(
           StructField(uF.name, t, uF.nullable || vF.nullable),
           StructField("label", t))), rows)
-        Some(if (vF.dataType == t) out
-          else out.select(col(uF.name), col("label").cast(vF.dataType)))
-      } finally {
-        adj.unpersist(blocking = false)
-        dictB.destroy()
+        if (vF.dataType == t) out
+        else out.select(col(uF.name), col("label").cast(vF.dataType))
       }
     }
 
-    /** Distinct one-field key rows in ascending order. */
-    private type Nodes = Array[UnsafeRow]
-
-    /** The most node sets one merge of the measuring pass takes in. */
-    private val MergeFanIn = 16
-
-    /** The sorted union of two sorted, distinct node arrays. */
-    private def union(a: Nodes, b: Nodes, ord: Ordering[InternalRow]): Nodes = {
-      val out = Array.newBuilder[UnsafeRow]
-      var i = 0; var j = 0
-      while (i < a.length || j < b.length) {
-        val c = if (i == a.length) 1 else if (j == b.length) -1
-          else ord.compare(a(i), b(j))
-        if (c <= 0) { out += a(i); i += 1; if (c == 0) j += 1 }
-        else { out += b(j); j += 1 }
-      }
-      out.result()
+    private def integral(t: DataType): Boolean = t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
     }
-  }
 
-  /** One partition's distinct edges over dense node ids, grouped by
-    * source: `src(i)` points at `nbr(off(i) until off(i + 1))`.
-    */
-  private final class Adjacency(val src: Array[Int], val off: Array[Int],
-      val nbr: Array[Int]) extends Serializable {
-
-    /** (`src`, each source's most frequent neighbour label under `label`,
-      * ties to the smallest label).
+    /** The label of each of `n` nodes after `rounds` synchronous votes over
+      * the distinct edges `codes` (`u << 32 | v`, ascending): a node with
+      * out-edges adopts its out-neighbours' most frequent label, ties to the
+      * smallest; the others keep their own.
       */
-    def vote(label: Array[Int]): (Array[Int], Array[Int]) = {
-      val votes = new Array[Int](label.length)
-      val won = new Array[Int](src.length)
-      for (i <- src.indices) {
-        var best = -1
-        var bestN = 0
-        var j = off(i)
-        while (j < off(i + 1)) {
-          val l = label(nbr(j))
-          val c = votes(l) + 1
-          votes(l) = c
-          if (c > bestN || (c == bestN && l < best)) { best = l; bestN = c }
-          j += 1
+    private def vote(codes: Array[Long], n: Int, rounds: Int): Array[Int] = {
+      // CSR: src(i)'s out-neighbours are nbr(off(i) until off(i + 1))
+      val off = codes.indices.filter(j =>
+        j == 0 || (codes(j) >>> 32) != (codes(j - 1) >>> 32)).toArray :+ codes.length
+      val src = off.init.map(j => (codes(j) >>> 32).toInt)
+      val nbr = codes.map(_.toInt)
+      val votes = new Array[Int](n)
+      var label = Array.range(0, n)
+      for (_ <- 1 to rounds) {
+        val next = label.clone()
+        for (i <- src.indices) {
+          var best = -1
+          var bestN = 0
+          var j = off(i)
+          while (j < off(i + 1)) {
+            val l = label(nbr(j))
+            val c = votes(l) + 1
+            votes(l) = c
+            if (c > bestN || (c == bestN && l < best)) { best = l; bestN = c }
+            j += 1
+          }
+          j = off(i)
+          while (j < off(i + 1)) { votes(label(nbr(j))) = 0; j += 1 }
+          next(src(i)) = best
         }
-        j = off(i)
-        while (j < off(i + 1)) { votes(label(nbr(j))) = 0; j += 1 }
-        won(i) = best
+        label = next
       }
-      (src, won)
+      label
     }
   }
 
-  private object Adjacency {
-    /** From edges coded as `src << 32 | dst`, in any order. */
-    def apply(codes: Array[Long]): Adjacency = {
-      java.util.Arrays.sort(codes)
-      val src = Array.newBuilder[Int]
-      val off = Array.newBuilder[Int]
-      for (j <- codes.indices if j == 0 || (codes(j) >>> 32) != (codes(j - 1) >>> 32)) {
-        src += (codes(j) >>> 32).toInt
-        off += j
+  /** Distinct edges: `nodes` are their distinct ends as one-field key
+    * rows, ascending in Spark's order, so a smaller index is a smaller id;
+    * `codes` are the edges as `u << 32 | v` over those indices, ascending;
+    * `bytes` are the edges' measured bytes as (u, v) rows.
+    */
+  private final class Edges(val nodes: Array[UnsafeRow], val codes: Array[Long],
+      val bytes: Long) extends Serializable {
+
+    /** The edges of both, each once. `edgeRow` builds an edge's (u, v) row
+      * from its two node rows.
+      */
+    def union(o: Edges, ord: Ordering[InternalRow], edgeRow: UnsafeProjection): Edges = {
+      if (codes.isEmpty) return o
+      if (o.codes.isEmpty) return this
+      // the sorted union of the nodes, and where each side's nodes went
+      val all = Array.newBuilder[UnsafeRow]
+      val (to, oTo) = (new Array[Int](nodes.length), new Array[Int](o.nodes.length))
+      var i = 0; var j = 0; var k = 0
+      while (i < nodes.length || j < o.nodes.length) {
+        val c = if (i == nodes.length) 1 else if (j == o.nodes.length) -1
+          else ord.compare(nodes(i), o.nodes(j))
+        if (c <= 0) { all += nodes(i); to(i) = k; i += 1 }
+        else all += o.nodes(j)
+        if (c >= 0) { oTo(j) = k; j += 1 }
+        k += 1
       }
-      off += codes.length
-      new Adjacency(src.result(), off.result(), codes.map(_.toInt))
+      // renumbering keeps each side's codes ascending: merge them, and take
+      // an edge both sides hold once, with its bytes
+      def renum(c: Long, m: Array[Int]) = m((c >>> 32).toInt).toLong << 32 | m(c.toInt)
+      val merged = Array.newBuilder[Long]
+      var bytes = this.bytes + o.bytes
+      i = 0; j = 0
+      while (i < codes.length || j < o.codes.length) {
+        val a = if (i < codes.length) renum(codes(i), to) else Long.MaxValue
+        val b = if (j < o.codes.length) renum(o.codes(j), oTo) else Long.MaxValue
+        if (a <= b) { merged += a; i += 1 } else { merged += b; j += 1 }
+        if (a == b) {
+          j += 1
+          bytes -= edgeRow(new JoinedRow(nodes((codes(i - 1) >>> 32).toInt),
+            nodes(codes(i - 1).toInt))).getSizeInBytes
+        }
+      }
+      new Edges(all.result(), merged.result(), bytes)
+    }
+  }
+
+  private object Edges {
+    /** From unsorted `nodes` and `codes` over their indices. */
+    def apply(nodes: Array[UnsafeRow], codes: Array[Long], bytes: Long,
+        ord: Ordering[InternalRow]): Edges = {
+      val order = nodes.indices.toArray.sortBy(i => nodes(i): InternalRow)(ord)
+      val rank = new Array[Int](nodes.length)
+      order.indices.foreach(k => rank(order(k)) = k)
+      val sorted = codes.map(c => rank((c >>> 32).toInt).toLong << 32 | rank(c.toInt))
+      java.util.Arrays.sort(sorted)
+      new Edges(order.map(nodes), sorted, bytes)
     }
   }
 

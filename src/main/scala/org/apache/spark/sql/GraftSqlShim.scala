@@ -81,19 +81,14 @@ object GraftSqlShim {
     val fallbackRowSize = schema.defaultSize.toLong + 8L
     rdd.mapPartitions { it =>
       var n = 0L; var b = 0L
-      it.foreach { r => n += 1; b += rowBytes(r, fallbackRowSize) }
+      it.foreach {
+        case u: catalyst.expressions.UnsafeRow => n += 1; b += u.getSizeInBytes
+        case _ => n += 1; b += fallbackRowSize
+      }
       Iterator((n, b))
     }.collect().foldLeft((0L, 0L)) { case ((n1, b1), (n2, b2)) =>
       (n1 + n2, b1 + b2)
     }
-  }
-
-  /** A row's measured bytes, as [[materializeCounted]] adds them up: an
-    * UnsafeRow's payload, `fallback` for any other row.
-    */
-  def rowBytes(r: InternalRow, fallback: Long): Long = r match {
-    case u: catalyst.expressions.UnsafeRow => u.getSizeInBytes
-    case _ => fallback
   }
 
   /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes

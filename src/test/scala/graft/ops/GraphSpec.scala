@@ -230,17 +230,22 @@ class GraphSpec extends SparkSpec {
     (jobs.get, bytes.get, queries.get)
   }
 
-  test("labelPropagation: one job per round") {
-    // the edges are shuffled by u once; each round is one job over their
-    // cached adjacency, with no query of its own
+  test("labelPropagation: a fixed number of jobs whatever the rounds") {
+    // within the guard the edges are read once, with no shuffle, and every
+    // round runs on the driver
     val und = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"))
     val edges = ((und ++ und.map(_.swap)) :+ ("e", "f")).toDF("u", "v")
     val (jobs2, bytes2, sql2) = observe(Graph.labelPropagation(edges, 2))
     val (jobs6, bytes6, sql6) = observe(Graph.labelPropagation(edges, 6))
-    assert(jobs6 - jobs2 === 4, s"rounds = 2 ran $jobs2 jobs, rounds = 6 ran $jobs6")
-    assert(bytes2 > 0 && bytes6 === bytes2,
-      s"rounds = 2 wrote $bytes2 shuffle bytes, rounds = 6 wrote $bytes6")
+    assert(jobs6 === jobs2, s"rounds = 2 ran $jobs2 jobs, rounds = 6 ran $jobs6")
     assert(sql6 === sql2, s"rounds = 2 ran $sql2 SQL executions, rounds = 6 ran $sql6")
+    assert(bytes2 === 0L && bytes6 === 0L,
+      s"rounds = 2 wrote $bytes2 shuffle bytes, rounds = 6 wrote $bytes6")
+    // the DataFrame loop shuffles in every round (its join and its vote)
+    val (_, loop2, _) = observe(noBroadcast(Graph.labelPropagation(edges, 2)))
+    val (_, loop6, _) = observe(noBroadcast(Graph.labelPropagation(edges, 6)))
+    assert(loop2 > 0 && loop6 > loop2,
+      s"the loop wrote $loop2 shuffle bytes in 2 rounds, $loop6 in 6")
   }
 
   /** Synchronous LPA on the driver: a node with out-edges adopts the most
@@ -289,6 +294,10 @@ class GraphSpec extends SparkSpec {
       noBroadcast(Graph.labelPropagation(edges, 4)).schema)
   }
 
+  /** Whether labelPropagation's result is the driver-state path's. */
+  private def onDriver(df: org.apache.spark.sql.DataFrame) = df.queryExecution.logical
+    .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
   test("labelPropagation: state on the driver exactly within the broadcast threshold") {
     // the guard reads the distinct edges' measured bytes as the planner
     // would size a frame pinned over them
@@ -300,16 +309,18 @@ class GraphSpec extends SparkSpec {
     val size = GraftSqlShim.plannedSizeInBytes(bytes)
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val caller = spark.conf.getAll.get(key)
-    def run(limit: Long) = {
+    def run(e: org.apache.spark.sql.DataFrame, limit: Long) = {
       spark.conf.set(key, limit)
-      try Graph.labelPropagation(edges, 3)
+      try Graph.labelPropagation(e, 3)
       finally caller.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
-    def onDriver(df: org.apache.spark.sql.DataFrame) = df.queryExecution.logical
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-    val (within, above) = (run(size), run(size - 1))
-    assert(onDriver(within) && !onDriver(above))
-    assert(labels[String](within) === labels[String](above))
+    // duplicates spread over input partitions are counted once
+    for (e <- Seq(edges, edges.union(edges).repartition(5))) {
+      val (within, above) = (run(e, size), run(e, size - 1))
+      assert(onDriver(within) && !onDriver(above))
+      assert(labels[String](within) === labels[String](above))
+      assert(labels[String](within) === lpaReference(skewed, 3))
+    }
   }
 
   test("labelPropagation: string ties go to the smallest label in Spark's UTF-8 order") {
@@ -360,6 +371,55 @@ class GraphSpec extends SparkSpec {
     val base = run(edges)
     assert(run(edges.repartition(7)) === base)
     assert(run(edges.orderBy(rand(7))) === base)
+  }
+
+  test("labelPropagation: a scan of more tasks than one merge takes is one job") {
+    // 48 input partitions with no exchange, read by 40 tasks: the parts are
+    // merged in two levels, inside the scan's one job
+    val edges = spark.range(0, 2000, 1, 48).select(
+      format_string("n%03d", (col("id") * 7919 % 300).cast("int")).as("u"),
+      format_string("n%03d", (pow(col("id") * 104729 % 1000 / 1000.0, 3) * 400)
+        .cast("int")).as("v"))
+    val pairs = edges.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val ref = lpaReference(pairs, 4)
+    var wide: org.apache.spark.sql.DataFrame = null
+    val (jobs, _, _) = observe { wide = Graph.labelPropagation(edges, 4, 0, 40) }
+    assert(onDriver(wide))
+    assert(jobs === 1, s"$jobs jobs")
+    assert(labels[String](wide) === ref)
+    assert(labels[String](Graph.labelPropagation(edges, 4)) === ref)
+    assert(labels[String](noBroadcast(Graph.labelPropagation(edges, 4))) === ref)
+  }
+
+  test("labelPropagation: no non-null edge gives an empty result with the loop's schema") {
+    val empty = Seq.empty[(String, String)].toDF("u", "v")
+    val nulls = Seq[(String, String)](("a", null), (null, "b"), (null, null)).toDF("u", "v")
+    for (e <- Seq(empty, nulls)) {
+      val kernel = Graph.labelPropagation(e, 3)
+      val loop = noBroadcast(Graph.labelPropagation(e, 3))
+      assert(onDriver(kernel))
+      assert(kernel.schema === loop.schema)
+      val ref = lpaReference(Seq.empty[(String, String)], 3)
+      assert(labels[String](kernel) === ref && labels[String](loop) === ref)
+    }
+  }
+
+  test("labelPropagation: Long and Double ends past 2^53 take the loop") {
+    // 2^53 and 2^53 + 1 are two ids to `distinct` on the Long end but one
+    // Double; here they are sources only, so every node's label is exact
+    val (big, next) = (1L << 53, (1L << 53) + 1)
+    val pairs = Seq((big, 1.0), (big, 2.0), (next, 2.0), (next, 3.0), (next, 3.0),
+      (1L, 2.0), (2L, 3.0), (3L, 1.0), (3L, 2.0))
+    val edges = pairs.toDF("u", "v")
+    def rows(df: org.apache.spark.sql.DataFrame) = (df.schema,
+      df.collect().map(r => (r.getDouble(0), r.getDouble(1))).toSeq.sorted)
+    val kernel = Graph.labelPropagation(edges, 3)
+    assert(!onDriver(kernel))
+    assert(rows(kernel) === rows(noBroadcast(Graph.labelPropagation(edges, 3))))
+    val ref = lpaReference(pairs.map { case (u, v) => (BigDecimal(u), BigDecimal(v)) }, 3)
+    assert(rows(kernel)._2 ===
+      ref.toSeq.map { case (u, l) => (u.toDouble, l.toDouble) }.sorted)
+    assert(rows(kernel)._2.count(_._1 == big.toDouble) === 2)
   }
 
   test("null endpoints: LPA and pageRank drop the edge, no null node appears") {
